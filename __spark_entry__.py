@@ -106,19 +106,20 @@ def schedule_round_df(
     same code crawl_round runs) over testdata-derived seeds, against a
     pre-seen set covering every 7th document.
 
-    ``tier`` picks the seen-filtering strategy select_round will take:
+    ``tier`` picks the seen tier select_round runs
+    (``CrawlConfig.seen_tier``):
     - "mirror" (the production default): the pre-seen keys live as the
       scheduler-layout mirror segment; selection is the co-partitioned
       zero-exchange anti-join + layout-satisfied WindowGroupLimit top-k.
-    - "fused": the pre-seen keys are folded into a bucket-partitioned
-      Bloom sketch delta routed by the frontier's (host_bucket, salt)
-      layout; selection runs the fused membership + guarded-prefix +
-      layout-kept-join pipeline (the low-read-volume tier).
-    - "exact": the classic fallback — chained co-partitioned anti-joins
-      against the url_hash-keyed seen table + two-phase window.
-    All three produce the identical schedule (the sketch has no false
-    negatives and its maybe-sliver is exactly anti-joined; the mirror is
-    exact by construction).
+    - "fused" (``seen_tier="sketch"``): the pre-seen keys are folded into a
+      bucket-partitioned Bloom sketch delta routed by the frontier's
+      (host_bucket, salt) layout; selection runs the fused membership +
+      guarded-prefix + layout-kept-join pipeline (the low-read-volume
+      tier).
+    Both produce the identical schedule (the sketch has no false negatives
+    and its maybe-sliver is exactly anti-joined; the mirror is exact by
+    construction). The pre-seen keys are seeded WITHOUT pruning the
+    frontier, so the tier's seen filter does real work.
 
     ``forget_mod`` (mirror tier only): after seeding the pre-seen state,
     TTL-expire every ``forget_mod``-th document's URL via
@@ -141,8 +142,7 @@ def schedule_round_df(
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     config = CrawlConfig(
         policy=HostPolicy(default_budget=budget),
-        use_bloom=tier == "fused",
-        seen_tier="mirror" if tier == "mirror" else "sketch",
+        seen_tier={"mirror": "mirror", "fused": "sketch"}[tier],
     )
     state = init_state(spark, _documents_as_seeds(spark, sf_dir), None, config)
 
@@ -195,24 +195,23 @@ def schedule_round_df(
 
 
 def crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship, VALUE-CHECKED on ALL THREE scheduler tiers: the full
-    engine path (canonicalize → hash → within-batch dedup → seen filtering →
-    politeness budget → skew-salted per-host top-k → deterministic global
-    rank) run through the exact-tier fallback, the FUSED bloom membership +
-    guarded-prefix + layout-kept-join pipeline, and the scheduler-layout
-    seen-MIRROR path (the production default), each tagged with its
-    ``path``. The tiers are provably schedule-identical (Bloom has no false
-    negatives; the maybe sliver is exactly anti-joined; the guarded prefix
-    is an exact superset; the mirror anti-join is exact by construction —
-    test_fused_schedule), so ONE path-independent SQL oracle checks all:
-    canonicalization closed form + seen exclusion (doc_id % 7) + per-host
-    row_number ≤ budget + global row_number, cross-joined with the three
-    path tags. url_hash is dropped from the projection (DuckDB lacks
+    """The flagship, VALUE-CHECKED on BOTH seen tiers: the full engine path
+    (canonicalize → hash → within-batch dedup → seen filtering → politeness
+    budget → skew-salted per-host top-k → deterministic global rank) run
+    through the FUSED bloom membership + guarded-prefix + layout-kept-join
+    pipeline (sketch tier) and the scheduler-layout seen-MIRROR path (the
+    production default), each tagged with its ``path``. The tiers are
+    provably schedule-identical (Bloom has no false negatives; the maybe
+    sliver is exactly anti-joined; the guarded prefix is an exact superset;
+    the mirror anti-join is exact by construction — test_fused_schedule),
+    so ONE path-independent SQL oracle checks both: canonicalization closed
+    form + seen exclusion (doc_id % 7) + per-host row_number ≤ budget +
+    global row_number, cross-joined with the two path tags. url_hash is dropped from the projection (DuckDB lacks
     xxhash64; hash values are pinned by tests/test_hashing.py); the seeds'
     unique priorities make the schedule independent of the hash tie-break
     (see _documents_as_seeds).
 
-    A FOURTH leg ('mirror_forget') value-checks TTL expiry end to end:
+    A THIRD leg ('mirror_forget') value-checks TTL expiry end to end:
     same mirror-tier state, then crawl.forget_urls expires every 14th
     document's URL from BOTH seen representations before selection, so
     exactly the even multiples of 7 become schedulable again. Its oracle
@@ -221,7 +220,7 @@ def crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-admitted rows (and the per-host budget ranks they shift) hash
     differently."""
     out = None
-    for tier in ("exact", "fused", "mirror"):
+    for tier in ("fused", "mirror"):
         leg = schedule_round_df(spark, sf_dir, tier=tier).drop("url_hash")
         leg = leg.withColumn("path", F.lit(tier))
         out = leg if out is None else out.unionByName(leg)
@@ -263,7 +262,7 @@ WITH seeds AS (
          min(doc_id) AS doc_id
   FROM seeds GROUP BY url_norm, host
 ), topk_a AS (
-  -- legs 1-3: doc_id % 7 = 0 docs are in the PRE-SEEN set (both variants
+  -- legs 1-2: doc_id % 7 = 0 docs are in the PRE-SEEN set (both variants
   -- collapse to the same canonical url, whose hash the seen table /
   -- sketch / mirror carries); politeness budget 8/host, no robots
   SELECT * FROM dedup WHERE doc_id % 7 <> 0
@@ -276,7 +275,7 @@ WITH seeds AS (
          CAST(0 AS INTEGER) AS attempt
   FROM topk_a
 ), topk_b AS (
-  -- leg 4 (mirror_forget): every 14th doc's URL was TTL-expired from the
+  -- leg 3 (mirror_forget): every 14th doc's URL was TTL-expired from the
   -- seen state before selection, so only the ODD multiples of 7 remain
   -- excluded; the re-admitted docs shift per-host budget ranks
   SELECT * FROM dedup WHERE doc_id % 7 <> 0 OR doc_id % 14 = 0
@@ -289,13 +288,13 @@ WITH seeds AS (
          CAST(0 AS INTEGER) AS attempt
   FROM topk_b
 )
--- the three scheduler tiers (exact fallback, fused sketch pipeline, and
--- the scheduler-layout seen mirror — the production default) must emit
--- the identical schedule; the engine runs each and tags its rows, plus
--- the TTL-expiry leg with its own closed-form exclusion
+-- the two seen tiers (fused sketch pipeline, and the scheduler-layout
+-- seen mirror — the production default) must emit the identical
+-- schedule; the engine runs each and tags its rows, plus the TTL-expiry
+-- leg with its own closed-form exclusion
 SELECT sched_a.*, tiers.path
 FROM sched_a CROSS JOIN (
-  SELECT 'exact' AS path UNION ALL SELECT 'fused' UNION ALL SELECT 'mirror'
+  SELECT 'fused' AS path UNION ALL SELECT 'mirror'
 ) tiers
 UNION ALL
 SELECT sched_b.*, 'mirror_forget' AS path FROM sched_b

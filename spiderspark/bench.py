@@ -1,9 +1,10 @@
 """Bench harness (SURVEY.md §6, §7.1 M6).
 
 Headline metric: frontier URLs scheduled+deduped per second — one full
-scheduling round (canonicalize → xxhash64 → within-batch dedup → bloom +
-exact anti-join dedup against a pre-seeded seen set → politeness budget →
-heavy-host salting → per-host top-k → deterministic global order) over a
+scheduling round of the engine itself (``crawl.init_state``: canonicalize →
+xxhash64 → within-batch dedup → heavy-host salting; ``crawl.select_round`` →
+``schedule.to_schedule``: seen filter against a pre-seeded seen set →
+politeness budget → per-host top-k → deterministic global order) over a
 synthetic frontier hash-expanded to ≥10^6 rows (TESTDATA is the shape
 anchor; no external data).
 
@@ -65,12 +66,24 @@ def frontier_urls_dist(spark, n: int, num_partitions: int):
 def run_headline(
     spark,
     n_frontier: int,
-    use_bloom: bool = True,
     warmup: bool = True,
     repeats: int = int(os.environ.get("SPIDERSPARK_BENCH_REPEATS", "10")),
     min_repeats: int = int(os.environ.get("SPIDERSPARK_BENCH_MIN_REPEATS", "5")),
 ) -> dict:
-    """Timed headline rounds; returns the FASTEST repeat (+ all walls).
+    """Timed headline rounds of the engine itself; returns the FASTEST
+    repeat (+ all walls).
+
+    One round is ``crawl.init_state`` over the raw frontier (canonicalize →
+    hash → within-batch dedup → static salt table → scheduler-layout pin),
+    then ``crawl.select_round`` → ``schedule.to_schedule`` (seen filter →
+    politeness budget → per-host top-k → deterministic global rank) — the
+    calls ``crawl_round`` makes, under the default ``CrawlConfig`` seen
+    tier. The pre-seen third of the frontier enters the seen set ONCE,
+    outside the clock, through ``crawl.mark_seen`` (a real round reads its
+    seen state from the snapshot store); each timed round then carries that
+    seen state over unpruned, so the round's seen filter does real work.
+    The salt table is a pure function of the raw frontier, so the carried
+    seen state routes exactly as the round's own frontier rows do.
 
     ``warmup`` first runs one identical small round so python workers
     (fork + numpy/pandas import, once per core) and JIT are paid before the
@@ -86,136 +99,91 @@ def run_headline(
     """
     import shutil
     import tempfile
+    from dataclasses import replace
 
     from pyspark.sql import functions as F
 
-    from .bench_round import one_round, one_round_fused, one_round_mirror
-    from .frontier import (
-        SketchRef,
-        host_bucket_col,
-        seeds_to_frontier,
-        write_sketch_delta,
-    )
+    from .crawl import CrawlConfig, _materialize, init_state, mark_seen, select_round
+    from .frontier import seeds_to_frontier
     from .politeness import HostPolicy
-    from .schedule import assign_salts_static, static_salt_table
-    from .state import SegmentedTable
-
-    # headline strategy (SPIDERSPARK_BENCH_STRATEGY): "mirror" (default —
-    # exact seen copy in the scheduler layout, zero-exchange anti-join, no
-    # Python crossing; round-5 measured winner: 32M/32 schedule stage 19-23 s
-    # fused → 5.4-9 s mirror at identical digest), "fused" (bloom membership
-    # + guarded-prefix pre-selection — the low-read-volume tier for
-    # seen ≫ memory), or "classic" (url_hash-layout exchange round).
-    # SPIDERSPARK_BENCH_CLASSIC=1 keeps its historical meaning.
-    strategy = os.environ.get("SPIDERSPARK_BENCH_STRATEGY", "mirror")
-    if os.environ.get("SPIDERSPARK_BENCH_CLASSIC"):
-        strategy = "classic"
-    if not use_bloom and strategy == "fused":
-        strategy = "classic"
-    use_fused = strategy == "fused"
+    from .schedule import to_schedule
 
     parallelism = spark.sparkContext.defaultParallelism
-    n_buckets = 32  # state/sketch bucket count — FIXED across parallelism
-    # levels: the layout is a property of the stored state, not the cluster
-    # realistic politeness: 1000 URLs/host/round — heavy hosts stay
-    # skew-split; the metric counts the whole deduped frontier either way
-    policy = HostPolicy(default_budget=1000.0)
-
-    # input synthesis happens OUTSIDE the clock: a real round reads its
-    # frontier, seen and sketch state from storage, so the timed pipeline
-    # starts at a parquet scan (this also matches the snapshot-store design)
-    in_dir = tempfile.mkdtemp(prefix="spiderbench-in-")
-    frontier_urls_dist(spark, n_frontier, parallelism).write.parquet(f"{in_dir}/raw")
-    seeds_to_frontier(
-        spark, frontier_urls_dist(spark, n_frontier // 3, parallelism), batch_id=0
-    ).select("url_hash", "url_norm", "host").withColumn(
-        "first_batch", F.lit(0).cast("long")
-    ).write.parquet(f"{in_dir}/seen")
-    raw = spark.read.parquet(f"{in_dir}/raw")
-    seen_full = spark.read.parquet(f"{in_dir}/seen")
-    # the url_hash-keyed seen table feeds only the fused/classic rounds —
-    # building it in mirror mode would pin n_frontier/3 checkpointed rows
-    # in executor memory for the whole bench without ever being read
-    seen_table = None
-    if strategy != "mirror":
-        seen_table = SegmentedTable.from_df(
-            seen_full.select("url_hash", "first_batch"), n_parts=n_buckets
-        )
-
-    # per-crawl static salt table — state, like the seen set (the schedule is
-    # invariant to the salting scheme, so any size estimate is correct)
-    salts = static_salt_table(
-        seeds_to_frontier(spark, raw, batch_id=0)
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("_n")),
+    config = CrawlConfig(
+        # realistic politeness: 1000 URLs/host/round — heavy hosts stay
+        # skew-split; the metric counts the whole deduped frontier either way
+        policy=HostPolicy(default_budget=1000.0),
+        # state/sketch bucket count — FIXED across parallelism levels: the
+        # layout is a property of the stored state, not the cluster
+        state_buckets=32,
         skew_threshold=20_000,
-    ).localCheckpoint(eager=True)
+    )
 
-    cap = max(4096, n_frontier // n_buckets)
-    sketch = None
-    seen_sched = None
-    if strategy == "mirror":
-        from .state import materialize_keyed
+    def seen_keys(n, out_dir):
+        seeds_to_frontier(
+            spark, frontier_urls_dist(spark, n, parallelism), batch_id=0
+        ).select("url_hash", "url_norm", "host").write.parquet(out_dir)
+        return spark.read.parquet(out_dir)
 
-        # the seen set's SCHEDULER-LAYOUT mirror — state, prepared outside
-        # the clock like the url_hash-keyed seen table and the sketch
-        seen_sched = materialize_keyed(
-            assign_salts_static(
-                seen_full.withColumn(
-                    "host_bucket", host_bucket_col(F.col("host"))
-                ),
-                salts,
-            ).select("host_bucket", "salt", "url_hash"),
-            n_parts=n_buckets, key=("host_bucket", "salt"),
-            sort=("host_bucket", "salt", "url_hash"),
-        )
-    elif use_bloom and use_fused:
-        sketch = SketchRef.create(
-            n_buckets, cap, 0.01, routing=("host_bucket", "salt")
-        )
-        seen_hb = assign_salts_static(
-            seen_full.withColumn("host_bucket", host_bucket_col(F.col("host"))),
-            salts,
-        ).repartition(n_buckets, "host_bucket", "salt")
-        sketch = write_sketch_delta(
-            seen_hb, f"{in_dir}/sketch", sketch, assume_keyed_layout=True
-        )
-    elif use_bloom:
-        sketch = SketchRef.create(n_buckets, cap, 0.01)
-        sketch = write_sketch_delta(
-            seen_table.segments[0], f"{in_dir}/sketch", sketch,
-            assume_keyed_layout=True,
-        )
+    def prepare(n, in_dir):
+        """Raw frontier + the seen state, built outside the clock."""
+        frontier_urls_dist(spark, n, parallelism).write.parquet(f"{in_dir}/raw")
+        raw = spark.read.parquet(f"{in_dir}/raw")
+        keys = seen_keys(n // 3, f"{in_dir}/seen")
+        base = init_state(spark, raw, None, config)
+        t0 = time.perf_counter()
+        seeded = mark_seen(spark, base, keys, config)
+        return raw, seeded, time.perf_counter() - t0
 
-    def round_fn(input_df, root):
-        if strategy == "mirror":
-            return one_round_mirror(
-                spark, input_df, seen_sched, policy, n_buckets, root, salts
-            )
-        if use_fused:
-            return one_round_fused(
-                spark, input_df, seen_table, sketch, policy, n_buckets, root, salts
-            )
-        return one_round(
-            spark, input_df, seen_table, sketch, policy, n_buckets, root
+    def one_round(raw, seeded) -> dict:
+        t0 = time.perf_counter()
+        state = init_state(spark, raw, None, config)
+        t1 = time.perf_counter()
+        state = replace(
+            state, seen=seeded.seen, seen_sched=seeded.seen_sched,
+            sketch=seeded.sketch,
         )
+        t2 = time.perf_counter()
+        selected = select_round(spark, state, config)
+        t3 = time.perf_counter()
+        schedule = to_schedule(selected, batch_id=1, materialize=_materialize)
+        t4 = time.perf_counter()
+        # outside the clock: the determinism digest of the pinned schedule
+        row = schedule.agg(
+            F.count(F.lit(1)).alias("n"),
+            # xor of hash(rank:url_hash): order-insensitive, overflow-free,
+            # and sensitive to any change in the rank→url assignment
+            F.expr("bit_xor(xxhash64(concat(rank, ':', url_hash)))").alias("d"),
+        ).collect()[0]
+        shutil.rmtree(state.workdir, ignore_errors=True)
+        return {
+            "wall_s": round((t1 - t0) + (t4 - t2), 3),
+            "init_state_s": round(t1 - t0, 3),
+            "select_round_s": round(t3 - t2, 3),
+            "to_schedule_s": round(t4 - t3, 3),
+            "n_scheduled": row["n"],
+            "schedule_digest": int(row["d"] or 0),
+        }
 
     t_w0 = time.time()
     if warmup:
-        small = frontier_urls_dist(spark, max(20_000, n_frontier // 50), parallelism)
         small_dir = tempfile.mkdtemp(prefix="spiderbench-warm-")
-        small.write.parquet(f"{small_dir}/raw")
-        round_fn(spark.read.parquet(f"{small_dir}/raw"), small_dir)
+        one_round(*prepare(max(20_000, n_frontier // 50), small_dir)[:2])
         shutil.rmtree(small_dir, ignore_errors=True)
     t_warm = time.time() - t_w0
 
+    # input synthesis happens OUTSIDE the clock: a real round reads its
+    # frontier and seen state from storage, so the timed pipeline starts at
+    # a parquet scan (this also matches the snapshot-store design)
+    in_dir = tempfile.mkdtemp(prefix="spiderbench-in-")
+    raw, seeded, t_mark_seen = prepare(n_frontier, in_dir)
+
     from .metrics import ShuffleWindow
 
-    delta_root = tempfile.mkdtemp(prefix="spiderbench-delta-")
     rounds = []
     for i in range(max(1, repeats)):
         w = ShuffleWindow(spark).start()
-        rounds.append(round_fn(raw, delta_root))
+        rounds.append(one_round(raw, seeded))
         shuf = w.stop()  # per-round shuffle bytes: the scaling-accounting
         if shuf:  # quantity (identical at every parallelism by layout)
             rounds[-1]["shuffle_write_mb"] = round(
@@ -230,13 +198,15 @@ def run_headline(
     best = min(rounds, key=lambda r: r["wall_s"])
     assert len({r["schedule_digest"] for r in rounds}) == 1, "nondeterministic schedule!"
 
-    shutil.rmtree(delta_root, ignore_errors=True)
+    shutil.rmtree(seeded.workdir, ignore_errors=True)
     shutil.rmtree(in_dir, ignore_errors=True)
     return {
         "n_frontier": n_frontier,
+        "seen_tier": config.seen_tier,
         **best,
         "all_walls_s": [r["wall_s"] for r in rounds],
         "rate_urls_per_sec": round(n_frontier / best["wall_s"], 1),
+        "mark_seen_s": round(t_mark_seen, 3),  # outside the clock
         "warmup_s": round(t_warm, 3),
         "parallelism": parallelism,
     }
@@ -649,10 +619,10 @@ the same scheduling+dedup job, same deterministic input
 ({res['n_frontier']:,} frontier URLs, Zipf hosts, canonicalization noise,
 1/3 pre-seen), at two local parallelism levels in fresh JVMs.
 
-| cores | frontier URLs/s | wall s | canon+dedup s | schedule s | sketch delta s |
+| cores | frontier URLs/s | wall s | init_state s | select_round s | to_schedule s |
 | --- | --- | --- | --- | --- | --- |
-| {res['cores_lo']}  | {r_lo['value']:,} | {r_lo['headline_wall_sec']} | {r_lo['detail'].get('canon_dedup_s', '-')} | {r_lo['detail'].get('schedule_s', '-')} | {r_lo['detail'].get('sketch_delta_s', '-')} |
-| {res['cores_hi']} | {r_hi['value']:,} | {r_hi['headline_wall_sec']} | {r_hi['detail'].get('canon_dedup_s', '-')} | {r_hi['detail'].get('schedule_s', '-')} | {r_hi['detail'].get('sketch_delta_s', '-')} |
+| {res['cores_lo']}  | {r_lo['value']:,} | {r_lo['headline_wall_sec']} | {r_lo['detail'].get('init_state_s', '-')} | {r_lo['detail'].get('select_round_s', '-')} | {r_lo['detail'].get('to_schedule_s', '-')} |
+| {res['cores_hi']} | {r_hi['value']:,} | {r_hi['headline_wall_sec']} | {r_hi['detail'].get('init_state_s', '-')} | {r_hi['detail'].get('select_round_s', '-')} | {r_hi['detail'].get('to_schedule_s', '-')} |
 
 **Scaling efficiency ({res['cores_lo']} → {res['cores_hi']} cores, 4×): {res['value']}** (criterion ≥ 0.8).
 Host steal fraction during the arms (co-tenant theft, /proc/stat):

@@ -17,18 +17,20 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
   — schedule removal, delta resolve, seen anti-probes — plans as a
   co-partitioned SMJ or broadcast probe with ZERO exchange and ZERO sort on
   the stored side. Network per round is O(delta + schedule), not O(state).
-- Scheduling itself never exchanges the candidates either: ONE partition-
-  local pass (frontier.membership_prefix_topk) fuses sketch membership with
-  the exact per-host budget pre-selection; only the O(hosts × budget) kept
-  set reaches the final window. The classic two-phase window remains as the
-  exact-tier-only fallback (no sketch yet / use_bloom=False).
-- The URL-seen sketch is distributed (frontier.SketchRef): membership is a
-  partition-local side-read of only the task's bucket slice (bucket routing
-  == the frontier partitioning, so salting also evens slice sizes under
-  Zipf skew); updates are bucket-partitioned delta directories; compaction
-  is a distributed groupBy(bucket) merge. Bloom (default) or cuckoo
-  (deletion support) tiers behind the same rows. Nothing sketch-shaped ever
-  lives on the driver or in a broadcast.
+- Scheduling never exchanges the candidates either, and there is exactly
+  one scheduling path per seen tier (``CrawlConfig.seen_tier``): "mirror"
+  anti-joins each stored segment against an exact copy of the seen set kept
+  in the same layout, "sketch" runs ONE partition-local pass
+  (frontier.membership_prefix_topk) that fuses sketch membership with the
+  exact per-host budget pre-selection. Either way only the O(hosts ×
+  budget) kept set reaches the final window.
+- The URL-seen sketch (sketch tier only) is distributed (frontier.SketchRef):
+  membership is a partition-local side-read of only the task's bucket slice
+  (bucket routing == the frontier partitioning, so salting also evens slice
+  sizes under Zipf skew); updates are bucket-partitioned delta directories;
+  compaction is a distributed groupBy(bucket) merge. Bloom (default) or
+  cuckoo (deletion support) filters behind the same rows. Nothing
+  sketch-shaped ever lives on the driver or in a broadcast.
 - Iterative-loop hygiene: each round's state is re-materialized through
   ``materialize_keyed`` (plans stay shallow; the checkpoint write is
   partition-local — no network) or, with ``durable_state=True``, through
@@ -41,15 +43,15 @@ from __future__ import annotations
 import os
 import tempfile
 from dataclasses import dataclass, field, replace
+from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from .canon import extract_outlinks_series, extract_text_series
 from .frontier import (
     SketchRef,
     compact_sketch,
-    dedup_against_seen,
     dedup_within_batch,
     host_bucket_col,
     membership_prefix_topk,
@@ -68,7 +70,7 @@ from .politeness import (
 )
 from .schedule import (
     assign_salts_static,
-    per_host_topk,
+    order_cols,
     per_host_topk_final,
     static_salt_table,
     to_schedule,
@@ -87,6 +89,7 @@ from .state import (
 # identity and every per-round window/join over the stored layout plans
 # exchange-free (see docs/PLANS.md "Scheduler layout")
 FRONTIER_KEY = ("host_bucket", "salt")
+SEEN_TIERS = ("mirror", "sketch")
 
 
 @dataclass(frozen=True)
@@ -101,8 +104,8 @@ class CrawlConfig:
     bloom_capacity_per_bucket: int = 1 << 16
     bloom_fpp: float = 0.01
     skew_threshold: int = 50_000
-    use_bloom: bool = True
-    # how per-round seen filtering runs over the stored frontier segments:
+    # how per-round seen filtering runs over the stored frontier segments —
+    # one scheduling path per value (select_round):
     # - "mirror" (default; round-5 measured winner): the seen set keeps an
     #   EXACT second copy in the scheduler layout ((host_bucket, salt)
     #   partitioned, sorted on (..., url_hash)), so the filter is one
@@ -110,13 +113,15 @@ class CrawlConfig:
     #   entirely JVM-side (the fused bloom pass's dominant cost was the
     #   JVM→Python Arrow IPC crossing of every candidate, measured 85% of
     #   the stage; 32M/32: schedule stage 19-23 s → 5.4-9 s, same digest).
+    #   No sketch exists on this tier.
     # - "sketch": the bloom/cuckoo membership + guarded-prefix pre-selection
     #   (frontier.membership_prefix_topk) — reads ~1.2 bits per seen key
     #   instead of the mirror's 16 key bytes: the right tier when the seen
     #   set dwarfs what per-task sequential reads should pay per round.
+    #   No mirror exists on this tier.
     # Both tiers produce byte-identical schedules (test_fused_schedule).
     seen_tier: str = "mirror"
-    # approximate-tier filter family: "bloom" (default) or "cuckoo" (adds
+    # sketch-tier filter family: "bloom" (default) or "cuckoo" (adds
     # deletion for re-crawl-after-TTL deployments; see sketch.CuckooFilter)
     sketch_kind: str = "bloom"
     max_depth: int = 64
@@ -126,15 +131,6 @@ class CrawlConfig:
     max_attempts: int = 2
     # LSM knobs: segments/delta-dirs allowed before the amortized compaction
     max_segments: int = 4
-    # how the budget-preselected kept keys rejoin the big frontier segment:
-    # "layout" (default — kept keys repartition on the frontier routing and
-    # join on (host_bucket, salt, url_hash): layout-satisfied, the big side
-    # moves zero bytes, nothing is ever driver-sized, one fewer driver
-    # round-trip than a broadcast build; ALSO measured fastest at sandbox
-    # scale: 219k vs 200k URLs/s best-of interleaved at 2M/32 cores) or
-    # "broadcast" (kept set must fit a broadcast; kept for A/B). See
-    # frontier.membership_prefix_topk.
-    kept_join: str = "layout"
     # durable_state=True routes every state-segment materialization through
     # bucketed parquet tables (state.materialize_keyed_durable) instead of
     # localCheckpoint executor blocks: the layout contract survives the disk
@@ -147,12 +143,20 @@ class CrawlConfig:
     # only durable on a single-node sandbox.
     durable_dir: str | None = None
 
+    def __post_init__(self):
+        if self.seen_tier not in SEEN_TIERS:
+            raise ValueError(
+                f"seen_tier must be one of {SEEN_TIERS}, got {self.seen_tier!r}"
+            )
+
 
 @dataclass
 class CrawlState:
     frontier: SegmentedTable
     seen: SegmentedTable
     host_state: DataFrame
+    # the distributed URL-seen sketch: set on the sketch tier, None on the
+    # mirror tier
     sketch: SketchRef | None
     batch_id: int
     workdir: str
@@ -164,10 +168,9 @@ class CrawlState:
     # balance, never correctness. Re-salting requires a sketch rebuild.
     salts: DataFrame | None = None
     snapshot_id: int | None = None
-    # the seen set's scheduler-layout mirror (seen_tier="mirror"):
-    # key = FRONTIER_KEY, rows (host_bucket, salt, url_hash) — None when the
-    # tier is off or the snapshot predates it (select_round then falls back
-    # to the sketch / classic branches)
+    # the seen set's scheduler-layout mirror: set on the mirror tier, None
+    # on the sketch tier; key = FRONTIER_KEY, rows (host_bucket, salt,
+    # url_hash)
     seen_sched: SegmentedTable | None = None
 
 
@@ -217,15 +220,19 @@ def init_state(
     config: CrawlConfig,
 ) -> CrawlState:
     n = config.state_buckets
-    host_state = _materialize(
-        init_host_state(robots, config.policy)
+    host_state = (
+        _materialize(init_host_state(robots, config.policy))
         if robots is not None
         else spark.createDataFrame([], HOST_STATE)
     )
     # robots-disallowed URLs are dropped at INSERTION time — they can never
     # be scheduled (robots is static per crawl), so keeping them would grow
-    # frontier state unboundedly with re-gated dead rows
-    rows = insertion_gate(seeds_to_frontier(spark, seeds, batch_id=0), host_state)
+    # frontier state unboundedly with re-gated dead rows. Pinned: the salt
+    # table and the segment below both read these rows, and canonicalizing
+    # the input twice cost more than the pin (100k URLs on 4 cores: ~0.9 s)
+    rows = _materialize(
+        insertion_gate(seeds_to_frontier(spark, seeds, batch_id=0), host_state)
+    )
     # static salt table from the seed host distribution (any size estimate
     # is schedule-invariant; late-heavy hosts cost balance only)
     salts = _materialize(
@@ -241,10 +248,17 @@ def init_state(
     else:
         workdir = tempfile.mkdtemp(prefix="spiderspark-state-")
     frontier0 = SegmentedTable.empty(n, key=FRONTIER_KEY)
+    # ONE exchange: route into the stored layout first, then dedup there —
+    # (host_bucket, salt) are functions of the url like url_hash, so the
+    # grouping plans exchange-free on the layout and the pin stays local
     seg0 = _keyed_mat(config, workdir)(
-        dedup_within_batch(_frontier_cols(rows)),
+        dedup_within_batch(
+            _frontier_cols(rows).repartition(n, *FRONTIER_KEY),
+            extra_keys=FRONTIER_KEY,
+        ),
         n_parts=n,
         key=FRONTIER_KEY,
+        repartition=False,
         sort=frontier0.sort_cols,
     )
     frontier = frontier0.append(seg0)
@@ -253,7 +267,7 @@ def init_state(
             n, config.bloom_capacity_per_bucket, config.bloom_fpp,
             routing=FRONTIER_KEY, kind=config.sketch_kind,
         )
-        if config.use_bloom
+        if config.seen_tier == "sketch"
         else None
     )
     caps = host_state.agg(F.max("capacity").alias("m")).collect()
@@ -303,7 +317,9 @@ def select_round(
     """Steps 1-4 of a crawl round: dedup + politeness + per-host budget
     selection over the current state — the scheduling core, factored out so
     the driver contract (``__spark_entry__.schedule_round_df``) value-checks
-    the EXACT code path ``crawl_round`` runs, fused tier included.
+    the EXACT code path ``crawl_round`` runs. One branch per
+    ``config.seen_tier``; both start by gating each stored segment in place
+    (politeness budget + robots, broadcast joins — layout preserved).
 
     Mirror tier (default): each gated segment anti-joins the seen set's
     scheduler-layout mirror — co-partitioned SMJ, zero exchange and zero
@@ -312,93 +328,66 @@ def select_round(
     k_cap literal keeping the WindowGroupLimit bounded sort; only the
     O(hosts × budget) phase-1 winners reach the final window.
 
-    Sketch tier: politeness/robots gate each stored segment in place
-    (broadcast joins — layout preserved), then ONE partition-local pass
-    fuses bloom membership with the exact guarded-prefix budget
-    pre-selection (frontier.membership_prefix_topk) — the big frontier
-    segments are never exchanged AND never fully ranked; only the kept set
-    moves: the maybe-seen sliver to the seen layout for the exact
-    anti-join, the survivors into the final per-host window. The tier of
-    choice when the seen set dwarfs per-round sequential-read budgets
-    (~1.2 bits vs 16 bytes read per seen key)."""
-    if config.seen_tier == "mirror" and state.seen_sched is not None:
-        from pyspark.sql import Window
-
-        from .schedule import order_cols
-
-        kept_parts = []
-        for seg in state.frontier.segments:
-            budgeted = join_host_state(seg, state.host_state, config.policy)
-            gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
-            unseen = state.seen_sched.anti_probe(gated)
-            w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(
-                *order_cols()
+    Sketch tier: ONE partition-local pass per segment fuses sketch
+    membership with the exact guarded-prefix budget pre-selection
+    (frontier.membership_prefix_topk) — the big frontier segments are never
+    exchanged AND never fully ranked; only the kept set moves: the
+    maybe-seen sliver to the seen layout for the exact anti-join, the
+    survivors into the final per-host window. The sketch holds every seen
+    key by construction, so an empty sketch (no delta yet) is exact too:
+    every row is definitely unseen. The tier of choice when the seen set
+    dwarfs per-round sequential-read budgets (~1.2 bits vs 16 bytes read
+    per seen key)."""
+    if not state.frontier.segments:
+        return spark.createDataFrame([], FRONTIER).withColumn(
+            "host_budget", F.lit(0).cast("long")
+        )
+    gated = [
+        (seg, robots_gate(
+            join_host_state(seg, state.host_state, config.policy)
+        ).filter(F.col("host_budget") > 0))
+        for seg in state.frontier.segments
+    ]
+    if config.seen_tier == "mirror":
+        w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(
+            *order_cols()
+        )
+        kept = reduce(DataFrame.unionByName, [
+            state.seen_sched.anti_probe(g)
+            .withColumn("_r1", F.row_number().over(w1))
+            .filter(
+                (F.col("_r1") <= F.lit(int(state.k_cap)))
+                & (F.col("_r1") <= F.col("host_budget"))
             )
-            kept_parts.append(
-                unseen.withColumn("_r1", F.row_number().over(w1))
-                .filter(
-                    (F.col("_r1") <= F.lit(int(state.k_cap)))
-                    & (F.col("_r1") <= F.col("host_budget"))
-                )
-                .drop("_r1")
-            )
-        if not kept_parts:
-            return spark.createDataFrame([], FRONTIER).withColumn(
-                "host_budget", F.lit(0).cast("long")
-            )
-        kept = kept_parts[0]
-        for p in kept_parts[1:]:
-            kept = kept.unionByName(p)
-        return per_host_topk_final(kept, "host_budget", k_cap=state.k_cap)
-    use_fused = state.sketch is not None and len(state.sketch.paths) > 0
-    if use_fused:
+            .drop("_r1")
+            for _, g in gated
+        ])
+    else:
         survivor_parts = []
-        for seg in state.frontier.segments:
-            budgeted = join_host_state(seg, state.host_state, config.policy)
-            gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
+        for seg, g in gated:
             # join_back=seg: the thin pass reads the gated view once; the
             # kept keys rejoin the CHECKPOINTED segment, so the big side
             # never pays a second budget+robots pass — those columns are
             # re-derived on the tiny kept set below
-            kept = _materialize(
-                membership_prefix_topk(
-                    gated, state.sketch, join_back=seg,
-                    join_strategy=config.kept_join,
-                )
+            pre = _materialize(
+                membership_prefix_topk(g, state.sketch, join_back=seg)
             )
-            definite = kept.filter(~F.col("_maybe")).drop("_maybe")
+            definite = pre.filter(~F.col("_maybe")).drop("_maybe")
             sliver = (
-                kept.filter(F.col("_maybe"))
+                pre.filter(F.col("_maybe"))
                 .drop("_maybe")
                 .repartition(state.seen.n_parts, "url_hash")
             )
             survivor_parts.append(
                 definite.unionByName(state.seen.anti_probe(sliver))
             )
-        survivors = survivor_parts[0]
-        for p in survivor_parts[1:]:
-            survivors = survivors.unionByName(p)
-        survivors = robots_gate(
-            join_host_state(survivors, state.host_state, config.policy)
-        ).filter(F.col("host_budget") > 0)
-        selected = per_host_topk_final(survivors, "host_budget", k_cap=state.k_cap)
-    else:
-        # exact-tier-only fallback (use_bloom=False, or round 1 before any
-        # delta exists): candidates pay one O(candidates) exchange to the
-        # seen layout for the anti-join, then the classic two-phase window
-        handles: list[DataFrame] = []
-        candidates = _materialize(
-            dedup_against_seen(
-                spark, state.frontier, state.seen, state.sketch,
-                persist_handles=handles,
+        kept = robots_gate(
+            join_host_state(
+                reduce(DataFrame.unionByName, survivor_parts),
+                state.host_state, config.policy,
             )
-        )
-        for h in handles:
-            h.unpersist()
-        budgeted = join_host_state(candidates, state.host_state, config.policy)
-        gated = robots_gate(budgeted).filter(F.col("host_budget") > 0)
-        selected = per_host_topk(gated, "host_budget", k_cap=state.k_cap)
-    return selected
+        ).filter(F.col("host_budget") > 0)
+    return per_host_topk_final(kept, "host_budget", k_cap=state.k_cap)
 
 
 def crawl_round(
@@ -543,12 +532,13 @@ def crawl_round(
     )
     delta_plan = insertion_gate(delta, state.host_state)  # never insert dead rows
 
-    # 9. sketch'/mirror' inputs: this round's newly-seen keys routed by
-    #    their TRUE (host_bucket, salt) — the same routing a future frontier
-    #    row for the url will carry into its membership task / its mirror
-    #    anti-join partition. Prepared here so the mirror segment pin and
-    #    the sketch delta write (both independent of the frontier delta) can
-    #    run CONCURRENTLY with the round's dominant job below.
+    # 9. mirror' or sketch' input (whichever the tier keeps): this round's
+    #    newly-seen keys routed by their TRUE (host_bucket, salt) — the same
+    #    routing a future frontier row for the url will carry into its
+    #    mirror anti-join partition / its membership task. Prepared here so
+    #    the mirror segment pin or the sketch delta write (independent of
+    #    the frontier delta) runs CONCURRENTLY with the round's dominant job
+    #    below.
     sketch = state.sketch
     seen_sched = state.seen_sched
     # skip them when nothing became seen this round (drained frontier / all
@@ -557,15 +547,13 @@ def crawl_round(
     # side-read. newly_seen_seg is checkpointed, so the emptiness probe is a
     # cheap partition-local scan.
     have_newly_seen = not newly_seen_seg.isEmpty()
-    newly_routed = None
-    if (sketch is not None or seen_sched is not None) and have_newly_seen:
-        newly_routed = assign_salts_static(
-            fetched.filter(done_cond).select(
-                "url_hash", "url_norm", "host",
-                host_bucket_col(F.col("host")).alias("host_bucket"),
-            ),
-            state.salts,
-        ).repartition(n, *FRONTIER_KEY)
+    newly_routed = assign_salts_static(
+        fetched.filter(done_cond).select(
+            "url_hash", "url_norm", "host",
+            host_bucket_col(F.col("host")).alias("host_bucket"),
+        ),
+        state.salts,
+    ).repartition(n, *FRONTIER_KEY)
 
     thunks = [
         lambda: mat(
@@ -710,9 +698,9 @@ def mark_seen(
     ``keys_df``: url_hash, url_norm, host. Semantics are EXACTLY the
     crawl_round newly-seen path: already-seen keys are dropped (segments
     stay disjoint), the remainder is appended to the exact table, routed
-    into the scheduler-layout mirror, folded into the sketch delta (bloom
-    AND cuckoo — insertion is additive), and matching frontier rows are
-    PRUNED through the same co-partitioned anti-joins as schedule removal,
+    into the tier's own representation — the scheduler-layout mirror, or a
+    sketch delta (bloom AND cuckoo — insertion is additive) — and matching
+    frontier rows are PRUNED through the same co-partitioned anti-joins as schedule removal,
     so state never carries rows that can no longer schedule.
 
     Cost/scale: O(keys) exchange to route the batch; stored segments are
@@ -818,8 +806,9 @@ def forget_urls(
     config: CrawlConfig,
 ) -> CrawlState:
     """TTL expiry, coherent across EVERY seen representation the state
-    carries: the exact url_hash table, the scheduler-layout mirror
-    (``seen_tier="mirror"``, the default), and the cuckoo sketch. After
+    carries: the exact url_hash table plus the tier's own representation —
+    the scheduler-layout mirror (``seen_tier="mirror"``, the default) or
+    the cuckoo sketch (``seen_tier="sketch"``). After
     this, re-injecting the urls into the frontier (caller's move — fresh
     priority/depth via ``seeds_to_frontier`` + ``frontier.append``, see
     tests/test_cuckoo_delete.py) makes the same crawl loop schedule them
@@ -830,9 +819,9 @@ def forget_urls(
     ``keys_df``: url_hash, url_norm, host (the shape a schedule row
     carries). Only urls KNOWN to have entered the seen set may be passed
     (the cuckoo deletion precondition — sketch.CuckooFilter.delete). A
-    bloom sketch cannot unset bits, so a state carrying one refuses
-    loudly: TTL deployments configure ``CrawlConfig(sketch_kind="cuckoo")``
-    (or ``use_bloom=False`` with the mirror tier).
+    bloom sketch cannot unset bits, so a sketch-tier state carrying one
+    refuses loudly: TTL deployments on that tier configure
+    ``CrawlConfig(sketch_kind="cuckoo")``.
 
     Cost/scale: O(keys) exchange to route the key batch; every stored
     segment is rewritten through a co-partitioned LEFT-ANTI join — zero
@@ -846,7 +835,7 @@ def forget_urls(
         raise ValueError(
             "forget_urls: the state carries a bloom sketch, which cannot "
             "unset bits — configure CrawlConfig(sketch_kind='cuckoo') for "
-            "re-crawl-after-TTL deployments (or use_bloom=False)"
+            "re-crawl-after-TTL deployments"
         )
     mat = _keyed_mat(config, state.workdir)
     n = state.seen.n_parts
@@ -866,14 +855,12 @@ def forget_urls(
         n_parts=n, key=state.seen.key,
     )
 
-    routed = None
-    if state.seen_sched is not None or state.sketch is not None:
-        routed = assign_salts_static(
-            keys_df.select("url_hash", "url_norm", "host").withColumn(
-                "host_bucket", host_bucket_col(F.col("host"))
-            ),
-            state.salts,
-        )
+    routed = assign_salts_static(
+        keys_df.select("url_hash", "url_norm", "host").withColumn(
+            "host_bucket", host_bucket_col(F.col("host"))
+        ),
+        state.salts,
+    )
 
     seen_sched = state.seen_sched
     if seen_sched is not None:
@@ -934,16 +921,26 @@ def commit_state(
 
 
 def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> CrawlState:
-    """§3.3 exact resume: validate lineage, point the sketch at the stored
-    bucket-partitioned rows (NO rescan of seen, NO driver rebuild), continue
-    at batch N+1."""
+    """§3.3 exact resume: validate lineage, point the tier's seen
+    representation at its stored table — the mirror segments, or the
+    sketch's bucket-partitioned rows (NO rescan of seen, NO driver rebuild)
+    — and continue at batch N+1."""
     snapshot_id = store.head()
     assert snapshot_id is not None, "nothing to resume from"
     assert store.validate(snapshot_id, spark), "lineage validation failed"
     m = store.manifest(snapshot_id)
     n = config.state_buckets
+    # the tier reads exactly one seen representation; a snapshot without it
+    # (written under the other tier) cannot be scheduled by this config
+    need = "seen_sketch" if config.seen_tier == "sketch" else "seen_sched"
+    if need not in m["tables"]:
+        raise ValueError(
+            f"snapshot {snapshot_id} has no {need!r} table, which "
+            f"seen_tier={config.seen_tier!r} reads; resume with the tier "
+            "the snapshot was written under"
+        )
     sketch = None
-    if config.use_bloom and "seen_sketch" in m["tables"]:
+    if config.seen_tier == "sketch":
         path = store.table_path(snapshot_id, "seen_sketch")
         sk_df = spark.read.parquet(path)
         # pre-schema snapshots (before routing/kind rode the rows) fall back
@@ -993,12 +990,8 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
             spark.createDataFrame([], "host string, n_salts int")
         )
     )
-    # the scheduler-layout mirror resumes from its committed table; a
-    # pre-mirror snapshot leaves it None and select_round falls back to the
-    # sketch / classic branches (the mirror cannot be rebuilt from the seen
-    # table alone — (host_bucket, salt) needs the host, which SEEN drops)
     seen_sched = None
-    if config.seen_tier == "mirror" and "seen_sched" in m["tables"]:
+    if config.seen_tier == "mirror":
         seen_sched = SegmentedTable.from_df(
             store.read(spark, snapshot_id, "seen_sched"),
             n_parts=n,

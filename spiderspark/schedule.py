@@ -10,14 +10,18 @@ Skew (BASELINE.json:6 "skew-split on heavy hosts"): a Zipf host distribution
 makes Window.partitionBy(host) put ~30% of the frontier in ONE task. The
 split is explicit and two-phase:
 
-  phase 1: rank within (host, salt)  — heavy hosts split across n_salts
-           tasks; each salt keeps only its best k candidates, so phase 2's
-           input per heavy host is ≤ n_salts·k rows, not the raw millions.
-  phase 2: rank within host on the reduced set — exact same top-k the
-           unsalted plan would pick, skew-free.
+  phase 1: per stored (host_bucket, salt) partition, reduce each host to
+           the candidates that can still make its budget — heavy hosts are
+           split across n_salts partitions, so phase 2's input per heavy
+           host is ≤ n_salts·k rows, not the raw millions. The seen tier
+           decides how (crawl.select_round): a layout-satisfied window
+           (mirror tier) or the fused guarded prefix (sketch tier).
+  phase 2: rank within host on the reduced set (per_host_topk_final) —
+           exact same top-k the unsalted plan would pick, skew-free.
 
-Salt = pmod(xxhash64(url_norm), n_salts(host)) — deterministic, JVM-side;
-n_salts > 1 only for hosts flagged heavy by an exact count (A7).
+Salt = pmod(xxhash64(url_norm), n_salts(host)) — deterministic, JVM-side,
+from a per-crawl static table (static_salt_table); n_salts > 1 only for
+hosts flagged heavy by an exact count (A7).
 """
 
 from __future__ import annotations
@@ -32,27 +36,6 @@ MAX_SALTS = 32
 def order_cols(df_or_prefix: str = "") -> list:
     p = df_or_prefix
     return [F.col(p + c) for c in ORDER_COLS]
-
-
-def assign_salts(candidates: DataFrame, skew_threshold: int = SKEW_THRESHOLD) -> DataFrame:
-    """A7 + salting: exact per-host candidate counts pick the heavy hosts;
-    each gets n_salts = ceil(count / threshold) (capped). The count is a
-    map-side-combinable groupBy on a host-sized result — cheap — and the
-    result is broadcast back onto the frontier."""
-    counts = candidates.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-    n_salts = F.least(
-        F.ceil(F.col("_n") / F.lit(float(skew_threshold))), F.lit(MAX_SALTS)
-    ).cast("int")
-    heavy = counts.select("host", F.greatest(n_salts, F.lit(1)).alias("_n_salts"))
-    return (
-        candidates.join(F.broadcast(heavy), "host", "left")
-        .withColumn(
-            "salt",
-            F.pmod(F.xxhash64("url_norm"), F.coalesce(F.col("_n_salts"), F.lit(1)))
-            .cast("int"),
-        )
-        .drop("_n_salts")
-    )
 
 
 def static_salt_table(host_counts: DataFrame, skew_threshold: int = SKEW_THRESHOLD) -> DataFrame:
@@ -91,43 +74,19 @@ def assign_salts_static(candidates: DataFrame, salts: DataFrame) -> DataFrame:
     )
 
 
-def per_host_topk(
+def per_host_topk_final(
     candidates: DataFrame, k_col: str = "host_budget", k_cap: int | None = None
 ) -> DataFrame:
-    """W1 two-phase skew-split top-k per host under the per-host budget.
-
-    ``k_col`` is a per-row column (host budget from politeness); both phases
-    order by the engine total order so the selection is deterministic.
+    """Phase 2: exact per-host top-k over an already-reduced candidate set
+    (the mirror tier's phase-1 winners, or the output of
+    frontier.membership_prefix_topk after the exact anti-join cleared the
+    maybe-seen rows).
 
     ``k_cap``: a LITERAL upper bound on any host's budget. Spark only
     inserts the ``WindowGroupLimit`` physical operator (partial per-group
     top-k BEFORE the window sort/shuffle) for rank-vs-literal predicates;
     keeping a literal conjunct alongside the per-host column bound turns the
-    full group sort into a bounded one — the difference between sorting a
-    heavy host's millions of candidates and keeping a k-row heap per task.
-    """
-    def bounded(rn_col):
-        cond = rn_col <= F.col(k_col)
-        if k_cap is not None:
-            cond = (rn_col <= F.lit(int(k_cap))) & cond
-        return cond
-
-    w1 = Window.partitionBy("host", "salt").orderBy(*order_cols())
-    phase1 = (
-        candidates.withColumn("_r1", F.row_number().over(w1))
-        .filter(bounded(F.col("_r1")))
-        .drop("_r1")
-    )
-    return per_host_topk_final(phase1, k_col, k_cap)
-
-
-def per_host_topk_final(
-    candidates: DataFrame, k_col: str = "host_budget", k_cap: int | None = None
-) -> DataFrame:
-    """Phase 2 alone: exact per-host top-k over an already-reduced candidate
-    set (phase-1 winners, or the output of frontier.membership_prefix_topk
-    after the exact anti-join cleared the maybe-seen rows). The k_cap
-    literal conjunct keeps the WindowGroupLimit bounded-sort operator."""
+    full group sort into a bounded one."""
     def bounded(rn_col):
         cond = rn_col <= F.col(k_col)
         if k_cap is not None:
@@ -140,29 +99,6 @@ def per_host_topk_final(
         .filter(bounded(F.col("_r2")))
         .drop("_r2")
     )
-
-
-def per_host_topk_select(
-    candidates: DataFrame, k_col: str = "host_budget", k_cap: int | None = None
-) -> DataFrame:
-    """per_host_topk with payload pruning: the two window phases rank a THIN
-    projection (grouping keys + order columns + budget — no payload
-    columns), then the winning url_hash set is broadcast-semi-joined back
-    onto the full rows. Selection is identical to per_host_topk (url_hash
-    is unique post-dedup).
-
-    Measured decision (interleaved A/B at 1M rows, 16 cores): with the
-    standard ~200 B frontier rows this is 20-40% SLOWER than the direct
-    window — the extra candidates pass + broadcast costs more than the
-    exchange bytes saved — so the crawl loop uses plain per_host_topk. Use
-    THIS variant when candidate rows carry fat payloads (html/text/vector
-    columns), where the pruned exchange wins by an order of magnitude."""
-    thin = candidates.select(
-        "host", "salt", k_col,
-        "priority", "depth", "discovered_batch", "url_hash",
-    )
-    keys = per_host_topk(thin, k_col, k_cap=k_cap).select("url_hash")
-    return candidates.join(F.broadcast(keys), "url_hash", "left_semi")
 
 
 def global_rank(

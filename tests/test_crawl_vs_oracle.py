@@ -3,7 +3,8 @@ politeness budget, the Spark engine reproduces the oracle's crawl ordering
 and final URL-seen set — and extracted text is byte-identical per url.
 
 Runs multi-round crawls over the deterministic synthetic corpus with robots
-gating, token buckets, bloom dedup and discovery all active.
+gating, token buckets, seen dedup and discovery all active — on both seen
+tiers.
 """
 
 import numpy as np
@@ -21,7 +22,7 @@ ROUNDS = 3
 BUDGET = 5.0
 
 
-def _spark_run(spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom"):
+def _spark_run(spark, rounds=ROUNDS, seen_tier="mirror", sketch_kind="bloom"):
     pages = spark.createDataFrame(
         gen_pages_pdf(np.arange(CORPUS), CORPUS),
         schema="url string, warc_ts timestamp, html binary, text string, lang string",
@@ -30,7 +31,7 @@ def _spark_run(spark, use_bloom=True, rounds=ROUNDS, sketch_kind="bloom"):
     robots = spark.createDataFrame(robots_pdf(), schema=ROBOTS_TXT)
     config = CrawlConfig(
         policy=HostPolicy(default_budget=BUDGET, round_seconds=60.0),
-        use_bloom=use_bloom,
+        seen_tier=seen_tier,
         state_buckets=4,
         bloom_capacity_per_bucket=4096,
         sketch_kind=sketch_kind,
@@ -78,23 +79,29 @@ def test_ordering_and_seen_match_oracle(spark, oracle_result):
     assert len(oracle_rounds[1]) > 0  # discovery fed later rounds
 
 
-def test_cuckoo_tier_changes_nothing(spark, oracle_result):
-    """CrawlConfig(sketch_kind='cuckoo'): the cuckoo approximate tier must
-    be schedule-invisible exactly like bloom (false positives fall through
-    to the exact tier; inserts raise rather than drop)."""
+def _sketch_tier_matches_oracle(spark, oracle_result, sketch_kind):
     oracle_rounds, oracle = oracle_result
-    cuckoo_rounds, cuckoo_seen, _, _, _ = _spark_run(spark, sketch_kind="cuckoo")
-    assert cuckoo_rounds == oracle_rounds
-    assert cuckoo_seen == sorted(oracle.seen)
+    rounds, seen, state, _, _ = _spark_run(
+        spark, seen_tier="sketch", sketch_kind=sketch_kind
+    )
+    # the sketch is really read: rounds 2+ ran membership against deltas
+    assert state.seen_sched is None
+    assert state.sketch.kind == sketch_kind and len(state.sketch.paths) > 0
+    assert rounds == oracle_rounds
+    assert seen == sorted(oracle.seen)
+
+
+def test_cuckoo_tier_changes_nothing(spark, oracle_result):
+    """seen_tier='sketch' with sketch_kind='cuckoo': the cuckoo filter must
+    be schedule-invisible exactly like bloom (false positives fall through
+    to the exact anti-join; inserts raise rather than drop)."""
+    _sketch_tier_matches_oracle(spark, oracle_result, "cuckoo")
 
 
 def test_bloom_tier_changes_nothing(spark, oracle_result):
-    """Bloom is an accelerator, not a semantic: with and without it the
-    schedule is identical (zero false negatives + exact residual)."""
-    oracle_rounds, _ = oracle_result
-    no_bloom_rounds, no_bloom_seen, _, _, _ = _spark_run(spark, use_bloom=False)
-    assert no_bloom_rounds == oracle_rounds
-    assert no_bloom_seen == sorted(oracle_result[1].seen)
+    """Bloom is an accelerator, not a semantic: the sketch tier reproduces
+    the oracle exactly (zero false negatives + exact residual)."""
+    _sketch_tier_matches_oracle(spark, oracle_result, "bloom")
 
 
 def test_text_byte_identity(spark, oracle_result):

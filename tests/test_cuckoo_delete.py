@@ -123,18 +123,15 @@ def test_cuckoo_delete_then_recrawl(spark):
 
 
 def test_forget_urls_mirror_tier_end_to_end(spark):
-    """TTL expiry under the DEFAULT seen tier: ``seen_tier='mirror'``
-    maintains the scheduler-layout seen mirror alongside the sketch, and a
-    delete that touched only the sketch would be a silent no-op (the
-    mirror's anti-join still suppresses the url forever). forget_urls must
-    expire the url from EVERY representation — exact table, mirror, cuckoo
-    sketch — so the very same mirror loop re-schedules it."""
+    """TTL expiry under the DEFAULT config: the mirror tier keeps the
+    scheduler-layout seen mirror (and no sketch), and a delete that missed
+    the mirror would be a silent no-op (its anti-join still suppresses the
+    url forever). forget_urls must expire the url from EVERY representation
+    the state carries — exact table and mirror — so the very same mirror
+    loop re-schedules it."""
     from spiderspark.crawl import forget_urls
 
-    config = CrawlConfig(
-        policy=HostPolicy(default_budget=4.0), state_buckets=N,
-        sketch_kind="cuckoo",  # seen_tier left at the "mirror" default
-    )
+    config = CrawlConfig(policy=HostPolicy(default_budget=4.0), state_buckets=N)
     assert config.seen_tier == "mirror"
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(200), 200), schema=PAGES)
     seeds = spark.createDataFrame(seeds_pdf(12, 200), schema=SEEDS)
@@ -146,6 +143,7 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
     target = s1.filter(F.col("url_hash").isin(list(fetched))).orderBy("rank").first()
     assert target is not None
     assert state.seen_sched is not None  # the mirror is live
+    assert state.sketch is None  # ...and the only seen representation
 
     state2, s2, _ = crawl_round(spark, state, pk, config)
     assert target["url_hash"] not in _hashes(s2)  # suppressed while seen
@@ -191,12 +189,15 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
 
 
 def test_forget_urls_refuses_bloom_state(spark):
-    """A state carrying a bloom sketch cannot soundly forget (bits cannot
-    be unset) — the coherent-expiry API must refuse, not silently leave a
-    stale sketch that suppresses or ghost-flags urls."""
+    """A sketch-tier state carrying a bloom sketch cannot soundly forget
+    (bits cannot be unset) — the coherent-expiry API must refuse, not
+    silently leave a stale sketch that suppresses or ghost-flags urls."""
     from spiderspark.crawl import forget_urls
 
-    config = CrawlConfig(policy=HostPolicy(default_budget=4.0), state_buckets=N)
+    config = CrawlConfig(
+        policy=HostPolicy(default_budget=4.0), state_buckets=N,
+        seen_tier="sketch",
+    )
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(100), 100), schema=PAGES)
     seeds = spark.createDataFrame(seeds_pdf(6, 100), schema=SEEDS)
     state = init_state(spark, seeds, None, config)

@@ -1,24 +1,35 @@
-"""The fused scheduler-layout round (bench_round.one_round_fused +
-frontier.membership_prefix_topk) must produce the EXACT same schedule as the
-classic two-exchange round — the guarded-prefix pre-selection is an exact
+"""One scheduling path per seen tier: ``crawl.select_round`` →
+``schedule.to_schedule`` must emit the plain per-host top-k over
+frontier ∖ seen, in the engine total order, on BOTH tiers — the mirror
+tier's co-partitioned anti-join, and the sketch tier's fused membership +
+guarded-prefix pre-selection (frontier.membership_prefix_topk), including a
+sketch tier whose sketch is still empty. The guarded prefix is an exact
 superset of the per-host top-budget for any salt assignment, and the final
 window re-ranks it identically.
 
-Also pins the physical properties the fused path exists for: the within-batch
-dedup plans exchange-free on the (host_bucket, salt) layout, and the pandas
-pass sees only the thin numeric projection.
+Also pins the physical properties the tiers exist for: the within-batch
+dedup plans exchange-free on the (host_bucket, salt) layout, the mirror
+selection plans exchange-free, and the pandas pass sees only the thin
+numeric projection.
 """
 
+import dataclasses
 import os
 import tempfile
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from spiderspark.bench import frontier_urls_dist
-from spiderspark.bench_round import one_round, one_round_fused
+from spiderspark.crawl import (
+    FRONTIER_KEY,
+    CrawlConfig,
+    init_state,
+    select_round,
+)
 from spiderspark.frontier import (
     SketchRef,
     host_bucket_col,
@@ -27,7 +38,13 @@ from spiderspark.frontier import (
     write_sketch_delta,
 )
 from spiderspark.politeness import HostPolicy
-from spiderspark.schedule import assign_salts_static, static_salt_table
+from spiderspark.schedule import (
+    ORDER_COLS,
+    assign_salts_static,
+    static_salt_table,
+    to_schedule,
+)
+from spiderspark.schemas import FRONTIER
 from spiderspark.state import SegmentedTable
 
 
@@ -58,12 +75,6 @@ def setup(spark):
     ).localCheckpoint(eager=True)
     policy = HostPolicy(default_budget=40.0)
 
-    sk_classic = write_sketch_delta(
-        seen_table.segments[0],
-        f"{in_dir}/sk_c",
-        SketchRef.create(N_BUCKETS, 8192, 0.01),
-        assume_keyed_layout=True,
-    )
     seen_hb = assign_salts_static(
         seen_full.withColumn("host_bucket", host_bucket_col(F.col("host"))), salts
     ).repartition(N_BUCKETS, "host_bucket", "salt")
@@ -82,45 +93,119 @@ def setup(spark):
     )
     return {
         "raw": raw,
+        "seen_full": seen_full,
         "seen_table": seen_table,
         "seen_sched": seen_sched,
         "salts": salts,
         "policy": policy,
-        "sk_classic": sk_classic,
         "sk_fused": sk_fused,
-        "delta_root": tempfile.mkdtemp(prefix="fusedtest-delta-"),
     }
 
 
-def test_fused_schedule_identical_to_classic(spark, setup):
-    rc = one_round(
-        spark, setup["raw"], setup["seen_table"], setup["sk_classic"],
-        setup["policy"], N_BUCKETS, setup["delta_root"],
-    )
-    rf = one_round_fused(
-        spark, setup["raw"], setup["seen_table"], setup["sk_fused"],
-        setup["policy"], N_BUCKETS, setup["delta_root"], setup["salts"],
-    )
-    assert rc["n_scheduled"] == rf["n_scheduled"] > 0
-    assert rc["schedule_digest"] == rf["schedule_digest"]
+# ---------------------------------------------------------------------------
+# the engine's round on both tiers vs a plain per-host top-k reference
+# ---------------------------------------------------------------------------
+
+BUDGET = 40
 
 
-def test_mirror_schedule_identical_to_classic(spark, setup):
-    """The scheduler-layout seen-MIRROR round (round-5 default:
-    co-partitioned exact anti-join, no sketch, no Python crossing) must
-    produce the EXACT same schedule as the classic and fused rounds."""
-    from spiderspark.bench_round import one_round_mirror
+def _seed_unpruned(spark, state, keys, config):
+    """Put ``keys`` (url_hash, url_norm, host) into the seen state the way
+    ``__spark_entry__.schedule_round_df`` does: WITHOUT pruning the frontier
+    (crawl.mark_seen would), so the tier's seen filter does real work."""
+    n = config.state_buckets
+    seen = SegmentedTable.from_df(
+        keys.select("url_hash", F.lit(0).cast("long").alias("first_batch")),
+        n_parts=n,
+    )
+    routed = assign_salts_static(
+        keys.withColumn("host_bucket", host_bucket_col(F.col("host"))),
+        state.salts,
+    )
+    if config.seen_tier == "mirror":
+        return dataclasses.replace(
+            state, seen=seen,
+            seen_sched=SegmentedTable.from_df(
+                routed.select("host_bucket", "salt", "url_hash"),
+                n_parts=n, key=FRONTIER_KEY,
+            ),
+        )
+    sketch = write_sketch_delta(
+        routed.repartition(n, *state.sketch.routing),
+        os.path.join(state.workdir, "sketch_delta_preseen"),
+        state.sketch,
+        assume_keyed_layout=True,
+    )
+    return dataclasses.replace(state, seen=seen, sketch=sketch)
 
-    rc = one_round(
-        spark, setup["raw"], setup["seen_table"], setup["sk_classic"],
-        setup["policy"], N_BUCKETS, setup["delta_root"],
-    )
-    rm = one_round_mirror(
-        spark, setup["raw"], setup["seen_sched"], setup["policy"],
-        N_BUCKETS, setup["delta_root"], setup["salts"],
-    )
-    assert rc["n_scheduled"] == rm["n_scheduled"] > 0
-    assert rc["schedule_digest"] == rm["schedule_digest"]
+
+def _reference(frontier: pd.DataFrame, seen: set) -> list:
+    """Per-host top-BUDGET over frontier ∖ seen, then the global order."""
+    unseen = frontier[~frontier["url_hash"].isin(seen)]
+    ordered = unseen.sort_values(list(ORDER_COLS), kind="mergesort")
+    top = ordered.groupby("host", sort=False).head(BUDGET)
+    return top.sort_values(list(ORDER_COLS), kind="mergesort")["url_hash"].tolist()
+
+
+@pytest.fixture(scope="module")
+def engine(spark, setup):
+    seen_keys = setup["seen_full"].select("url_hash", "url_norm", "host")
+
+    def config(tier):
+        return CrawlConfig(
+            policy=HostPolicy(default_budget=float(BUDGET)),
+            state_buckets=N_BUCKETS,
+            bloom_capacity_per_bucket=8192,
+            skew_threshold=2_000,  # small → the heavy hosts really get salted
+            seen_tier=tier,
+        )
+
+    def schedule(state, cfg):
+        sched = to_schedule(select_round(spark, state, cfg), batch_id=1)
+        return [r["url_hash"] for r in sched.orderBy("rank").collect()]
+
+    states = {t: init_state(spark, setup["raw"], None, config(t))
+              for t in ("mirror", "sketch")}
+    frontier = states["mirror"].frontier.df(spark, FRONTIER).toPandas()
+    seen = {r["url_hash"] for r in seen_keys.collect()}
+    return {
+        "config": config,
+        "schedule": schedule,
+        "states": states,
+        "seen_keys": seen_keys,
+        "frontier": frontier,
+        "reference": _reference(frontier, seen),
+        "reference_nothing_seen": _reference(frontier, set()),
+    }
+
+
+@pytest.mark.parametrize("tier", ["mirror", "sketch"])
+def test_select_round_matches_reference(spark, engine, tier):
+    cfg = engine["config"](tier)
+    state = _seed_unpruned(spark, engine["states"][tier], engine["seen_keys"], cfg)
+    if tier == "sketch":
+        assert state.seen_sched is None and len(state.sketch.paths) == 1
+    else:
+        assert state.sketch is None and state.seen_sched is not None
+    got = engine["schedule"](state, cfg)
+    want = engine["reference"]
+    # the seen filter did real work: the pre-seen urls sit in the frontier
+    seen = {r["url_hash"] for r in engine["seen_keys"].collect()}
+    assert len(seen & set(engine["frontier"]["url_hash"])) > 1000
+    assert len(got) == len(want) > 0
+    assert got == want
+
+
+def test_select_round_sketch_tier_with_empty_sketch(spark, engine):
+    """A fresh sketch-tier state has a sketch with no delta yet: the fused
+    pass reads it as "definitely unseen" for every row — exact, since
+    nothing is seen — and schedules the plain per-host top-k."""
+    state = engine["states"]["sketch"]
+    assert state.sketch is not None and len(state.sketch.paths) == 0
+    assert state.seen.total_rows() == 0
+    got = engine["schedule"](state, engine["config"]("sketch"))
+    assert got == engine["reference_nothing_seen"]
+    assert got != engine["reference"]  # the pre-seen urls are back in
 
 
 def test_mirror_selection_plan_exchange_free(spark, setup):

@@ -1,0 +1,141 @@
+"""Each seen tier keeps exactly one seen representation besides the exact
+url_hash table — the mirror tier a scheduler-layout mirror, the sketch tier
+a distributed sketch — and every state-changing call keeps the frontier and
+the seen set disjoint (frontier ∩ seen = ∅ on url_hash). ``mark_seen``'s
+prune and the round's delta anti-probe both rely on that invariant.
+
+Walks one small crawl per tier through init_state → mark_seen → store-backed
+crawl_round ×2 → forget_urls + re-injection → crawl_round → resume, checking
+the invariant and the tier's representations after every step."""
+
+import dataclasses
+import tempfile
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from spiderspark.crawl import (
+    FRONTIER_KEY,
+    CrawlConfig,
+    _frontier_cols,
+    crawl_round,
+    forget_urls,
+    init_state,
+    keyed_pages,
+    mark_seen,
+    resume,
+)
+from spiderspark.frontier import dedup_within_batch, seeds_to_frontier, with_canonical
+from spiderspark.pages import gen_pages_pdf, robots_pdf, seeds_pdf, url_for_ids
+from spiderspark.politeness import HostPolicy
+from spiderspark.schedule import assign_salts_static
+from spiderspark.schemas import FRONTIER, PAGES, ROBOTS_TXT, SEEDS, SEEN
+from spiderspark.snapshots import ParquetManifestStore
+from spiderspark.state import materialize_keyed
+
+N = 4
+CORPUS = 200
+
+
+def _config(tier):
+    return CrawlConfig(
+        policy=HostPolicy(default_budget=4.0), state_buckets=N, seen_tier=tier,
+        # the sketch tier's TTL expiry needs a deletable filter
+        sketch_kind="cuckoo" if tier == "sketch" else "bloom",
+    )
+
+
+def _overlap(spark, state) -> int:
+    frontier = state.frontier.df(spark, FRONTIER).select("url_hash")
+    seen = state.seen.df(spark, SEEN).select("url_hash")
+    return frontier.join(seen, "url_hash").count()
+
+
+def _check(spark, state, tier, step):
+    assert _overlap(spark, state) == 0, f"frontier ∩ seen ≠ ∅ after {step}"
+    if tier == "mirror":
+        assert state.sketch is None, step
+        assert state.seen_sched is not None, step
+        assert state.seen_sched.total_rows() == state.seen.total_rows(), step
+    else:
+        assert state.seen_sched is None, step
+        assert state.sketch is not None, step
+
+
+def _manifest_tables(store) -> set:
+    return set(store.manifest(store.head())["tables"])
+
+
+@pytest.mark.parametrize("tier", ["mirror", "sketch"])
+def test_frontier_and_seen_stay_disjoint(spark, tier):
+    config = _config(tier)
+    pages = spark.createDataFrame(gen_pages_pdf(np.arange(CORPUS), CORPUS), schema=PAGES)
+    seeds = spark.createDataFrame(seeds_pdf(16, CORPUS), schema=SEEDS)
+    robots = spark.createDataFrame(robots_pdf(), schema=ROBOTS_TXT)
+    pk = keyed_pages(pages, n_parts=N)
+    store = ParquetManifestStore(tempfile.mkdtemp(prefix="seentiers-"))
+
+    state = init_state(spark, seeds, robots, config)
+    _check(spark, state, tier, "init_state")
+
+    # pre-seed urls that are in the frontier (ids 0, 10, ... include seeds)
+    urls = spark.createDataFrame(
+        [(u,) for u in url_for_ids(np.arange(0, CORPUS, 10))], ["url"]
+    )
+    keys = with_canonical(urls).select("url_hash", "url_norm", "host")
+    before = state.frontier.total_rows()
+    state = mark_seen(spark, state, keys, config)
+    assert state.frontier.total_rows() < before  # the prune did real work
+    _check(spark, state, tier, "mark_seen")
+
+    schedules = []
+    for r in (1, 2):
+        state, sched, _ = crawl_round(spark, state, pk, config, store=store)
+        schedules.append(sched)
+        _check(spark, state, tier, f"crawl_round {r}")
+        tables = _manifest_tables(store)
+        if tier == "mirror":
+            assert "seen_sketch" not in tables and "seen_sched" in tables
+        else:
+            assert "seen_sketch" in tables and "seen_sched" not in tables
+            assert len(state.sketch.paths) > 0
+
+    # TTL expiry of two round-1 urls, then re-injection as fresh frontier rows
+    expired = schedules[0].orderBy("rank").limit(2)
+    exp_hashes = {r["url_hash"] for r in expired.collect()}
+    state = forget_urls(
+        spark, state, expired.select("url_hash", "url_norm", "host"), config
+    )
+    rows = assign_salts_static(
+        seeds_to_frontier(
+            spark, expired.select("url", F.lit(-1.0).alias("priority")),
+            batch_id=state.batch_id,
+        ),
+        state.salts,
+    )
+    seg = materialize_keyed(
+        dedup_within_batch(_frontier_cols(rows).repartition(N, "url_hash")),
+        N, key=FRONTIER_KEY, sort=state.frontier.sort_cols,
+    )
+    state = dataclasses.replace(state, frontier=state.frontier.append(seg))
+    _check(spark, state, tier, "forget_urls + re-injection")
+
+    state, sched3, _ = crawl_round(spark, state, pk, config, store=store)
+    assert exp_hashes <= {r["url_hash"] for r in sched3.collect()}
+    _check(spark, state, tier, "crawl_round 3")
+
+    resumed = resume(spark, store, config)
+    _check(spark, resumed, tier, "resume")
+    assert resumed.frontier.total_rows() == state.frontier.total_rows()
+    assert resumed.seen.total_rows() == state.seen.total_rows()
+
+    # a snapshot lacks the table the other tier reads: resume refuses
+    other = "sketch" if tier == "mirror" else "mirror"
+    with pytest.raises(ValueError, match="seen_s"):
+        resume(spark, store, _config(other))
+
+
+def test_seen_tier_is_validated():
+    with pytest.raises(ValueError, match="seen_tier"):
+        CrawlConfig(seen_tier="exact")

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from spiderspark.frontier import (
     SketchRef,
     compact_sketch,
-    dedup_against_seen,
     sketch_df,
     sketch_flag_maybe_seen,
     write_sketch_delta,
@@ -169,40 +168,31 @@ def test_sketch_delta_dirs_equal_compaction(spark):
     assert all(r["count"] == 1 for r in rows)
 
 
-def test_dedup_against_seen_equals_exact(spark):
-    """Sketch tier is an accelerator, not a semantic: candidates with the
-    sketch == candidates with exact-only dedup."""
-    tmp = tempfile.mkdtemp(prefix="sketchtest-")
-    frontier_rows = spark.range(0, 3000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-        F.concat(F.lit("u"), F.col("id")).alias("url_norm"),
-        F.col("id").alias("url_hash"),
-        F.lit("h").alias("host"),
-        F.lit(0).cast("int").alias("host_bucket"),
-        F.lit(0).cast("int").alias("salt"),
-        F.lit(0.0).alias("priority"),
-        F.lit(0).cast("int").alias("depth"),
-        F.lit(0).cast("long").alias("discovered_batch"),
-        F.lit(0).cast("int").alias("attempt"),
-    )
-    frontier = SegmentedTable.from_df(frontier_rows, n_parts=4)
-    seen_df = spark.range(1000, 1800).select(
-        F.col("id").alias("url_hash"), F.lit(0).cast("long").alias("first_batch")
-    )
-    seen = SegmentedTable.from_df(seen_df, n_parts=4)
-    ref = SketchRef.create(4, 4096, 0.01)
-    ref = write_sketch_delta(
-        seen.segments[0], os.path.join(tmp, "d0"), ref, assume_keyed_layout=True
-    )
-    with_sketch = sorted(
-        r["url_hash"]
-        for r in dedup_against_seen(spark, frontier, seen, ref).collect()
-    )
-    exact_only = sorted(
-        r["url_hash"]
-        for r in dedup_against_seen(spark, frontier, seen, None).collect()
-    )
-    assert with_sketch == exact_only == list(range(1000)) + list(range(1800, 3000))
+def test_build_bloom_tree_aggregate(spark):
+    """The treeAggregate merge seam (BASELINE.json:6): per-partition partial
+    Blooms merged on the driver by a log-depth tree. No false negatives over
+    the inserted keys, false-positive rate on disjoint keys within 2× fpp,
+    and the merged bits do not depend on the tree depth (bit-OR is
+    associative and commutative)."""
+    from spiderspark.frontier import build_bloom
+
+    # 16 partial-Bloom partitions: enough for depth=2 to add a real tree
+    # level (Spark only does when partitions > scale + partitions / scale)
+    fpp, n_buckets = 0.01, 16
+    rng = np.random.RandomState(11)
+    keys = np.unique(rng.randint(-(2**62), 2**62, size=20_000))
+    probe = rng.randint(-(2**62), 2**62, size=40_000)
+    probe = probe[~np.isin(probe, keys)]
+    df = spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
+    cap = len(keys) // n_buckets
+
+    flat = build_bloom(df, n_buckets, cap, fpp, depth=1)
+    tree = build_bloom(df, n_buckets, cap, fpp, depth=2)
+    assert [f.to_bytes() for f in flat.filters] == [
+        f.to_bytes() for f in tree.filters
+    ]
+    assert tree.contains(keys).all()
+    assert tree.contains(probe).mean() <= 2 * fpp
 
 
 def test_no_full_sketch_broadcast_in_source():
@@ -258,9 +248,10 @@ def test_empty_delta_dir_readable_and_harmless(spark):
 
 
 def test_crawl_round_with_nothing_newly_seen_commits(spark):
-    """ADVICE r02 (high), end-to-end: a store-backed round in which NO url
-    becomes seen (no page fetched, attempts left) must not crash commit —
-    the sketch-delta write is skipped for the empty newly-seen segment."""
+    """ADVICE r02 (high), end-to-end: a store-backed sketch-tier round in
+    which NO url becomes seen (no page fetched, attempts left) must not
+    crash commit — the sketch-delta write is skipped for the empty
+    newly-seen segment."""
     from spiderspark.crawl import CrawlConfig, crawl_round, init_state, keyed_pages
     from spiderspark.politeness import HostPolicy
     from spiderspark.snapshots import ParquetManifestStore
@@ -275,7 +266,8 @@ def test_crawl_round_with_nothing_newly_seen_commits(spark):
         spark.createDataFrame([], "url string, html binary"), n_parts=4
     )
     config = CrawlConfig(
-        policy=HostPolicy(default_budget=8.0), state_buckets=4, max_attempts=3
+        policy=HostPolicy(default_budget=8.0), state_buckets=4, max_attempts=3,
+        seen_tier="sketch",
     )
     state = init_state(spark, seeds, None, config)
     state, schedule, _log = crawl_round(spark, state, pages, config, store=store)
