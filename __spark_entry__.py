@@ -84,8 +84,9 @@ def _documents_as_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pre_seen_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every 7th document's canonical URL — a deterministic pre-seen set, so
-    the flagship's seen anti-join / sketch membership do real work and the
-    oracle can mirror the exclusion as ``doc_id % 7 <> 0``."""
+    the flagship's seen dedup (mark_seen's new-key filter and frontier
+    prune) does real work and the oracle can restate the exclusion as
+    ``doc_id % 7 <> 0``."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     return docs.filter(F.col("doc_id") % 7 == 0).select(
         F.concat(
@@ -99,96 +100,80 @@ def schedule_round_df(
     spark: SparkSession,
     sf_dir: str,
     budget: float = 8.0,
-    tier: str = "mirror",
+    tier: str = "exact",
     forget_mod: int | None = None,
 ) -> DataFrame:
     """One scheduling round of the real engine (crawl.select_round — the
-    same code crawl_round runs) over testdata-derived seeds, against a
-    pre-seen set covering every 7th document.
+    same code crawl_round runs) over testdata-derived seeds, after
+    crawl.mark_seen has deduped them against a pre-seen set covering every
+    7th document.
 
-    ``tier`` picks the seen tier select_round runs
-    (``CrawlConfig.seen_tier``):
-    - "mirror" (the production default): the pre-seen keys live as the
-      scheduler-layout mirror segment; selection is the co-partitioned
-      zero-exchange anti-join + layout-satisfied WindowGroupLimit top-k.
-    - "fused" (``seen_tier="sketch"``): the pre-seen keys are folded into a
-      bucket-partitioned Bloom sketch delta routed by the frontier's
-      (host_bucket, salt) layout; selection runs the fused membership +
-      guarded-prefix + layout-kept-join pipeline (the low-read-volume
-      tier).
-    Both produce the identical schedule (the sketch has no false negatives
-    and its maybe-sliver is exactly anti-joined; the mirror is exact by
-    construction). The pre-seen keys are seeded WITHOUT pruning the
-    frontier, so the tier's seen filter does real work.
+    ``tier`` is the ``CrawlConfig.seen_tier`` the state runs under:
+    "exact" (the default: mark_seen's new-key filter anti-probes the
+    url_hash seen table) or "sketch" (the Bloom sketch answers first and
+    only keys it calls maybe-seen are checked against the exact table;
+    mark_seen also writes the pre-seen keys as a sketch delta). Either way mark_seen prunes the
+    pre-seen rows from the frontier, and select_round — one path, no seen
+    input — schedules what is left; the two tiers emit the identical
+    schedule.
 
-    ``forget_mod`` (mirror tier only): after seeding the pre-seen state,
-    TTL-expire every ``forget_mod``-th document's URL via
-    crawl.forget_urls — the coherent delete across the exact seen table
-    AND the scheduler-layout mirror — so those documents become
-    schedulable again. With forget_mod=14 the effective exclusion set is
-    closed-form (doc_id % 7 == 0 AND doc_id % 14 != 0), which is what
-    makes the re-crawl-after-expiry path ORACLE-checkable."""
+    ``forget_mod`` (exact tier only): after seeding, TTL-expire every
+    ``forget_mod``-th document's URL via crawl.forget_urls, then re-inject
+    those documents' seed rows into the frontier (mark_seen pruned them) —
+    the caller's move that makes expired urls schedulable again. The
+    re-injection anti-probes the seen table, so a url the delete missed
+    stays out of the schedule. With forget_mod=14 the effective exclusion
+    set is closed-form (doc_id % 7 == 0 AND doc_id % 14 != 0), which is
+    what makes the re-crawl-after-expiry path ORACLE-checkable."""
     import dataclasses
 
-    from spiderspark.crawl import CrawlConfig, forget_urls, init_state, select_round
-    from spiderspark.frontier import with_canonical, write_sketch_delta
+    from spiderspark.crawl import (
+        FRONTIER_KEY,
+        CrawlConfig,
+        _frontier_cols,
+        forget_urls,
+        init_state,
+        mark_seen,
+        select_round,
+    )
+    from spiderspark.frontier import dedup_within_batch, seeds_to_frontier, with_canonical
     from spiderspark.politeness import HostPolicy
     from spiderspark.schedule import assign_salts_static, to_schedule
-    from spiderspark.state import SegmentedTable
+    from spiderspark.state import materialize_keyed
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # the layout joins' zero-exchange plans need subset-key co-partitioning
     # (session.py default; the DRIVER's session may lack it)
     spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    config = CrawlConfig(
-        policy=HostPolicy(default_budget=budget),
-        seen_tier={"mirror": "mirror", "fused": "sketch"}[tier],
-    )
-    state = init_state(spark, _documents_as_seeds(spark, sf_dir), None, config)
-
-    seen_rows = with_canonical(_pre_seen_urls(spark, sf_dir))
-    seen = SegmentedTable.from_df(
-        seen_rows.select(
-            "url_hash", F.lit(0).cast("long").alias("first_batch")
-        ),
-        n_parts=config.state_buckets,
-    )
-    sketch = state.sketch
-    seen_sched = state.seen_sched
-    # the pre-seen keys routed exactly as a frontier row for the same url
-    # would be (static salt from the crawl's salt table), so membership
-    # tasks / mirror partitions find them locally
-    routed = assign_salts_static(seen_rows, state.salts)
-    if tier == "fused":
-        sketch = write_sketch_delta(
-            routed.repartition(config.state_buckets, *sketch.routing),
-            os.path.join(state.workdir, "sketch_delta_preseen"),
-            sketch,
-            assume_keyed_layout=True,
-        )
-    if tier == "mirror":
-        seen_sched = SegmentedTable.from_df(
-            routed.select("host_bucket", "salt", "url_hash"),
-            n_parts=config.state_buckets,
-            key=("host_bucket", "salt"),
-        )
-    state = dataclasses.replace(
-        state, seen=seen, sketch=sketch, seen_sched=seen_sched
+    config = CrawlConfig(policy=HostPolicy(default_budget=budget), seen_tier=tier)
+    seeds = _documents_as_seeds(spark, sf_dir)
+    state = init_state(spark, seeds, None, config)
+    pre_seen = with_canonical(_pre_seen_urls(spark, sf_dir))
+    state = mark_seen(
+        spark, state, pre_seen.select("url_hash", "url_norm", "host"), config
     )
     if forget_mod is not None:
-        if tier != "mirror":
-            raise ValueError("forget_mod is a mirror-tier exercise")
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        expired = with_canonical(
-            docs.filter(F.col("doc_id") % forget_mod == 0).select(
-                F.concat(
-                    F.lit("http://"), F.lower("source"), F.lit(".example/d/"),
-                    F.col("doc_id"), F.lit("/?x=~"),
-                ).alias("url")
-            )
-        )
+        if tier != "exact":
+            raise ValueError("forget_mod is an exact-tier exercise")
+        expired = seeds.filter(F.col("priority") % forget_mod == 0)
         state = forget_urls(
-            spark, state, expired.select("url_hash", "url_norm", "host"), config
+            spark, state,
+            with_canonical(expired).select("url_hash", "url_norm", "host"),
+            config,
+        )
+        # the rows init_state built for these documents (both seed
+        # variants, deduped, salted by the crawl's static table), minus
+        # whatever the seen table still holds
+        rows = assign_salts_static(seeds_to_frontier(spark, expired), state.salts)
+        n = config.state_buckets
+        seg = materialize_keyed(
+            state.seen.anti_probe(
+                dedup_within_batch(_frontier_cols(rows).repartition(n, "url_hash"))
+            ),
+            n, key=FRONTIER_KEY, sort=state.frontier.sort_cols,
+        )
+        state = dataclasses.replace(
+            state, frontier=state.frontier.append(seg)
         )
     selected = select_round(spark, state, config)
     return to_schedule(selected, batch_id=1)
@@ -196,38 +181,36 @@ def schedule_round_df(
 
 def crawl_schedule_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship, VALUE-CHECKED on BOTH seen tiers: the full engine path
-    (canonicalize → hash → within-batch dedup → seen filtering → politeness
+    (canonicalize → hash → within-batch dedup → seen dedup → politeness
     budget → skew-salted per-host top-k → deterministic global rank) run
-    through the FUSED bloom membership + guarded-prefix + layout-kept-join
-    pipeline (sketch tier) and the scheduler-layout seen-MIRROR path (the
-    production default), each tagged with its ``path``. The tiers are
-    provably schedule-identical (Bloom has no false negatives; the maybe
-    sliver is exactly anti-joined; the guarded prefix is an exact superset;
-    the mirror anti-join is exact by construction — test_fused_schedule),
-    so ONE path-independent SQL oracle checks both: canonicalization closed
-    form + seen exclusion (doc_id % 7) + per-host row_number ≤ budget +
-    global row_number, cross-joined with the two path tags. url_hash is dropped from the projection (DuckDB lacks
-    xxhash64; hash values are pinned by tests/test_hashing.py); the seeds'
-    unique priorities make the schedule independent of the hash tie-break
-    (see _documents_as_seeds).
+    with ``seen_tier="exact"`` and ``seen_tier="sketch"``, each tagged with
+    its ``path``. The tiers differ only in how mark_seen finds seen keys
+    (the sketch has no false negatives and its maybe sliver is exactly
+    anti-joined), so ONE path-independent SQL oracle checks both:
+    canonicalization closed form + seen exclusion (doc_id % 7) + per-host
+    row_number ≤ budget + global row_number, cross-joined with the two path
+    tags. url_hash is dropped from the projection (DuckDB lacks xxhash64;
+    hash values are pinned by tests/test_hashing.py); the seeds' unique
+    priorities make the schedule independent of the hash tie-break (see
+    _documents_as_seeds).
 
-    A THIRD leg ('mirror_forget') value-checks TTL expiry end to end:
-    same mirror-tier state, then crawl.forget_urls expires every 14th
-    document's URL from BOTH seen representations before selection, so
-    exactly the even multiples of 7 become schedulable again. Its oracle
-    is the same closed form with exclusion doc_id % 7 = 0 AND
-    doc_id % 14 <> 0 — if any seen representation missed the delete, the
-    re-admitted rows (and the per-host budget ranks they shift) hash
-    differently."""
+    A THIRD leg ('exact_forget') value-checks TTL expiry end to end: same
+    exact-tier state, then crawl.forget_urls expires every 14th document's
+    URL and those documents' seed rows are re-injected past a seen
+    anti-probe, so exactly the even multiples of 7 become schedulable
+    again. Its oracle is the same closed form with exclusion
+    doc_id % 7 = 0 AND doc_id % 14 <> 0 — if the delete missed any url,
+    its row stays out (and the per-host budget ranks it would shift
+    differ)."""
     out = None
-    for tier in ("fused", "mirror"):
+    for tier in ("exact", "sketch"):
         leg = schedule_round_df(spark, sf_dir, tier=tier).drop("url_hash")
         leg = leg.withColumn("path", F.lit(tier))
         out = leg if out is None else out.unionByName(leg)
     forget = schedule_round_df(
-        spark, sf_dir, tier="mirror", forget_mod=14
+        spark, sf_dir, tier="exact", forget_mod=14
     ).drop("url_hash")
-    return out.unionByName(forget.withColumn("path", F.lit("mirror_forget")))
+    return out.unionByName(forget.withColumn("path", F.lit("exact_forget")))
 
 
 _CRAWL_SCHEDULE_ORACLE = """
@@ -263,8 +246,8 @@ WITH seeds AS (
   FROM seeds GROUP BY url_norm, host
 ), topk_a AS (
   -- legs 1-2: doc_id % 7 = 0 docs are in the PRE-SEEN set (both variants
-  -- collapse to the same canonical url, whose hash the seen table /
-  -- sketch / mirror carries); politeness budget 8/host, no robots
+  -- collapse to the same canonical url, whose hash the seen table and
+  -- sketch carry); politeness budget 8/host, no robots
   SELECT * FROM dedup WHERE doc_id % 7 <> 0
   QUALIFY row_number() OVER (PARTITION BY host ORDER BY priority) <= 8
 ), sched_a AS (
@@ -275,9 +258,9 @@ WITH seeds AS (
          CAST(0 AS INTEGER) AS attempt
   FROM topk_a
 ), topk_b AS (
-  -- leg 3 (mirror_forget): every 14th doc's URL was TTL-expired from the
-  -- seen state before selection, so only the ODD multiples of 7 remain
-  -- excluded; the re-admitted docs shift per-host budget ranks
+  -- leg 3 (exact_forget): every 14th doc's URL was TTL-expired from the
+  -- seen state and re-injected before selection, so only the ODD multiples
+  -- of 7 remain excluded; the re-admitted docs shift per-host budget ranks
   SELECT * FROM dedup WHERE doc_id % 7 <> 0 OR doc_id % 14 = 0
   QUALIFY row_number() OVER (PARTITION BY host ORDER BY priority) <= 8
 ), sched_b AS (
@@ -288,16 +271,15 @@ WITH seeds AS (
          CAST(0 AS INTEGER) AS attempt
   FROM topk_b
 )
--- the two seen tiers (fused sketch pipeline, and the scheduler-layout
--- seen mirror — the production default) must emit the identical
--- schedule; the engine runs each and tags its rows, plus the TTL-expiry
--- leg with its own closed-form exclusion
+-- the two seen tiers (exact — the production default — and sketch) must
+-- emit the identical schedule; the engine runs each and tags its rows,
+-- plus the TTL-expiry leg with its own closed-form exclusion
 SELECT sched_a.*, tiers.path
 FROM sched_a CROSS JOIN (
-  SELECT 'fused' AS path UNION ALL SELECT 'mirror'
+  SELECT 'exact' AS path UNION ALL SELECT 'sketch'
 ) tiers
 UNION ALL
-SELECT sched_b.*, 'mirror_forget' AS path FROM sched_b
+SELECT sched_b.*, 'exact_forget' AS path FROM sched_b
 """
 
 

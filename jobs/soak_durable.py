@@ -4,7 +4,7 @@ run N crawl rounds with durable_state=True and record per-round state rows
 vs on-disk bytes of the state workdir. The invariant under test: disk grows
 with STATE, never with ROUNDS (superseded segments are reclaimed each
 round; peak == final), and the per-row disk envelope stays in the ~192 B
-class as mirror segments come to dominate.
+class as seen segments come to dominate.
 
 Usage: python jobs/soak_durable.py [corpus_pages] [seeds] [rounds] [budget]
 Prints one JSON line per round and a final summary line.

@@ -17,17 +17,20 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
   — schedule removal, delta resolve, seen anti-probes — plans as a
   co-partitioned SMJ or broadcast probe with ZERO exchange and ZERO sort on
   the stored side. Network per round is O(delta + schedule), not O(state).
-- Scheduling never exchanges the candidates either, and there is exactly
-  one scheduling path per seen tier (``CrawlConfig.seen_tier``): "mirror"
-  anti-joins each stored segment against an exact copy of the seen set kept
-  in the same layout, "sketch" runs ONE partition-local pass
-  (frontier.membership_prefix_topk) that fuses sketch membership with the
-  exact per-host budget pre-selection. Either way only the O(hosts ×
-  budget) kept set reaches the final window.
-- The URL-seen sketch (sketch tier only) is distributed (frontier.SketchRef):
-  membership is a partition-local side-read of only the task's bucket slice
-  (bucket routing == the frontier partitioning, so salting also evens slice
-  sizes under Zipf skew); updates are bucket-partitioned delta directories;
+- Scheduling never exchanges the candidates either and reads no seen
+  state: the frontier and the seen set are disjoint after every state
+  transition, so ``select_round`` is one path — gate each stored segment,
+  phase-1 window top-k within (host_bucket, salt, host), final per-host
+  top-k over the O(hosts × budget) kept set. Seen-ness is checked only
+  where it can remove rows: the round's discovery/requeue delta probe and
+  ``mark_seen``'s new-key filter.
+- Two seen tiers (``CrawlConfig.seen_tier``): "exact" keeps only the
+  url_hash seen table; "sketch" also keeps a distributed URL-seen sketch
+  (frontier.SketchRef) that the two probes read first, so only its
+  maybe-seen sliver reaches the exact anti-join. Membership is a
+  partition-local side-read of only the task's bucket slice (bucket
+  routing == the frontier partitioning, so salting also evens slice sizes
+  under Zipf skew); updates are bucket-partitioned delta directories;
   compaction is a distributed groupBy(bucket) merge. Bloom (default) or
   cuckoo (deletion support) filters behind the same rows. Nothing
   sketch-shaped ever lives on the driver or in a broadcast.
@@ -54,8 +57,8 @@ from .frontier import (
     compact_sketch,
     dedup_within_batch,
     host_bucket_col,
-    membership_prefix_topk,
     seeds_to_frontier,
+    sketch_flag_maybe_seen,
     sketch_df,
     with_canonical,
     write_sketch_delta,
@@ -75,7 +78,7 @@ from .schedule import (
     static_salt_table,
     to_schedule,
 )
-from .schemas import FRONTIER, HOST_STATE, SEEN, SEEN_SCHED
+from .schemas import FRONTIER, HOST_STATE, SEEN
 from .snapshots import SnapshotStore
 from .state import (
     SegmentedTable,
@@ -89,7 +92,7 @@ from .state import (
 # identity and every per-round window/join over the stored layout plans
 # exchange-free (see docs/PLANS.md "Scheduler layout")
 FRONTIER_KEY = ("host_bucket", "salt")
-SEEN_TIERS = ("mirror", "sketch")
+SEEN_TIERS = ("exact", "sketch")
 
 
 @dataclass(frozen=True)
@@ -104,23 +107,17 @@ class CrawlConfig:
     bloom_capacity_per_bucket: int = 1 << 16
     bloom_fpp: float = 0.01
     skew_threshold: int = 50_000
-    # how per-round seen filtering runs over the stored frontier segments —
-    # one scheduling path per value (select_round):
-    # - "mirror" (default; round-5 measured winner): the seen set keeps an
-    #   EXACT second copy in the scheduler layout ((host_bucket, salt)
-    #   partitioned, sorted on (..., url_hash)), so the filter is one
-    #   co-partitioned zero-exchange/zero-sort LEFT-ANTI merge join —
-    #   entirely JVM-side (the fused bloom pass's dominant cost was the
-    #   JVM→Python Arrow IPC crossing of every candidate, measured 85% of
-    #   the stage; 32M/32: schedule stage 19-23 s → 5.4-9 s, same digest).
-    #   No sketch exists on this tier.
-    # - "sketch": the bloom/cuckoo membership + guarded-prefix pre-selection
-    #   (frontier.membership_prefix_topk) — reads ~1.2 bits per seen key
-    #   instead of the mirror's 16 key bytes: the right tier when the seen
-    #   set dwarfs what per-task sequential reads should pay per round.
-    #   No mirror exists on this tier.
-    # Both tiers produce byte-identical schedules (test_fused_schedule).
-    seen_tier: str = "mirror"
+    # which seen representations the state keeps; both tiers schedule
+    # identically (select_round reads neither — the frontier never holds a
+    # seen key) and differ only in how the round's delta probe and
+    # mark_seen's new-key filter find seen keys:
+    # - "exact" (default): anti-probes of the url_hash seen table, the only
+    #   seen representation on this tier.
+    # - "sketch": a bloom/cuckoo sketch answers first; rows it calls
+    #   definitely unseen skip the exact table, only the maybe-seen sliver
+    #   is anti-probed. Reads ~1.2 bits per seen key instead of 8 key bytes
+    #   per probe — the tier for seen sets that dwarf per-round reads.
+    seen_tier: str = "exact"
     # sketch-tier filter family: "bloom" (default) or "cuckoo" (adds
     # deletion for re-crawl-after-TTL deployments; see sketch.CuckooFilter)
     sketch_kind: str = "bloom"
@@ -156,7 +153,7 @@ class CrawlState:
     seen: SegmentedTable
     host_state: DataFrame
     # the distributed URL-seen sketch: set on the sketch tier, None on the
-    # mirror tier
+    # exact tier
     sketch: SketchRef | None
     batch_id: int
     workdir: str
@@ -168,10 +165,6 @@ class CrawlState:
     # balance, never correctness. Re-salting requires a sketch rebuild.
     salts: DataFrame | None = None
     snapshot_id: int | None = None
-    # the seen set's scheduler-layout mirror: set on the mirror tier, None
-    # on the sketch tier; key = FRONTIER_KEY, rows (host_bucket, salt,
-    # url_hash)
-    seen_sched: SegmentedTable | None = None
 
 
 @F.pandas_udf(T.StringType())
@@ -270,10 +263,6 @@ def init_state(
         if config.seen_tier == "sketch"
         else None
     )
-    caps = host_state.agg(F.max("capacity").alias("m")).collect()
-    k_cap = int(
-        max(config.policy.default_budget, (caps[0]["m"] or 0) if caps else 0)
-    )
     return CrawlState(
         frontier=frontier,
         seen=SegmentedTable.empty(n),
@@ -281,14 +270,19 @@ def init_state(
         sketch=sketch,
         batch_id=0,
         workdir=workdir,
-        k_cap=k_cap,
+        k_cap=_k_cap(config.policy, host_state if robots is not None else None),
         salts=salts,
-        seen_sched=(
-            SegmentedTable.empty(n, key=FRONTIER_KEY)
-            if config.seen_tier == "mirror"
-            else None
-        ),
     )
+
+
+def _k_cap(policy: HostPolicy, host_state: DataFrame | None) -> int:
+    """The largest per-host budget of the crawl: the policy default, raised
+    by the largest robots capacity. Without host state (no robots) every
+    host gets the default, so no job runs."""
+    if host_state is None:
+        return int(policy.default_budget)
+    m = host_state.agg(F.max("capacity")).head()[0]
+    return int(max(policy.default_budget, m or 0))
 
 
 def keyed_pages(pages: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -314,80 +308,75 @@ def keyed_pages(pages: DataFrame, n_parts: int | None = None) -> DataFrame:
 def select_round(
     spark: SparkSession, state: CrawlState, config: CrawlConfig
 ) -> DataFrame:
-    """Steps 1-4 of a crawl round: dedup + politeness + per-host budget
-    selection over the current state — the scheduling core, factored out so
-    the driver contract (``__spark_entry__.schedule_round_df``) value-checks
-    the EXACT code path ``crawl_round`` runs. One branch per
-    ``config.seen_tier``; both start by gating each stored segment in place
-    (politeness budget + robots, broadcast joins — layout preserved).
+    """Steps 1-4 of a crawl round: politeness + per-host budget selection
+    over the current frontier — the scheduling core, factored out so the
+    driver contract (``__spark_entry__.schedule_round_df``) value-checks the
+    EXACT code path ``crawl_round`` runs.
 
-    Mirror tier (default): each gated segment anti-joins the seen set's
-    scheduler-layout mirror — co-partitioned SMJ, zero exchange and zero
-    sort on BOTH sides, no Python crossing — then phase-1 ranks within
-    (host_bucket, salt, host), layout-satisfied (no exchange) with the
-    k_cap literal keeping the WindowGroupLimit bounded sort; only the
-    O(hosts × budget) phase-1 winners reach the final window.
-
-    Sketch tier: ONE partition-local pass per segment fuses sketch
-    membership with the exact guarded-prefix budget pre-selection
-    (frontier.membership_prefix_topk) — the big frontier segments are never
-    exchanged AND never fully ranked; only the kept set moves: the
-    maybe-seen sliver to the seen layout for the exact anti-join, the
-    survivors into the final per-host window. The sketch holds every seen
-    key by construction, so an empty sketch (no delta yet) is exact too:
-    every row is definitely unseen. The tier of choice when the seen set
-    dwarfs per-round sequential-read budgets (~1.2 bits vs 16 bytes read
-    per seen key)."""
+    One path, no seen input: the frontier never holds a seen key (every
+    transition that adds seen keys prunes or probes the frontier side), so
+    a seen filter here could remove nothing. Each stored segment is gated in
+    place (politeness budget + robots, broadcast joins — layout preserved),
+    then phase-1 ranks within (host_bucket, salt, host), layout-satisfied
+    (no exchange) with the k_cap literal keeping the WindowGroupLimit
+    bounded sort; only the O(hosts × budget) phase-1 winners reach the
+    final per-host window."""
     if not state.frontier.segments:
         return spark.createDataFrame([], FRONTIER).withColumn(
             "host_budget", F.lit(0).cast("long")
         )
-    gated = [
-        (seg, robots_gate(
-            join_host_state(seg, state.host_state, config.policy)
-        ).filter(F.col("host_budget") > 0))
-        for seg in state.frontier.segments
-    ]
-    if config.seen_tier == "mirror":
-        w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(
-            *order_cols()
+    w1 = Window.partitionBy("host_bucket", "salt", "host").orderBy(*order_cols())
+    kept = reduce(DataFrame.unionByName, [
+        robots_gate(join_host_state(seg, state.host_state, config.policy))
+        .filter(F.col("host_budget") > 0)
+        .withColumn("_r1", F.row_number().over(w1))
+        .filter(
+            (F.col("_r1") <= F.lit(int(state.k_cap)))
+            & (F.col("_r1") <= F.col("host_budget"))
         )
-        kept = reduce(DataFrame.unionByName, [
-            state.seen_sched.anti_probe(g)
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(
-                (F.col("_r1") <= F.lit(int(state.k_cap)))
-                & (F.col("_r1") <= F.col("host_budget"))
-            )
-            .drop("_r1")
-            for _, g in gated
-        ])
-    else:
-        survivor_parts = []
-        for seg, g in gated:
-            # join_back=seg: the thin pass reads the gated view once; the
-            # kept keys rejoin the CHECKPOINTED segment, so the big side
-            # never pays a second budget+robots pass — those columns are
-            # re-derived on the tiny kept set below
-            pre = _materialize(
-                membership_prefix_topk(g, state.sketch, join_back=seg)
-            )
-            definite = pre.filter(~F.col("_maybe")).drop("_maybe")
-            sliver = (
-                pre.filter(F.col("_maybe"))
-                .drop("_maybe")
-                .repartition(state.seen.n_parts, "url_hash")
-            )
-            survivor_parts.append(
-                definite.unionByName(state.seen.anti_probe(sliver))
-            )
-        kept = robots_gate(
-            join_host_state(
-                reduce(DataFrame.unionByName, survivor_parts),
-                state.host_state, config.policy,
-            )
-        ).filter(F.col("host_budget") > 0)
+        .drop("_r1")
+        for seg in state.frontier.segments
+    ])
     return per_host_topk_final(kept, "host_budget", k_cap=state.k_cap)
+
+
+def _drop_seen(
+    rows: DataFrame,
+    seen: SegmentedTable,
+    sketch: SketchRef | None,
+    fresh: DataFrame | None = None,
+) -> DataFrame:
+    """``rows`` minus every url_hash in ``seen`` — the engine's only seen
+    check. ``rows`` is in the url_hash layout at ``seen.n_parts``, and so
+    is the output.
+
+    Exact tier (``sketch`` None): the co-partitioned anti-probe of every
+    seen segment.
+
+    Sketch tier: ``rows`` (carrying the sketch's routing columns) route to
+    their bucket slice for membership and back. A row the sketch calls
+    definitely unseen can only be removed by ``fresh`` — keys in ``seen``
+    the sketch does not hold yet (this round's newly-seen segment, whose
+    sketch delta is written concurrently); a maybe-seen row is checked
+    against all of ``seen``. The maybe condition rides the anti-joins
+    instead of splitting the rows, so membership runs once and the layout
+    survives."""
+    if sketch is None:
+        return seen.anti_probe(rows)
+    n = seen.n_parts
+    flagged = sketch_flag_maybe_seen(
+        rows.repartition(n, *sketch.routing), sketch
+    ).repartition(n, "url_hash")
+    for seg in seen.segments:
+        keys = seg.select("url_hash")
+        flagged = flagged.join(
+            keys,
+            (flagged["url_hash"] == keys["url_hash"]) & flagged["_maybe"],
+            "left_anti",
+        )
+    if fresh is not None:
+        flagged = flagged.join(fresh.select("url_hash"), "url_hash", "left_anti")
+    return flagged.drop("_maybe")
 
 
 def crawl_round(
@@ -401,7 +390,7 @@ def crawl_round(
     batch_id = state.batch_id + 1
     n = config.state_buckets
 
-    # 1-4. dedup + politeness + per-host budget selection (see select_round)
+    # 1-4. politeness + per-host budget selection (see select_round)
     selected = select_round(spark, state, config)
 
     # 5. deterministic total order → the round's schedule (the invariant unit)
@@ -532,74 +521,46 @@ def crawl_round(
     )
     delta_plan = insertion_gate(delta, state.host_state)  # never insert dead rows
 
-    # 9. mirror' or sketch' input (whichever the tier keeps): this round's
-    #    newly-seen keys routed by their TRUE (host_bucket, salt) — the same
-    #    routing a future frontier row for the url will carry into its
-    #    mirror anti-join partition / its membership task. Prepared here so
-    #    the mirror segment pin or the sketch delta write (independent of
-    #    the frontier delta) runs CONCURRENTLY with the round's dominant job
-    #    below.
+    # 9. sketch' input (sketch tier only): this round's newly-seen keys
+    #    routed by their TRUE (host_bucket, salt) — the same routing a future
+    #    delta row for the url carries into its membership task. The sketch
+    #    delta write is independent of the frontier delta, so it runs
+    #    CONCURRENTLY with the round's dominant job below; that job's probe
+    #    therefore cannot read it, and anti-probes newly_seen_seg instead.
     sketch = state.sketch
-    seen_sched = state.seen_sched
-    # skip them when nothing became seen this round (drained frontier / all
-    # fetches failed with attempts left): an empty write would leave a
-    # files-less directory and add a useless path to every future membership
-    # side-read. newly_seen_seg is checkpointed, so the emptiness probe is a
-    # cheap partition-local scan.
-    have_newly_seen = not newly_seen_seg.isEmpty()
-    newly_routed = assign_salts_static(
-        fetched.filter(done_cond).select(
-            "url_hash", "url_norm", "host",
-            host_bucket_col(F.col("host")).alias("host_bucket"),
-        ),
-        state.salts,
-    ).repartition(n, *FRONTIER_KEY)
-
     thunks = [
         lambda: mat(
-            seen.anti_probe(_frontier_cols(delta_plan)),
+            _drop_seen(
+                _frontier_cols(delta_plan), seen, sketch, fresh=newly_seen_seg
+            ),
             n_parts=n,
             key=FRONTIER_KEY,
             sort=state.frontier.sort_cols,
         )
     ]
-    mirror_idx = sketch_idx = None
-    if seen_sched is not None and have_newly_seen:
-        mirror_idx = len(thunks)
-        thunks.append(
-            lambda: mat(
-                newly_routed.select("host_bucket", "salt", "url_hash"),
-                n_parts=n,
-                key=FRONTIER_KEY,
-                repartition=False,
-                sort=seen_sched.sort_cols,
-            )
-        )
-    if sketch is not None and have_newly_seen:
+    # skip the write when nothing became seen this round (drained frontier /
+    # all fetches failed with attempts left): an empty write would leave a
+    # files-less directory and add a useless path to every future membership
+    # side-read. newly_seen_seg is checkpointed, so the emptiness probe is a
+    # cheap partition-local scan.
+    if sketch is not None and not newly_seen_seg.isEmpty():
+        newly_routed = assign_salts_static(
+            fetched.filter(done_cond).select(
+                "url_hash", "url_norm", "host",
+                host_bucket_col(F.col("host")).alias("host_bucket"),
+            ),
+            state.salts,
+        ).repartition(n, *sketch.routing)
         sketch_path = os.path.join(state.workdir, f"sketch_delta_{batch_id:06d}")
-        # a resumed pre-schema sketch may route by url_hash — re-key for it
-        for_sketch = (
-            newly_routed
-            if tuple(sketch.routing) == FRONTIER_KEY
-            else newly_routed.repartition(n, *sketch.routing)
-        )
-        sketch_idx = len(thunks)
         thunks.append(
             lambda: write_sketch_delta(
-                for_sketch, sketch_path, sketch, assume_keyed_layout=True
+                newly_routed, sketch_path, sketch, assume_keyed_layout=True
             )
         )
     results = materialize_many(thunks)
     delta = results[0]
-    if mirror_idx is not None:
-        seen_sched = seen_sched.append(results[mirror_idx]).maybe_compact(
-            config.max_segments,
-            materializer=lambda df: mat(
-                df, n_parts=n, key=FRONTIER_KEY, sort=state.seen_sched.sort_cols
-            ),
-        )
-    if sketch_idx is not None:
-        sketch = results[sketch_idx]
+    if len(results) > 1:
+        sketch = results[1]
         if len(sketch.paths) > config.max_segments:
             old_paths = sketch.paths
             sketch = compact_sketch(
@@ -661,7 +622,6 @@ def crawl_round(
         workdir=state.workdir,
         k_cap=state.k_cap,
         salts=state.salts,
-        seen_sched=seen_sched,
     )
 
     if config.durable_state:
@@ -672,10 +632,6 @@ def crawl_round(
 
         drop_durable_segments(spark, state.frontier.segments, frontier.segments)
         drop_durable_segments(spark, state.seen.segments, seen.segments)
-        if state.seen_sched is not None and seen_sched is not None:
-            drop_durable_segments(
-                spark, state.seen_sched.segments, seen_sched.segments
-            )
 
     if store is not None:
         new_state = commit_state(spark, new_state, schedule, fetch_log, store)
@@ -688,7 +644,7 @@ def mark_seen(
     keys_df: DataFrame,
     config: CrawlConfig,
 ) -> CrawlState:
-    """Pre-seed the URL-seen set, coherent across EVERY representation the
+    """Pre-seed the URL-seen set, coherent across every representation the
     state carries — the additive dual of :func:`forget_urls`. Use cases:
     continuing someone else's crawl, or seeding straight from a
     Common-Crawl CDX index (``spiderspark.warc.warc_index`` emits exactly
@@ -697,11 +653,13 @@ def mark_seen(
 
     ``keys_df``: url_hash, url_norm, host. Semantics are EXACTLY the
     crawl_round newly-seen path: already-seen keys are dropped (segments
-    stay disjoint), the remainder is appended to the exact table, routed
-    into the tier's own representation — the scheduler-layout mirror, or a
-    sketch delta (bloom AND cuckoo — insertion is additive) — and matching
-    frontier rows are PRUNED through the same co-partitioned anti-joins as schedule removal,
-    so state never carries rows that can no longer schedule.
+    stay disjoint) — through the same seen check as the round's delta probe,
+    so the sketch tier asks its sketch first — the remainder is appended to
+    the exact table (and, on the sketch tier, written as a sketch delta;
+    bloom AND cuckoo insertion is additive), and matching frontier rows are
+    PRUNED through the same co-partitioned anti-joins as schedule removal,
+    so the frontier never holds a seen key and select_round needs no seen
+    filter.
 
     Cost/scale: O(keys) exchange to route the batch; stored segments are
     probed/rewritten with zero exchange and zero sort on their side."""
@@ -709,13 +667,21 @@ def mark_seen(
     n = state.seen.n_parts
     batch_id = state.batch_id
 
-    keys = keys_df.select("url_hash", "url_norm", "host").dropDuplicates(
-        ["url_hash"]
+    # routed before the seen check: the sketch's membership routes by
+    # (host_bucket, salt), and the frontier prune joins on them
+    routed = assign_salts_static(
+        keys_df.select("url_hash", "url_norm", "host")
+        .dropDuplicates(["url_hash"])
+        .withColumn("host_bucket", host_bucket_col(F.col("host"))),
+        state.salts,
     )
-    keyed = materialize_keyed(keys, n_parts=n, key=state.seen.key)
-    # genuinely-new keys only (keyed layout survives the anti-joins)
-    new_keys = mat(
-        state.seen.anti_probe(keyed), n_parts=n, repartition=False
+    keyed = materialize_keyed(routed, n_parts=n, key=state.seen.key)
+    # genuinely-new keys only, pinned in the url_hash layout; with nothing
+    # seen yet, every key is new
+    new_keys = (
+        mat(_drop_seen(keyed, state.seen, state.sketch), n_parts=n, repartition=False)
+        if state.seen.segments
+        else keyed
     )
     if new_keys.isEmpty():
         return state
@@ -733,29 +699,6 @@ def mark_seen(
         config.max_segments, materializer=lambda df: mat(df, n_parts=n)
     )
 
-    routed = assign_salts_static(
-        new_keys.withColumn("host_bucket", host_bucket_col(F.col("host"))),
-        state.salts,
-    ).repartition(n, *FRONTIER_KEY)
-
-    seen_sched = state.seen_sched
-    if seen_sched is not None:
-        seen_sched = seen_sched.append(
-            mat(
-                routed.select("host_bucket", "salt", "url_hash"),
-                n_parts=n,
-                key=FRONTIER_KEY,
-                repartition=False,
-                sort=seen_sched.sort_cols,
-            )
-        ).maybe_compact(
-            config.max_segments,
-            materializer=lambda df: mat(
-                df, n_parts=n, key=FRONTIER_KEY,
-                sort=state.seen_sched.sort_cols,
-            ),
-        )
-
     sketch = state.sketch
     if sketch is not None:
         import uuid
@@ -765,18 +708,14 @@ def mark_seen(
         sketch_path = os.path.join(
             state.workdir, f"sketch_seed_{uuid.uuid4().hex[:8]}"
         )
-        for_sketch = (
-            routed
-            if tuple(sketch.routing) == FRONTIER_KEY
-            else routed.repartition(n, *sketch.routing)
-        )
         sketch = write_sketch_delta(
-            for_sketch, sketch_path, sketch, assume_keyed_layout=True
+            new_keys.repartition(n, *sketch.routing), sketch_path, sketch,
+            assume_keyed_layout=True,
         )
 
     # prune now-unschedulable frontier rows (same co-partitioned anti-join
     # class as crawl_round's schedule removal)
-    fr_keys = routed.select(*state.frontier.join_cols).repartition(
+    fr_keys = new_keys.select(*state.frontier.join_cols).repartition(
         n, *state.frontier.keys
     )
     f_sort = state.frontier.sort_cols
@@ -793,10 +732,7 @@ def mark_seen(
         tuple(segments), n_parts=n, key=state.frontier.key
     )
 
-    return replace(
-        state, seen=seen, seen_sched=seen_sched, sketch=sketch,
-        frontier=frontier,
-    )
+    return replace(state, seen=seen, sketch=sketch, frontier=frontier)
 
 
 def forget_urls(
@@ -805,16 +741,14 @@ def forget_urls(
     keys_df: DataFrame,
     config: CrawlConfig,
 ) -> CrawlState:
-    """TTL expiry, coherent across EVERY seen representation the state
-    carries: the exact url_hash table plus the tier's own representation —
-    the scheduler-layout mirror (``seen_tier="mirror"``, the default) or
-    the cuckoo sketch (``seen_tier="sketch"``). After
-    this, re-injecting the urls into the frontier (caller's move — fresh
-    priority/depth via ``seeds_to_frontier`` + ``frontier.append``, see
-    tests/test_cuckoo_delete.py) makes the same crawl loop schedule them
-    again. Deleting from only ONE representation is a silent no-op re-crawl
-    under the others — the mirror's anti-join or the sketch's membership
-    pass would still suppress the url — which is why this is one call.
+    """TTL expiry, coherent across every seen representation the state
+    carries: the exact url_hash table, plus the cuckoo sketch on the sketch
+    tier. After this, re-injecting the urls into the frontier (caller's
+    move — fresh priority/depth via ``seeds_to_frontier`` + ``frontier.append``,
+    see tests/test_cuckoo_delete.py; mark_seen pruned them) makes the same
+    crawl loop schedule them again. A url left in the sketch would still
+    be found unseen (its maybe-seen flag is re-checked against the exact
+    table), but as a false positive forever; hence one call for both.
 
     ``keys_df``: url_hash, url_norm, host (the shape a schedule row
     carries). Only urls KNOWN to have entered the seen set may be passed
@@ -855,40 +789,18 @@ def forget_urls(
         n_parts=n, key=state.seen.key,
     )
 
-    routed = assign_salts_static(
-        keys_df.select("url_hash", "url_norm", "host").withColumn(
-            "host_bucket", host_bucket_col(F.col("host"))
-        ),
-        state.salts,
-    )
-
-    seen_sched = state.seen_sched
-    if seen_sched is not None:
-        routed_keys = materialize_keyed(
-            routed.select(*seen_sched.sort_cols),
-            n_parts=seen_sched.n_parts, key=FRONTIER_KEY,
-            sort=seen_sched.sort_cols,
-        )
-        seen_sched = SegmentedTable(
-            tuple(
-                mat(
-                    seg.join(routed_keys, list(seen_sched.sort_cols), "left_anti"),
-                    n_parts=seen_sched.n_parts, key=FRONTIER_KEY,
-                    repartition=False, sort=seen_sched.sort_cols,
-                )
-                for seg in seen_sched.segments
-            ),
-            n_parts=seen_sched.n_parts,
-            key=seen_sched.key,
-            id_col=seen_sched.id_col,
-        )
-
     sketch = state.sketch
     if sketch is not None:
+        routed = assign_salts_static(
+            keys_df.select("url_hash", "url_norm", "host").withColumn(
+                "host_bucket", host_bucket_col(F.col("host"))
+            ),
+            state.salts,
+        )
         out = os.path.join(state.workdir, f"sketch_ttl_{uuid.uuid4().hex[:8]}")
         sketch = sketch_delete(spark, sketch, routed, out)
 
-    return replace(state, seen=seen, seen_sched=seen_sched, sketch=sketch)
+    return replace(state, seen=seen, sketch=sketch)
 
 
 def commit_state(
@@ -908,8 +820,6 @@ def commit_state(
     }
     if state.salts is not None:
         tables["salt_table"] = state.salts
-    if state.seen_sched is not None:
-        tables["seen_sched"] = state.seen_sched.df(spark, SEEN_SCHED)
     partition_by = {}
     if state.sketch is not None:
         tables["seen_sketch"] = sketch_df(spark, state.sketch)
@@ -921,23 +831,24 @@ def commit_state(
 
 
 def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> CrawlState:
-    """§3.3 exact resume: validate lineage, point the tier's seen
-    representation at its stored table — the mirror segments, or the
-    sketch's bucket-partitioned rows (NO rescan of seen, NO driver rebuild)
-    — and continue at batch N+1."""
+    """§3.3 exact resume: validate lineage, read the exact seen table and,
+    on the sketch tier, point the sketch at its stored bucket-partitioned
+    rows (NO rescan of seen, NO driver rebuild) — and continue at batch N+1.
+
+    Every snapshot carries the complete exact table, so a sketch-tier
+    snapshot also resumes under ``seen_tier="exact"`` (its sketch is simply
+    not read). The reverse is refused: an exact-tier snapshot has no
+    sketch, and a sketch that misses seen keys would answer "definitely
+    unseen" for them."""
     snapshot_id = store.head()
     assert snapshot_id is not None, "nothing to resume from"
     assert store.validate(snapshot_id, spark), "lineage validation failed"
     m = store.manifest(snapshot_id)
     n = config.state_buckets
-    # the tier reads exactly one seen representation; a snapshot without it
-    # (written under the other tier) cannot be scheduled by this config
-    need = "seen_sketch" if config.seen_tier == "sketch" else "seen_sched"
-    if need not in m["tables"]:
+    if config.seen_tier == "sketch" and "seen_sketch" not in m["tables"]:
         raise ValueError(
-            f"snapshot {snapshot_id} has no {need!r} table, which "
-            f"seen_tier={config.seen_tier!r} reads; resume with the tier "
-            "the snapshot was written under"
+            f"snapshot {snapshot_id} has no 'seen_sketch' table, which "
+            "seen_tier='sketch' reads; resume it with seen_tier='exact'"
         )
     sketch = None
     if config.seen_tier == "sketch":
@@ -979,10 +890,6 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
                 routing=FRONTIER_KEY, kind=config.sketch_kind,
             )
     host_state = _materialize(store.read(spark, snapshot_id, "host_state"))
-    caps = host_state.agg(F.max("capacity").alias("m")).collect()
-    k_cap = int(
-        max(config.policy.default_budget, (caps[0]["m"] or 0) if caps else 0)
-    )
     salts = (
         _materialize(store.read(spark, snapshot_id, "salt_table"))
         if "salt_table" in m["tables"]
@@ -990,13 +897,6 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
             spark.createDataFrame([], "host string, n_salts int")
         )
     )
-    seen_sched = None
-    if config.seen_tier == "mirror":
-        seen_sched = SegmentedTable.from_df(
-            store.read(spark, snapshot_id, "seen_sched"),
-            n_parts=n,
-            key=FRONTIER_KEY,
-        )
     return CrawlState(
         frontier=SegmentedTable.from_df(
             store.read(spark, snapshot_id, "frontier"),
@@ -1008,10 +908,9 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
         sketch=sketch,
         batch_id=int(m["batch_id"]),
         workdir=tempfile.mkdtemp(prefix="spiderspark-state-"),
-        k_cap=k_cap,
+        k_cap=_k_cap(config.policy, host_state),
         salts=salts,
         snapshot_id=snapshot_id,
-        seen_sched=seen_sched,
     )
 
 

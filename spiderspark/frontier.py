@@ -188,6 +188,7 @@ def with_canonical(
     # after the authority starts the path (PATHQ guarantees one exists);
     # ':' can only occur as the structurally-matched default port, so the
     # ':80'/':443' suffix tests are unambiguous.
+    derived = ("url_norm", "host", "url_hash", "host_bucket")
     p_sep = F.instr(url, "://")
     scheme_l = F.lower(F.substr(url, F.lit(1), p_sep - 1))
     after = F.substr(url, p_sep + 3)
@@ -213,7 +214,7 @@ def with_canonical(
         )
         .withColumn("url_hash", F.xxhash64("url_norm"))
         .withColumn("host_bucket", host_bucket_col(F.col("host")))
-        .select(*df.columns, "url_norm", "host", "url_hash", "host_bucket")
+        .select(*[c for c in df.columns if c not in derived], *derived)
     )
     # NULL url: rlike is NULL → the isNull disjunct routes it to the
     # kernel (which maps it to "" → filtered there), not to limbo
@@ -289,7 +290,7 @@ class SketchRef:
     the table the membership pass runs over (bucket expr == Spark's
     HashPartitioning expr ⇒ one slice per task). ``("url_hash",)`` matches
     the url_hash-keyed state layout; ``("host_bucket", "salt")`` matches the
-    scheduler-layout frontier (see membership_prefix_topk)."""
+    scheduler-layout frontier (the crawl's sketch routing)."""
 
     paths: tuple[str, ...]
     n_buckets: int
@@ -687,182 +688,6 @@ def sketch_flag_maybe_seen(df: DataFrame, ref: SketchRef) -> DataFrame:
         df.withColumn("_bucket", sketch_bucket_col(ref.n_buckets, *ref.routing))
         .mapInPandas(membership, schema=out_schema)
     )
-
-
-# ---------------------------------------------------------------------------
-# Fused membership + guarded-prefix top-k (the scheduler-layout fast path)
-# ---------------------------------------------------------------------------
-
-_PREFIX_ORDER = ("priority", "depth", "discovered_batch", "url_hash")
-
-
-def guarded_prefix_keep(
-    hkey: np.ndarray,
-    priority: np.ndarray,
-    depth: np.ndarray,
-    batch: np.ndarray,
-    keys: np.ndarray,
-    maybe: np.ndarray,
-    k: np.ndarray,
-) -> np.ndarray:
-    """The pure selection kernel of membership_prefix_topk: a boolean keep
-    mask over the input rows (any order).
-
-    Rows are walked per host (hkey) in the engine total order; a
-    definite-unseen row (maybe=False) is kept while its definite-rank ≤ its
-    budget k, a maybe-seen row while FEWER than k definite rows precede it
-    within its host. The kept set is an exact superset of the per-host
-    top-k over the truly-unseen rows for ANY truth assignment consistent
-    with `maybe` (Bloom semantics: maybe=False ⇒ definitely unseen).
-    Property-pinned against a brute-force reference in test_fused_schedule.
-    """
-    n = len(keys)
-    out = np.zeros(n, dtype=bool)
-    if not n:
-        return out
-    order = np.lexsort((keys, batch, depth, priority, hkey))
-    g = hkey[order]
-    is_maybe = maybe[order]
-    d_cum = np.cumsum(~is_maybe)
-    changed = np.empty(n, dtype=bool)
-    changed[0] = True
-    np.not_equal(g[1:], g[:-1], out=changed[1:])
-    run_start = np.flatnonzero(changed)
-    run_id = np.cumsum(changed) - 1
-    run_base = np.concatenate(([0], d_cum[run_start[1:] - 1]))
-    d_incl = d_cum - run_base[run_id]
-    keep = (d_incl + is_maybe.astype(np.int64)) <= k[order]
-    out[order[keep]] = True
-    return out
-
-
-def membership_prefix_topk(
-    df: DataFrame,
-    ref: SketchRef,
-    k_col: str = "host_budget",
-    join_back: DataFrame | None = None,
-    join_strategy: str = "layout",
-) -> DataFrame:
-    """ONE partition-local pass that fuses J2 sketch membership with an
-    EXACT per-host budget pre-selection — the operator that removes the
-    full-candidate (host, salt) window exchange from the scheduling path.
-
-    Requires ``df`` hash-partitioned on ref.routing (the scheduler layout,
-    e.g. (host_bucket, salt)) with the politeness ``k_col`` already joined
-    on. Per partition and per host, rows are walked in the engine total
-    order keeping every row that could still make the host's top-budget
-    after the seen rows are removed: a definite-unseen row (Bloom says
-    unseen — no false negatives) is kept while its definite-rank ≤ budget; a
-    maybe-seen row is kept while FEWER than budget definite rows precede it
-    (if ≥ budget strictly better definitely-unseen rows exist, nothing this
-    row turns out to be can put it in the top-budget). The kept union across
-    partitions/batches is therefore an EXACT superset of the true per-host
-    top-budget over unseen rows — the final small window re-ranks it after
-    the exact anti-join clears the maybes.
-
-    Output: kept rows + ``_maybe`` (False ⇒ definitely unseen). An empty
-    sketch (ref.paths empty) answers False for every row — correct when the
-    sketch holds every seen key, as the crawl state's does by construction
-    (nothing seen yet ⇒ nothing to filter) — so the pass is then a plain
-    exact per-host pre-selection.
-
-    Scale shape: input partitions are complete (host, salt) groups, so kept
-    rows per partition ≈ hosts_in_partition × budget × (1 + seen-share) per
-    Arrow batch — the downstream exchange is O(selected), not O(candidates).
-    The task side-reads exactly its own sketch slice (routing == layout).
-
-    Cost shape: the pandas pass sees an ALL-NUMERIC thin projection (host as
-    a JVM xxhash64 key — string/array columns never cross the Arrow
-    boundary; that conversion would dominate the stage) and emits only
-    (url_hash, _maybe) keys; the kept keys are broadcast-joined back onto
-    ``join_back`` (default ``df``), which preserves its partitioning.
-    Passing the CHECKPOINTED segment as ``join_back`` while ``df`` is the
-    gated/budgeted view of it saves a second full budget+robots pass over
-    the big side — the caller re-derives those columns on the tiny kept
-    set instead. Requires ``df`` deduped on url_hash (state segments are,
-    by invariant).
-
-    ``join_strategy`` picks how the kept keys rejoin the big side:
-
-    - ``"broadcast"`` (the reference the layout join is tested against): the
-      kept-key frame is broadcast and the big side never moves. Breaks when
-      budget × hosts ≫ 10^7 — the kept set is then a driver-sized object.
-    - ``"layout"`` (default, and the 10^10-frontier configuration; also
-      measured fastest in-sandbox: 219k vs 200k URLs/s best-of interleaved
-      at 2M/32 cores): the pandas pass also
-      emits the routing columns; the kept keys are hash-repartitioned on
-      ref.routing (O(kept) exchange) and the join runs on
-      (routing..., url_hash) — layout-satisfied on the big side (hash
-      exprs ⊆ join keys), so the big side moves ZERO bytes and, stored
-      sorted on (routing..., url_hash), sorts zero rows. Nothing is ever
-      driver-sized. Also one fewer driver round-trip: no broadcast-build
-      barrier job before the join job.
-    """
-    paths, n_bits, n_hashes = ref.paths, ref.n_bits, ref.n_hashes
-    # layout mode: emit the routing columns that aren't url_hash itself
-    # (url_hash-routed sketches would otherwise emit a duplicate column);
-    # the join always includes url_hash, so join keys ⊇ routing either way
-    routing = (
-        [c for c in ref.routing if c != "url_hash"]
-        if join_strategy == "layout"
-        else []
-    )
-
-    def fn(batches):
-        fns: dict[int, object] = {}
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            keys = pdf["url_hash"].to_numpy()
-            buckets = pdf["_bucket"].to_numpy()
-            maybe = np.zeros(n, dtype=bool)
-            for b in pd.unique(buckets):
-                f = fns.get(int(b))
-                if f is None:
-                    f = fns[int(b)] = _bucket_membership_fn(
-                        paths, int(b), n_bits, n_hashes
-                    )
-                m = buckets == b
-                maybe[m] = f(keys[m])
-
-            sel = np.flatnonzero(
-                guarded_prefix_keep(
-                    pdf["_hkey"].to_numpy(),
-                    pdf["priority"].to_numpy(),
-                    pdf["depth"].to_numpy(),
-                    pdf["discovered_batch"].to_numpy(),
-                    keys,
-                    maybe,
-                    pdf[k_col].to_numpy(),
-                )
-            )
-            out = {c: pdf[c].to_numpy()[sel] for c in routing}
-            out["url_hash"] = keys[sel]
-            out["_maybe"] = maybe[sel]
-            yield pd.DataFrame(out)
-
-    thin = df.select(
-        "url_hash",
-        F.xxhash64("host").alias("_hkey"),
-        "priority",
-        "depth",
-        "discovered_batch",
-        k_col,
-        sketch_bucket_col(ref.n_buckets, *ref.routing).alias("_bucket"),
-        *routing,
-    )
-    out_schema = ", ".join(
-        [f"{c} int" for c in routing] + ["url_hash long", "_maybe boolean"]
-    )
-    kept_keys = thin.mapInPandas(fn, schema=out_schema)
-    big = join_back if join_back is not None else df
-    if join_strategy == "layout":
-        # repartition on the big side's exact layout columns (ref.routing);
-        # the kept frame carries them all (extras + url_hash)
-        kept_keys = kept_keys.repartition(ref.n_buckets, *ref.routing)
-        return big.join(kept_keys, routing + ["url_hash"])
-    return big.join(F.broadcast(kept_keys), "url_hash")
 
 
 # ---------------------------------------------------------------------------

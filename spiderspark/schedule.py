@@ -13,9 +13,8 @@ split is explicit and two-phase:
   phase 1: per stored (host_bucket, salt) partition, reduce each host to
            the candidates that can still make its budget — heavy hosts are
            split across n_salts partitions, so phase 2's input per heavy
-           host is ≤ n_salts·k rows, not the raw millions. The seen tier
-           decides how (crawl.select_round): a layout-satisfied window
-           (mirror tier) or the fused guarded prefix (sketch tier).
+           host is ≤ n_salts·k rows, not the raw millions — a
+           layout-satisfied window in crawl.select_round.
   phase 2: rank within host on the reduced set (per_host_topk_final) —
            exact same top-k the unsalted plan would pick, skew-free.
 
@@ -78,9 +77,7 @@ def per_host_topk_final(
     candidates: DataFrame, k_col: str = "host_budget", k_cap: int | None = None
 ) -> DataFrame:
     """Phase 2: exact per-host top-k over an already-reduced candidate set
-    (the mirror tier's phase-1 winners, or the output of
-    frontier.membership_prefix_topk after the exact anti-join cleared the
-    maybe-seen rows).
+    (crawl.select_round's phase-1 winners).
 
     ``k_cap``: a LITERAL upper bound on any host's budget. Spark only
     inserts the ``WindowGroupLimit`` physical operator (partial per-group

@@ -51,18 +51,6 @@ SEEN = T.StructType(
     ]
 )
 
-# Exact tier, SCHEDULER-LAYOUT mirror: the seen keys re-keyed by the
-# frontier's (host_bucket, salt) partitioning so per-round seen filtering is
-# a co-partitioned zero-exchange anti-join (round-5 measured default; the
-# bloom sketch remains the low-read-volume tier for seen ≫ memory).
-SEEN_SCHED = T.StructType(
-    [
-        T.StructField("host_bucket", T.IntegerType(), False),
-        T.StructField("salt", T.IntegerType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-    ]
-)
-
 # Approx tier: one row per bloom bucket (SURVEY.md §2.4 A4).
 SEEN_SKETCH = T.StructType(
     [

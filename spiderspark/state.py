@@ -107,7 +107,7 @@ def materialize_many(thunks):
 
     Why this exists: the crawl round's wall time is not only its two big
     jobs — it carries a tail of small layout-pinning checkpoints (frontier
-    segments, mirror segment, politeness state, sketch delta) that each cost
+    segments, newly-seen segment, politeness state, sketch delta) that each cost
     a fixed driver/scheduler round-trip regardless of core count. Run
     serially they are the non-scaling term of the strong-scaling pair
     (measured: ~12 s of an ~40 s 3-round loop at 8 cores, nearly flat from
@@ -163,7 +163,7 @@ def materialize_keyed(
     honored with a partition-local sort (no exchange): plans that are
     already ordered (SMJ outputs) lose it again to Spark's
     RemoveRedundantSorts, so only genuinely-unsorted plans — e.g. the
-    per-round mirror delta, whose plan ends at a repartition — pay it;
+    ingested seed segment, whose plan ends at an aggregate — pay it;
     silently dropping the sort there would make every later round's
     co-partitioned probe re-sort the stored segment instead.
     """

@@ -2,7 +2,7 @@
 over bloom (re-crawl-after-TTL). A URL that was crawled and entered the seen
 state — exact table AND distributed sketch — is expired (deleted from both,
 re-injected into the frontier) and must be scheduled again by the very same
-fused crawl loop that previously suppressed it."""
+crawl loop that previously suppressed it."""
 
 import dataclasses
 import os
@@ -57,7 +57,7 @@ def test_cuckoo_delete_then_recrawl(spark):
     fetched = {r["url_hash"] for r in log1.filter("status = 'fetched'").collect()}
     target = s1.filter(F.col("url_hash").isin(list(fetched))).orderBy("rank").first()
     assert target is not None
-    assert len(state.sketch.paths) > 0  # fused tier active from round 2 on
+    assert len(state.sketch.paths) > 0  # the sketch is probed from round 2 on
 
     # the routed key frame for the target (url_hash + the sketch routing)
     key_df = assign_salts_static(
@@ -110,7 +110,7 @@ def test_cuckoo_delete_then_recrawl(spark):
         sketch=sketch3,
     )
 
-    # the SAME fused loop now re-schedules it
+    # the SAME loop now re-schedules it
     state4, s3, log3 = crawl_round(spark, state3, pk, config)
     assert target["url_hash"] in _hashes(s3)
     # and it re-enters the seen set after the re-fetch
@@ -122,17 +122,15 @@ def test_cuckoo_delete_then_recrawl(spark):
     assert not (others & _hashes(s3))
 
 
-def test_forget_urls_mirror_tier_end_to_end(spark):
-    """TTL expiry under the DEFAULT config: the mirror tier keeps the
-    scheduler-layout seen mirror (and no sketch), and a delete that missed
-    the mirror would be a silent no-op (its anti-join still suppresses the
-    url forever). forget_urls must expire the url from EVERY representation
-    the state carries — exact table and mirror — so the very same mirror
-    loop re-schedules it."""
+def test_forget_urls_exact_tier_end_to_end(spark):
+    """TTL expiry under the DEFAULT config: the exact tier keeps the url_hash
+    seen table and no sketch. forget_urls must expire the url from it, so
+    that after re-injection the same loop re-schedules the url and its
+    re-fetch re-enters the seen set."""
     from spiderspark.crawl import forget_urls
 
     config = CrawlConfig(policy=HostPolicy(default_budget=4.0), state_buckets=N)
-    assert config.seen_tier == "mirror"
+    assert config.seen_tier == "exact"
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(200), 200), schema=PAGES)
     seeds = spark.createDataFrame(seeds_pdf(12, 200), schema=SEEDS)
     pk = keyed_pages(pages, n_parts=N)
@@ -142,8 +140,7 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
     fetched = {r["url_hash"] for r in log1.filter("status = 'fetched'").collect()}
     target = s1.filter(F.col("url_hash").isin(list(fetched))).orderBy("rank").first()
     assert target is not None
-    assert state.seen_sched is not None  # the mirror is live
-    assert state.sketch is None  # ...and the only seen representation
+    assert state.sketch is None  # the exact table is the only seen representation
 
     state2, s2, _ = crawl_round(spark, state, pk, config)
     assert target["url_hash"] not in _hashes(s2)  # suppressed while seen
@@ -153,13 +150,7 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
         "url_hash long, url_norm string, host string",
     )
     state3 = forget_urls(spark, state2, key_df, config)
-    # gone from every representation
     assert target["url_hash"] not in _hashes(state3.seen.df(spark, SEEN))
-    assert target["url_hash"] not in _hashes(
-        state3.seen_sched.segments[0].unionByName(
-            *state3.seen_sched.segments[1:]
-        ) if len(state3.seen_sched.segments) > 1 else state3.seen_sched.segments[0]
-    )
 
     reinjected = materialize_keyed(
         assign_salts_static(
@@ -181,7 +172,7 @@ def test_forget_urls_mirror_tier_end_to_end(spark):
     )
 
     state4, s3, _ = crawl_round(spark, state3, pk, config)
-    assert target["url_hash"] in _hashes(s3)  # re-scheduled by the mirror loop
+    assert target["url_hash"] in _hashes(s3)  # re-scheduled
     assert target["url_hash"] in _hashes(state4.seen.df(spark, SEEN))
     # the targeted expiry touched nothing else
     others = fetched - {target["url_hash"]}

@@ -105,6 +105,24 @@ def test_jvm_split_parity_adversarial(spark):
     _both(spark, ADVERSARIAL)
 
 
+def test_jvm_split_parity_with_derived_columns_present(spark):
+    """Input that already carries the derived columns (re-canonicalizing a
+    frontier or a schedule): both branches replace them, so the split and
+    the kernel-only path return the same rows and one column per name."""
+    df = spark.createDataFrame(
+        [(u, "stale", "stale.example", 7, 99) for u in ADVERSARIAL],
+        "url string, url_norm string, host string, url_hash long, host_bucket int",
+    )
+    fast = with_canonical(df, jvm_fast=True)
+    kernel = with_canonical(df, jvm_fast=False)
+    assert sorted(fast.columns) == sorted(kernel.columns) == sorted(df.columns)
+    cols = sorted(df.columns)
+    assert sorted(map(tuple, fast.select(*cols).collect())) == sorted(
+        map(tuple, kernel.select(*cols).collect())
+    )
+    assert fast.filter("url_norm = 'stale'").count() == 0
+
+
 def test_jvm_split_parity_fuzz(spark):
     """Deterministic fuzz: URL-ish strings assembled from an alphabet that
     includes every gate-relevant character class (scheme case, default and

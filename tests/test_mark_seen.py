@@ -1,7 +1,7 @@
 """mark_seen: pre-seeding the URL-seen set coherently across every
-representation (exact table, scheduler-layout mirror, sketch) plus frontier
-pruning — the additive dual of forget_urls. A pre-seeded url must never be
-scheduled by the same fused loop that schedules it in a control run, a
+representation (exact table, plus the sketch on the sketch tier) plus
+frontier pruning — the additive dual of forget_urls. A pre-seeded url must never be
+scheduled by the same loop that schedules it in a control run, a
 mark_seen → forget_urls round-trip must restore schedulability, and a
 Common-Crawl CDX index (warc_index) must seed directly."""
 
@@ -53,11 +53,11 @@ def _crawl3(spark, config, pk, seeds, preseed=None):
 
 def test_mark_seen_suppresses_scheduling_all_tiers(spark):
     """Control run schedules the target urls; the pre-seeded run never does
-    — under the mirror tier AND the sketch tier (bloom)."""
+    — under the exact tier AND the sketch tier (bloom)."""
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(300), 300), schema=PAGES)
     seeds = spark.createDataFrame(seeds_pdf(30, 300), schema=SEEDS)
     target_ids = list(range(0, 300, 10))  # includes many seed urls
-    for tier in ("mirror", "sketch"):
+    for tier in ("exact", "sketch"):
         config = CrawlConfig(
             policy=HostPolicy(default_budget=1e9), state_buckets=N,
             seen_tier=tier,
@@ -96,8 +96,6 @@ def test_mark_seen_idempotent_and_batch_preserved(spark):
     s2 = mark_seen(spark, s1, keys, config)
     assert s2.seen.total_rows() == 3
     assert s2 is s1  # empty delta short-circuits
-    if s1.seen_sched is not None:
-        assert s1.seen_sched.total_rows() == 3
 
 
 def test_mark_seen_then_forget_restores_scheduling(spark):

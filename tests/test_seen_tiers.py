@@ -1,8 +1,9 @@
-"""Each seen tier keeps exactly one seen representation besides the exact
-url_hash table — the mirror tier a scheduler-layout mirror, the sketch tier
-a distributed sketch — and every state-changing call keeps the frontier and
-the seen set disjoint (frontier ∩ seen = ∅ on url_hash). ``mark_seen``'s
-prune and the round's delta anti-probe both rely on that invariant.
+"""The exact tier keeps only the url_hash seen table; the sketch tier also
+keeps a distributed sketch. Every state-changing call keeps the frontier
+and the seen set disjoint (frontier ∩ seen = ∅ on url_hash) — the invariant
+that lets ``select_round`` read no seen state: ``mark_seen`` prunes, and the
+round's delta probe drops seen keys, including keys that became seen in the
+same round (on the sketch tier those are not in the sketch yet).
 
 Walks one small crawl per tier through init_state → mark_seen → store-backed
 crawl_round ×2 → forget_urls + re-injection → crawl_round → resume, checking
@@ -15,6 +16,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from spiderspark.canon import extract_outlinks_series
 from spiderspark.crawl import (
     FRONTIER_KEY,
     CrawlConfig,
@@ -54,20 +56,19 @@ def _overlap(spark, state) -> int:
 
 def _check(spark, state, tier, step):
     assert _overlap(spark, state) == 0, f"frontier ∩ seen ≠ ∅ after {step}"
-    if tier == "mirror":
-        assert state.sketch is None, step
-        assert state.seen_sched is not None, step
-        assert state.seen_sched.total_rows() == state.seen.total_rows(), step
-    else:
-        assert state.seen_sched is None, step
-        assert state.sketch is not None, step
+    assert (state.sketch is None) == (tier == "exact"), step
+
+
+# what a store-backed round commits on the exact tier: the url_hash seen
+# table is the only seen representation
+EXACT_TABLES = {"frontier", "seen", "host_state", "schedule", "fetch_log", "salt_table"}
 
 
 def _manifest_tables(store) -> set:
     return set(store.manifest(store.head())["tables"])
 
 
-@pytest.mark.parametrize("tier", ["mirror", "sketch"])
+@pytest.mark.parametrize("tier", ["exact", "sketch"])
 def test_frontier_and_seen_stay_disjoint(spark, tier):
     config = _config(tier)
     pages = spark.createDataFrame(gen_pages_pdf(np.arange(CORPUS), CORPUS), schema=PAGES)
@@ -95,10 +96,10 @@ def test_frontier_and_seen_stay_disjoint(spark, tier):
         schedules.append(sched)
         _check(spark, state, tier, f"crawl_round {r}")
         tables = _manifest_tables(store)
-        if tier == "mirror":
-            assert "seen_sketch" not in tables and "seen_sched" in tables
+        if tier == "exact":
+            assert tables == EXACT_TABLES
         else:
-            assert "seen_sketch" in tables and "seen_sched" not in tables
+            assert tables == EXACT_TABLES | {"seen_sketch"}
             assert len(state.sketch.paths) > 0
 
     # TTL expiry of two round-1 urls, then re-injection as fresh frontier rows
@@ -130,12 +131,56 @@ def test_frontier_and_seen_stay_disjoint(spark, tier):
     assert resumed.frontier.total_rows() == state.frontier.total_rows()
     assert resumed.seen.total_rows() == state.seen.total_rows()
 
-    # a snapshot lacks the table the other tier reads: resume refuses
-    other = "sketch" if tier == "mirror" else "mirror"
-    with pytest.raises(ValueError, match="seen_s"):
-        resume(spark, store, _config(other))
+    if tier == "exact":
+        # an exact-tier snapshot has no sketch to read: the sketch tier refuses
+        with pytest.raises(ValueError, match="seen_sketch"):
+            resume(spark, store, _config("sketch"))
+    else:
+        # the exact table is complete: a sketch-tier snapshot resumes exact
+        as_exact = resume(spark, store, _config("exact"))
+        _check(spark, as_exact, "exact", "resume under the exact tier")
+        assert as_exact.frontier.total_rows() == state.frontier.total_rows()
+        assert as_exact.seen.total_rows() == state.seen.total_rows()
+
+
+def test_sketch_tier_same_round_links_stay_out(spark):
+    """Pages fetched in one round that link to each other: the linked urls
+    became seen THIS round, so the round's sketch delta — written
+    concurrently with the frontier delta — cannot hold them yet; the delta
+    probe must still drop them (it also anti-probes the round's newly-seen
+    segment)."""
+    config = _config("sketch")
+    pages_pdf = gen_pages_pdf(np.arange(CORPUS), CORPUS)
+    pages = spark.createDataFrame(pages_pdf, schema=PAGES)
+    # page 0 links to pages 1 and 5: all three are fetched in round 1
+    seeds = spark.createDataFrame(
+        [(u, 0.0) for u in url_for_ids(np.array([0, 1, 5]))], schema=SEEDS
+    )
+    state = init_state(spark, seeds, None, config)
+    state, _, log = crawl_round(spark, state, keyed_pages(pages, n_parts=N), config)
+
+    fetched = {r["url_hash"] for r in log.filter("status = 'fetched'").collect()}
+    urls = with_canonical(spark.createDataFrame(pages_pdf[["url", "html"]]))
+    fetched_pages = urls.filter(F.col("url_hash").isin(list(fetched))).toPandas()
+    links = extract_outlinks_series(
+        fetched_pages["html"].map(bytes), fetched_pages["url"]
+    ).explode().dropna()
+    linked = {
+        r["url_hash"]
+        for r in with_canonical(
+            spark.createDataFrame([(u,) for u in links], ["url"])
+        ).select("url_hash").collect()
+    }
+    same_round = linked & fetched
+    assert len(same_round) > 0, "the fixture must link pages of one round"
+    frontier = {
+        r["url_hash"]
+        for r in state.frontier.df(spark, FRONTIER).select("url_hash").collect()
+    }
+    assert not (same_round & frontier)
+    _check(spark, state, "sketch", "crawl_round 1")
 
 
 def test_seen_tier_is_validated():
     with pytest.raises(ValueError, match="seen_tier"):
-        CrawlConfig(seen_tier="exact")
+        CrawlConfig(seen_tier="mirror")

@@ -64,11 +64,11 @@ def test_materialize_keyed_smj_no_exchange_no_sort(spark):
 
 
 def test_materialize_keyed_repartition_false_honors_sort(spark):
-    """repartition=False + sort must still deliver a SORTED segment: the
-    per-round mirror delta's plan ends at a repartition (no ordering), and
-    a silently-dropped sort would make every later round's co-partitioned
-    anti-probe re-sort the stored side (the round-5 mirror contract is
-    zero exchange AND zero sort on both sides)."""
+    """repartition=False + sort must still deliver a SORTED segment: a
+    plan that ends at a repartition has no ordering, and a silently-dropped
+    sort would make every later round's co-partitioned anti-probe re-sort
+    the stored side (the layout contract is zero exchange AND zero sort on
+    both sides)."""
     keys = ("host_bucket", "salt")
     sort = ("host_bucket", "salt", "url_hash")
     delta = spark.range(0, 4000).select(
