@@ -101,7 +101,7 @@ def run_headline(
 
     from pyspark.sql import functions as F
 
-    from .crawl import CrawlConfig, _materialize, init_state, mark_seen, select_round
+    from .crawl import CrawlConfig, init_state, mark_seen, select_round
     from .frontier import seeds_to_frontier
     from .politeness import HostPolicy
     from .schedule import to_schedule
@@ -137,7 +137,7 @@ def run_headline(
         t2 = time.perf_counter()
         selected = select_round(spark, state, config)
         t3 = time.perf_counter()
-        schedule = to_schedule(selected, batch_id=1, materialize=_materialize)
+        schedule = to_schedule(selected, batch_id=1)
         t4 = time.perf_counter()
         # outside the clock: the determinism digest of the pinned schedule
         row = schedule.agg(

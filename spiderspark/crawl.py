@@ -179,7 +179,7 @@ def outlinks_udf(html: pd.Series, base: pd.Series) -> pd.Series:
 
 def _materialize(df: DataFrame) -> DataFrame:
     """Plain eager materialization for tables with no layout contract
-    (schedule, fetch_log, candidates)."""
+    (fetched pages, host state, salt table)."""
     return df.localCheckpoint(eager=True)
 
 
@@ -394,7 +394,7 @@ def crawl_round(
     selected = select_round(spark, state, config)
 
     # 5. deterministic total order → the round's schedule (the invariant unit)
-    schedule = to_schedule(selected, batch_id, materialize=_materialize)
+    schedule = to_schedule(selected, batch_id)
 
     # 6. "fetch" (sandbox: join pages on url_hash; cluster: swap a fetching
     #    mapInPandas here) + pinned text extraction + lineage/metrics.

@@ -21,11 +21,19 @@ split is explicit and two-phase:
 Salt = pmod(xxhash64(url_norm), n_salts(host)) — deterministic, JVM-side,
 from a per-crawl static table (static_salt_table); n_salts > 1 only for
 hosts flagged heavy by an exact count (A7).
+
+Global rank (to_schedule, O1/O3): one range-partitioned sort of the
+selection, pinned by an eager localCheckpoint. The pin fixes which
+partition every row sits in and its position there, so the rank is a
+narrow projection over the checkpoint: position + 1 + the row counts of the
+lower partitions, summed on the driver from one count job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .state import _aqe_disabled
 
 ORDER_COLS = ("priority", "depth", "discovered_batch", "url_hash")
 SKEW_THRESHOLD = 50_000  # candidates per host before splitting
@@ -98,86 +106,55 @@ def per_host_topk_final(
     )
 
 
-def global_rank(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    persist_registry: list | None = None,
-) -> DataFrame:
-    """O1: total order + a global ``rank`` column WITHOUT a single-partition
-    window. Range-partition on the order key, rank within each partition,
-    then add broadcast per-partition offsets — the scalable global-sort-rank
-    pattern (two passes over an already-small schedule).
-
-    The offsets are collected via a SEPARATE ACTION on purpose: it forces
-    the persisted range-partitioned frame to materialize before anything
-    reads ``spark_partition_id()``. A no-collect formulation (offsets via a
-    window over the counts inside ONE query) measurably produced DUPLICATE
-    ranks: with the cache still lazy, the two branches can observe
-    different recomputations of the nondeterministic partition ids. Do not
-    "optimize" the collect away without pinning the cache first."""
-    sdf = (
-        df.repartitionByRange(
-            num_partitions or df.sparkSession.sparkContext.defaultParallelism,
-            *order_cols(),
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        # persist: the offset pass and the rank pass must not re-execute the
-        # whole upstream scheduling DAG (schedule is budget-bounded small)
-        .persist()
-    )
-    if persist_registry is not None:
-        persist_registry.append(sdf)
-
-    w = Window.partitionBy("_pid").orderBy(*order_cols())
-    ranked = sdf.withColumn("_local", F.row_number().over(w))
-
-    counts = ranked.groupBy("_pid").agg(F.max("_local").alias("_n")).collect()
-    offsets = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["_n"]
-    offset_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, 0)],
-        "_pid int, _offset long",
-    )
-    return (
-        ranked.join(F.broadcast(offset_df), "_pid", "left")
-        .withColumn("rank", (F.col("_local") + F.coalesce("_offset", F.lit(0))).cast("long"))
-        .drop("_pid", "_local", "_offset")
-    )
-
-
-def to_schedule(selected: DataFrame, batch_id: int, materialize=None) -> DataFrame:
+def to_schedule(selected: DataFrame, batch_id: int) -> DataFrame:
     """Project the per-host-top-k output into the SCHEDULE shape with the
-    global deterministic rank.
+    global deterministic ``rank`` (O1) — no single-partition window.
 
-    ``materialize``: optional eager materializer (e.g. localCheckpoint);
-    when given, (a) the thin selection is pinned BEFORE ranking — global
-    rank's range partitioner samples its input in a separate pass, so an
-    unpinned selection would execute the whole upstream scheduling DAG
-    twice (sampling + main exchange); pinning turns the sampling pass into
-    a cheap scan of the O(selected) checkpoint — and (b) the rank
-    intermediate's persist is dropped as soon as the schedule is
-    materialized, so cached blocks don't accumulate across crawl rounds."""
-    registry: list = []
+    One eager pin does the ordering work: the thin selection is
+    range-partitioned on ORDER_COLS, sorted within partitions on the same
+    columns and localCheckpointed, all with AQE off (an adaptive plan would
+    split the range exchange and the counts into extra jobs). Partition ids
+    and row order are stable over checkpointed blocks — the fact fetch_log
+    already relies on — so the ranks come from that pin alone:
+
+        rank = in-partition position + 1 + offset[partition id]
+
+    where the in-partition position is ``monotonically_increasing_id() -
+    (pid << 33)`` and the offsets, summed on the driver from the pin's
+    per-partition row counts, are a literal array. The returned frame is a
+    narrow projection over the checkpoint, so every consumer (a second
+    action, filter, union, repartition, groupBy) reads the same ranks, and
+    the whole cost is paid inside this call. Ranks over an UNPINNED range
+    exchange would not be safe: two executions of a lazy plan may place
+    rows in different partitions."""
+    spark = selected.sparkSession
     thin = selected.select(
         "url", "url_norm", "url_hash", "host", "priority", "depth",
         "discovered_batch", "attempt",
     )
-    if materialize is not None:
-        thin = materialize(thin)
-    ranked = global_rank(thin, persist_registry=registry)
-    out = ranked.select(
+    with _aqe_disabled(spark):
+        pinned = (
+            thin.repartitionByRange(
+                spark.sparkContext.defaultParallelism, *order_cols()
+            )
+            .sortWithinPartitions(*order_cols())
+            .localCheckpoint(eager=True)
+        )
+        counts = dict(
+            pinned.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+        )
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    pid = F.spark_partition_id()
+    position = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    offset = F.array(*[F.lit(o).cast("long") for o in offsets])[pid]
+    return pinned.select(
         F.lit(batch_id).cast("long").alias("batch_id"),
-        F.col("rank"),
+        (position + 1 + offset).alias("rank"),
         "url", "url_norm", "url_hash", "host",
         F.col("priority").cast("double"),
         F.col("depth").cast("int"),
         F.col("attempt").cast("int"),
     )
-    if materialize is not None:
-        out = materialize(out)
-        for h in registry:
-            h.unpersist()
-    return out

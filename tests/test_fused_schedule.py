@@ -7,8 +7,18 @@ frontier never holds a seen key.
 Also pins the physical properties the layout exists for: the within-batch
 dedup plans exchange-free on the (host_bucket, salt) layout, and so does
 select_round's phase-1 window.
+
+The global rank: exactly 1..N in ORDER_COLS order for empty, single-row,
+fewer-rows-than-partitions and multi-thousand-row selections at local[2]
+and local[8], stable under every consumer the engine applies; and
+``to_schedule`` does all of its work inside the call, in a bounded number
+of Spark jobs.
 """
 
+import json
+import os
+import subprocess
+import sys
 import tempfile
 
 import pandas as pd
@@ -28,6 +38,7 @@ from spiderspark.schedule import (
 from spiderspark.schemas import FRONTIER
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_BUCKETS = 4
 
 
@@ -163,3 +174,143 @@ def test_fused_dedup_plans_exchange_free(spark, setup):
     plan = deduped._jdf.queryExecution().executedPlan().toString()
     # exactly the one repartition exchange; none added by the groupBy
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+# ---------------------------------------------------------------------------
+# the global rank: edge cases at two parallelisms, consumers, job budget
+# ---------------------------------------------------------------------------
+
+RANK_SCRIPT = r"""
+import json, os, sys
+sys.path.insert(0, %(root)r)
+os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
+import numpy as np
+import pandas as pd
+from pyspark.sql import functions as F
+from spiderspark.session import get_spark
+from spiderspark.schedule import ORDER_COLS, to_schedule
+
+cores = %(cores)d
+spark = get_spark("rank-edges", cores=cores, shuffle_partitions=cores)
+
+
+def selection(n, seed):
+    # few distinct (priority, depth, discovered_batch) values, so most
+    # order ties are broken by url_hash alone
+    rng = np.random.default_rng(seed)
+    hashes = (rng.choice(1 << 24, n, replace=False) - (1 << 23)) * 549_755_813_889
+    return pd.DataFrame({
+        "url": [f"http://h{h %% 7}.test/p{i}" for i, h in enumerate(hashes)],
+        "url_norm": [f"h{h %% 7}.test/p{i}" for i, h in enumerate(hashes)],
+        "url_hash": hashes.astype("int64"),
+        "host": [f"h{h %% 7}.test" for h in hashes],
+        "priority": rng.integers(0, 3, n).astype("float64"),
+        "depth": rng.integers(0, 2, n).astype("int32"),
+        "discovered_batch": rng.integers(0, 2, n).astype("int64"),
+        "attempt": np.zeros(n, "int32"),
+    })
+
+
+SCHEMA = ("url string, url_norm string, url_hash long, host string, "
+          "priority double, depth int, discovered_batch long, attempt int")
+out = {}
+for n in (0, 1, 5, 5000):
+    pdf = selection(n, n)
+    want = pdf.sort_values(list(ORDER_COLS), kind="mergesort")
+    want_pairs = list(zip(want["url_hash"].tolist(), range(1, n + 1)))
+    sched = to_schedule(spark.createDataFrame(pdf, SCHEMA), batch_id=3)
+
+    def pairs(df):
+        return sorted((r["url_hash"], r["rank"]) for r in df.collect())
+
+    first = sched.select("url_hash", "rank").orderBy("rank").collect()
+    assert [(r["url_hash"], r["rank"]) for r in first] == want_pairs, n
+    assert pairs(sched) == sorted(want_pairs), n  # a second action
+    odd = sched.filter(F.col("rank") %% 2 == 1)
+    assert pairs(odd) == sorted(p for p in want_pairs if p[1] %% 2 == 1), n
+    legs = sched.withColumn("leg", F.lit("a")).unionByName(
+        sched.filter(F.col("priority") < 2).withColumn("leg", F.lit("b"))
+    )
+    got_b = sorted((r["url_hash"], r["rank"]) for r in legs.collect() if r["leg"] == "b")
+    low = set(want.loc[want["priority"] < 2, "url_hash"])
+    assert got_b == sorted(p for p in want_pairs if p[0] in low), n
+    assert pairs(sched.repartition(cores, "url_hash")) == sorted(want_pairs), n
+    by_host = {
+        r["host"]: (r["lo"], r["hi"], r["n"])
+        for r in sched.groupBy("host").agg(
+            F.min("rank").alias("lo"), F.max("rank").alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()
+    }
+    ranked = want.assign(rank=range(1, n + 1))
+    ref = {
+        h: (int(g["rank"].min()), int(g["rank"].max()), len(g))
+        for h, g in ranked.groupby("host")
+    }
+    assert by_host == ref, n
+    assert {r["batch_id"] for r in sched.select("batch_id").collect()} <= {3}
+    out[n] = len(first)
+print("RESULT:" + json.dumps(out))
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("cores", [2, 8])
+def test_rank_edge_cases_at_parallelism(cores):
+    """Ranks are exactly 1..N in ORDER_COLS order (vs a pandas sort) for 0,
+    1, 5 (fewer than the range partitions at local[8]) and 5000 rows, and
+    stay the same after a second action, a filter, a unionByName, a
+    repartition on url_hash and a groupBy on host."""
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, SPIDERSPARK_DRIVER_MEM="1g")
+    env.pop("SPIDERSPARK_MASTER", None)
+    out = subprocess.run(
+        [sys.executable, "-c", RANK_SCRIPT % {"root": ROOT, "cores": cores}],
+        capture_output=True, text=True, timeout=600, env=env, cwd=ROOT,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = [l for l in out.stdout.splitlines() if l.startswith("RESULT:")][-1]
+    assert json.loads(line[len("RESULT:"):]) == {"0": 0, "1": 1, "5": 5, "5000": 5000}
+
+
+def test_to_schedule_does_its_work_inside_the_call(spark, engine):
+    """``to_schedule`` pays for the whole ranking before it returns: it
+    starts at most 5 Spark jobs (upstream selection included), and the
+    frame it returns is a narrow projection of its checkpoint — no
+    exchange, window, aggregate or join left for a consumer to run."""
+    sc = spark.sparkContext
+    cfg = engine["config"]("exact")
+    selected = select_round(spark, engine["states"]["exact"], cfg)
+    group = "to-schedule-job-budget"
+    sc.setJobGroup(group, "to_schedule job budget")
+    try:
+        sched = to_schedule(selected, batch_id=1)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(jobs) <= 5, sorted(jobs)
+    plan = sched._jdf.queryExecution().executedPlan().toString()
+    for op in ("Exchange", "Window", "Aggregate", "Join"):
+        assert op not in plan, plan
+    assert "ExistingRDD" in plan, plan
+    assert sched.count() == len(engine["reference_nothing_seen"])
+
+
+def test_to_schedule_restores_aqe(spark, engine):
+    """The pin runs with AQE off; the session's setting comes back after
+    the call, also when the pinned query fails."""
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    cfg = engine["config"]("exact")
+    selected = select_round(spark, engine["states"]["exact"], cfg)
+    to_schedule(selected, batch_id=1)
+    assert spark.conf.get(key) == "true"
+    broken = selected.withColumn(
+        "priority",
+        F.when(F.col("priority") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("priority"))
+        .cast("double"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        to_schedule(broken, batch_id=1)
+    assert spark.conf.get(key) == "true"

@@ -264,21 +264,68 @@ def test_embedding_near_dups_lsh_recall(spark):
         assert r["cos"] >= 0.95
 
 
+def _persisted_rdds(spark) -> dict:
+    """RDD id → JavaRDD for every RDD the SparkContext holds blocks for.
+    localCheckpoint registers its RDD here too (it persists the blocks), so
+    this sees what the SQL CacheManager does not."""
+    return dict(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _assert_only_local_checkpoints(spark, before: dict) -> None:
+    new = {i: r for i, r in _persisted_rdds(spark).items() if i not in before}
+    assert new, "no RDD was pinned: the check would see nothing"
+    cached = [i for i, r in new.items() if not r.rdd().isLocallyCheckpointed()]
+    assert not cached, f"persist()ed RDDs {cached} outlive the calls"
+
+
 def test_dedup_leaves_no_cache(spark, docs):
     """r08 cache scoping (VERDICT r07 item 4): the dedup families used to
     persist() signature/gram frames and never unpersist them — repeated
     calls in a long-lived session accumulated MEMORY_AND_DISK blocks
-    forever. They now pin intermediates via eager localCheckpoint (released
-    with the result frame), so the session CATALOG cache must stay empty
-    across calls. (Cleared first: the suite shares one session and OTHER
-    tests may leave their own legitimately-persisted frames behind.)"""
+    forever. They now pin intermediates via eager localCheckpoint, whose
+    blocks Spark's ContextCleaner frees once the result frame is garbage
+    collected (not asserted: the JVM's GC timing is not deterministic).
+    Asserted: the session CATALOG cache stays empty across calls, and every
+    RDD the calls left holding blocks is a local checkpoint — so a stray
+    persist() fails here. (The cache is cleared first: the suite shares one
+    session and OTHER tests may leave their own persisted frames behind.)"""
     spark.catalog.clearCache()
+    before = _persisted_rdds(spark)
     for _ in range(2):
         minhash_lsh_pairs(docs, jaccard_threshold=0.5).collect()
         simhash_near_dups(docs).collect()
         ngram_jaccard_pairs(docs).collect()
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty(), "dedup left persisted plans in the cache manager"
+    _assert_only_local_checkpoints(spark, before)
+
+
+def test_crawl_rounds_leave_no_cache(spark):
+    """The crawl pins every intermediate it reuses (schedule, fetched pages,
+    state segments) with localCheckpoint and persist()s nothing: after
+    three rounds the CacheManager is empty and every RDD holding blocks is
+    a local checkpoint."""
+    from spiderspark.crawl import CrawlConfig, crawl
+    from spiderspark.pages import gen_pages_pdf, robots_pdf, seeds_pdf
+    from spiderspark.politeness import HostPolicy
+    from spiderspark.schemas import ROBOTS_TXT, SEEDS
+
+    spark.catalog.clearCache()
+    pages = spark.createDataFrame(
+        gen_pages_pdf(np.arange(200), 200),
+        schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    seeds = spark.createDataFrame(seeds_pdf(15, 200), schema=SEEDS)
+    robots = spark.createDataFrame(robots_pdf(), schema=ROBOTS_TXT)
+    before = _persisted_rdds(spark)
+    _, schedules, _ = crawl(
+        spark, seeds, pages, robots, rounds=3,
+        config=CrawlConfig(policy=HostPolicy(default_budget=2.0)),
+    )
+    assert len(schedules) == 3 and schedules[-1].count() > 0
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert jcm.isEmpty(), "the crawl left persisted plans in the cache manager"
+    _assert_only_local_checkpoints(spark, before)
 
 
 def test_token_count_matches_legacy_regex_forms(spark):
