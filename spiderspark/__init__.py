@@ -22,7 +22,8 @@ Module map (SURVEY.md §7.6):
 - ``textops``     language-ID, quality scoring, token counts, fingerprints
 - ``dedup``       exact / MinHash-LSH / SimHash / n-gram Jaccard near-dup
 - ``ann``         brute-force + LSH-bucketed cosine top-k similarity search
-- ``multimodal``  binary-column (image/audio) plumbing with stubbed decoders
+- ``multimodal``  binary image columns: header-only metadata walks +
+                  vectorized payload features (no pixel/audio decoders)
 """
 
 __version__ = "0.1.0"

@@ -55,7 +55,15 @@ def _pin_once(df: DataFrame) -> DataFrame:
        repeated dedup calls in a long-lived pipeline accumulate nothing
        (asserted in test_pipeline_ops::test_dedup_leaves_no_cache).
 
-    Same O(docs) MEMORY_AND_DISK footprint while alive as the old cache."""
+    Same O(docs) MEMORY_AND_DISK footprint while alive as the old cache.
+
+    Not lineage-safe: localCheckpoint blocks live on the executors that
+    computed them and are NOT recomputable, so losing an executor while
+    the returned frame is alive fails every later action on it. For the
+    same reason it is incompatible with dynamic allocation
+    (``spark.dynamicAllocation.enabled``), which removes idle executors
+    and their blocks with them. Eager: the pass runs when this is called,
+    i.e. when the caller BUILDS its DataFrame, not at its first action."""
     return df.localCheckpoint(eager=True)
 
 
@@ -180,7 +188,11 @@ def minhash_lsh_pairs(
     jaccard_threshold: float = 0.7,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding + exact
-    signature-Jaccard verification. Returns (id_a, id_b, sig_jaccard)."""
+    signature-Jaccard verification. Returns (id_a, id_b, sig_jaccard).
+
+    Building the returned DataFrame runs the minhash signature pass (one
+    eager, executor-local pin; see :func:`_pin_once`), so this call costs
+    a Spark job before any action on its result."""
     rows_per_band = N_HASHES // n_bands
     # pin the signatures once: the banding self-join + the two signature
     # re-attach joins give this frame FOUR consumers — see _pin_once for
@@ -280,7 +292,10 @@ def simhash_near_dups(
 ) -> DataFrame:
     """Hamming-≤3 pairs: bucket on 4×16-bit slices (pigeonhole: any pair
     within distance 3 agrees on ≥1 slice) → equi-join per slice, then exact
-    hamming check via bit_count(xor)."""
+    hamming check via bit_count(xor).
+
+    Building the returned DataFrame runs the simhash signature pass (one
+    eager, executor-local pin; see :func:`_pin_once`)."""
     # pin the 16 B/doc signatures once (the slice self-join's two sides are
     # concurrent consumers — see _pin_once); fan the narrow scan out first
     # so the simhash Arrow pass uses the whole cluster
@@ -343,7 +358,10 @@ def ngram_jaccard_pairs(
     stop-gram ("in the and") degenerates the join to ~quadratic candidates
     at corpus scale. The DuckDB oracle mirrors the cutoff, so the result is
     still exactly checkable. Threshold is applied as the exact rational
-    ``inter ≥ t·union`` (no float-rounding boundary flakiness)."""
+    ``inter ≥ t·union`` (no float-rounding boundary flakiness).
+
+    Building the returned DataFrame runs the gram explode (one eager,
+    executor-local pin; see :func:`_pin_once`)."""
     toks = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
     grams = docs.select(
         F.col(id_col).alias("id"),
@@ -445,6 +463,10 @@ def embedding_near_dups(
     LSH), self-join per table on the bucket key, union, exact verify —
     recall < 1 is possible and pinned by the planted-pair test instead of
     an oracle.
+
+    Building the returned DataFrame runs Spark work: a ``first()`` to read
+    the dimension, then the banding (grid) or bucketing (lsh) pass behind
+    one eager, executor-local pin (see :func:`_pin_once`).
     """
     first = vectors.select(vec_col).first()
     if first is None:  # empty input: no pairs (and no dim to band on)

@@ -1,31 +1,25 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed by Arrow-batched pandas UDFs.
+"""Multimodal column plumbing: images as opaque ``binary`` columns with
+typed metadata, processed by Arrow-batched pandas UDFs.
 
-Decoders, by tier:
+Metadata tiers of :func:`decode_image_batch`:
 
-- ``decoder="fake"`` (default for the driver-contract queries): parses
-  the tiny pinned header format the synthetic generator emits, so the
-  full decode→extract pipeline has a closed-form SQL oracle.
-- ``decoder="real"``: from-scratch stdlib+numpy decoders — PNG (8-bit
-  depth; gray/gray+alpha/RGB/RGBA AND indexed-color with PLTE + optional
-  tRNS alpha; all five scanline filters, multi-IDAT, non-interlaced AND
-  Adam7-interlaced, CRC-checked; zlib inflate via the stdlib),
-  GIF87a/89a (from-scratch LZW, global/local color tables, 4-pass
-  interlacing, GCE transparency; single-image decode returns the first
-  frame, and animations decode fully — every frame, with disposal-method
-  0/1/2/3 compositing — through :func:`gif_frames` / ``sample_frames``),
-  uncompressed 24-bit BMP
-  (BI_RGB, bottom-up or top-down, 4-byte row padding), and huffman-DCT
-  JPEG (see jpeg.py: baseline SOF0/SOF1 AND progressive SOF2 with
-  spectral selection + successive approximation, restart markers,
-  arbitrary chroma subsampling, numpy IDCT, BT.601 color convert).
-  Arithmetic-coded JPEG and compressed audio/video codecs remain
-  documented environmental seams (``valid=false`` rather than a crash).
-  Correctness-first, not throughput-first: PNG filter types Sub/Up are
-  lane-vectorized, Average/Paeth and the JPEG entropy loop pay Python
-  loops — a production pipeline swaps in libjpeg-turbo/PIL behind the
-  SAME one-function seam, and the Spark-side plumbing (schema,
-  partitioning, UDF signature, batch shape) is identical either way.
+- ``decoder="fake"`` (default): parses the tiny pinned header format the
+  synthetic generator emits, vectorized over the whole batch, so the
+  full metadata→feature pipeline has a closed-form SQL oracle.
+- ``decoder="real"``: header-only walks of real wire formats — PNG IHDR
+  (CRC-checked) plus a chunk-header walk for PLTE/tRNS/IDAT, the JPEG
+  marker walk to the SOF segment, the GIF walk to the first image
+  descriptor, and BMP's BITMAPINFOHEADER. One walk per blob; nothing
+  inside a blob is inflated or entropy-decoded, and no pixels are
+  allocated. Dimensions are attacker-controlled at web scale, so every
+  format is held to one pixel budget (:data:`MAX_PIXEL_BYTES`) and a
+  malformed or unsupported blob comes back ``valid=false``, never as an
+  exception.
+
+There are no pixel or audio decoders. Features (:func:`mean_pixel_features`)
+come from the fake tier's payload bytes with one ``reduceat`` kernel per
+batch; a production pipeline would put a native codec behind a UDF of the
+same shape.
 
 Synthetic payload format (deterministic, seed-free):
   b"IMG1" + width:uint16 + height:uint16 + channels:uint8 + payload bytes
@@ -40,9 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from . import jpeg as _jpeg
-from .encoders import encode_png as _encode_png
-from .queries import q, _t
+from .queries import q
 
 IMAGE_META = T.StructType(
     [
@@ -57,6 +49,10 @@ IMAGE_META = T.StructType(
 _MAGIC = b"IMG1"
 _HEADER = struct.Struct("<HHB")
 
+# per-image decoded-size budget (256 MB): a blob whose header claims more
+# pixel bytes than this is invalid, whatever its format
+MAX_PIXEL_BYTES = 256 * 1024 * 1024
+
 
 def encode_fake_image(width: int, height: int, channels: int = 3) -> bytes:
     """Deterministic synthetic 'image': header + (w*h*c % 251) byte ramp."""
@@ -65,283 +61,143 @@ def encode_fake_image(width: int, height: int, channels: int = 3) -> bytes:
     return _MAGIC + _HEADER.pack(width, height, channels) + payload
 
 
-# --- real decoders (PNG spec: RFC 2083 / W3C PNG; BMP: BITMAPINFOHEADER) ---
+# --- header walks (PNG spec: RFC 2083 / W3C PNG; JPEG: ITU-T T.81;
+# GIF89a spec; BMP: BITMAPINFOHEADER) ---------------------------------------
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 # color type → samples per pixel (8-bit depth only; 16-bit rejected).
-# Indexed-color (type 3) is handled separately: 1 index/pixel + PLTE.
+# Indexed-color (type 3) is handled separately: 3 channels, 4 with tRNS.
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
-# per-image decoded-size budget (256 MB): dims are attacker-controlled at
-# web scale; anything larger is rejected as invalid, never allocated.
-# Shared with the JPEG decoder (single source of truth over there).
-_MAX_PIXEL_BYTES = _jpeg.MAX_PIXEL_BYTES
-
-
-def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
-    """Invert the five PNG scanline filters → (height, stride) uint8.
-
-    None/Up are pure row ops; Sub is a per-lane cumulative sum (addition
-    mod 256 is associative, so cumsum(axis=0) % 256 over the (pixels, bpp)
-    lane view inverts it in one vector op); Average/Paeth carry a true
-    left-and-above dependency, so they pay a per-pixel loop vectorized
-    only across the bpp lanes — the correctness tier, not the fast one."""
-    arr = np.frombuffer(raw, dtype=np.uint8)
-    if len(arr) != height * (stride + 1):
-        raise ValueError("bad decompressed length")
-    # validate BEFORE allocating: dims come from attacker-controlled bytes
-    out = np.zeros((height, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    rows = arr.reshape(height, stride + 1)
-    for y in range(height):
-        ftype = int(rows[y, 0])
-        line = rows[y, 1:].astype(np.int32)
-        if ftype == 0:
-            cur = line
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype == 1:  # Sub: per-lane cumsum mod 256
-            lanes = line.reshape(-1, bpp)
-            cur = (np.cumsum(lanes, axis=0) & 0xFF).reshape(stride)
-        elif ftype in (3, 4):  # Average / Paeth
-            cur = np.zeros(stride, dtype=np.int32)
-            zero = np.zeros(bpp, dtype=np.int32)
-            for x0 in range(0, stride, bpp):
-                a = cur[x0 - bpp : x0] if x0 else zero
-                b = prev[x0 : x0 + bpp]
-                if ftype == 3:
-                    pred = (a + b) >> 1
-                else:
-                    c = prev[x0 - bpp : x0] if x0 else zero
-                    p = a + b - c
-                    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
-                    )
-                cur[x0 : x0 + bpp] = (line[x0 : x0 + bpp] + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter {ftype}")
-        prev = cur
-        out[y] = cur.astype(np.uint8)
-    return out
-
-
-# Adam7 pass grid (W3C PNG §8.2): (x0, y0, dx, dy) per pass. A pass is
-# empty (contributes NO scanlines, not even filter bytes) when the image
-# has no pixel at or past its origin.
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _adam7_dims(width: int, height: int):
-    """Per-pass (x0, y0, dx, dy, pw, ph) with empty passes dropped."""
-    out = []
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw > 0 and ph > 0:
-            out.append((x0, y0, dx, dy, pw, ph))
-    return out
-
-
-def _decode_png(buf: bytes):
-    """→ (width, height, channels, pixels (h, w, c) uint8). Raises on any
-    malformation (caller maps that to valid=False). 8-bit depth, color
-    types 0/2/3/4/6 (3 = indexed: PLTE triples, optional tRNS alpha),
-    non-interlaced OR Adam7-interlaced (each pass is an
-    independently filtered sub-image, unfiltered with the same five-filter
-    inverse then scattered to out[y0::dy, x0::dx]), CRC-verified,
-    multi-IDAT."""
-    if buf[:8] != _PNG_MAGIC:
-        raise ValueError("not PNG")
-    pos, ihdr, idat, plte, trns = 8, None, [], None, None
-    while pos + 8 <= len(buf):
-        (clen,) = struct.unpack_from(">I", buf, pos)
-        ctype = buf[pos + 4 : pos + 8]
-        data = buf[pos + 8 : pos + 8 + clen]
-        if len(data) != clen:
-            raise ValueError("truncated chunk")
-        (crc,) = struct.unpack_from(">I", buf, pos + 8 + clen)
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError("CRC mismatch")
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"tRNS":
-            trns = data
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + clen
-    if ihdr is None or not idat:
-        raise ValueError("missing IHDR/IDAT")
-    width, height, depth, ctype_i, comp, filt, interlace = ihdr
-    if depth != 8 or comp != 0 or filt != 0 or interlace not in (0, 1):
-        raise ValueError("unsupported PNG variant")
-    if not width or not height:
-        raise ValueError("unsupported color type")
-    if ctype_i == 3:
-        # indexed-color: stream carries 1 palette index per pixel; PLTE
-        # holds RGB triples, tRNS (optional) per-entry alpha → RGBA out
-        if plte is None or not len(plte) or len(plte) % 3 or len(plte) > 768:
-            raise ValueError("bad or missing PLTE")
-        n_pal = len(plte) // 3
-        if trns is not None and len(trns) > n_pal:
-            raise ValueError("tRNS longer than palette")
-        spp, ch = 1, (4 if trns is not None else 3)
-    elif ctype_i in _PNG_CHANNELS:
-        spp = ch = _PNG_CHANNELS[ctype_i]
-    else:
-        raise ValueError("unsupported color type")
-    if width * height * ch > _MAX_PIXEL_BYTES:
-        raise ValueError("image exceeds decode pixel budget")
-    # bound the inflate by the IHDR-derived exact size: web-scale inputs
-    # are adversarial, and an unbounded zlib.decompress turns a 100 KB
-    # decompression bomb into a multi-GB allocation inside an executor.
-    # decompressobj(max_length) stops at the budget; any trailing
-    # compressed input or a short stream is a malformation, not a crash.
-    # (Adam7's total is the same pixels + one filter byte per sub-row,
-    # still IHDR-derived and checked exactly.)
-    passes = _adam7_dims(width, height) if interlace else None
-    if passes is None:
-        expected = height * (width * spp + 1)
-    else:
-        expected = sum(ph * (pw * spp + 1) for _, _, _, _, pw, ph in passes)
-    d = zlib.decompressobj()
-    raw = d.decompress(b"".join(idat), expected)
-    if d.unconsumed_tail or len(raw) != expected:
-        raise ValueError("IDAT stream does not match IHDR dimensions")
-    if passes is None:
-        samples = _png_unfilter(raw, height, width * spp, spp).reshape(
-            height, width, spp
-        )
-    else:
-        samples = np.zeros((height, width, spp), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy, pw, ph in passes:
-            size = ph * (pw * spp + 1)
-            sub = _png_unfilter(raw[off : off + size], ph, pw * spp, spp)
-            samples[y0::dy, x0::dx] = sub.reshape(ph, pw, spp)
-            off += size
-    if ctype_i != 3:
-        return width, height, ch, samples
-    idx = samples[:, :, 0]
-    lut = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-    if int(idx.max()) >= lut.shape[0]:
-        raise ValueError("palette index out of range")
-    if trns is not None:
-        alpha = np.full(lut.shape[0], 255, dtype=np.uint8)
-        alpha[: len(trns)] = np.frombuffer(trns, dtype=np.uint8)
-        lut = np.concatenate([lut, alpha[:, None]], axis=1)
-    return width, height, ch, lut[idx]
-
-
-def _decode_bmp(buf: bytes):
-    """→ (width, height, 3, pixels (h, w, 3) RGB uint8). Uncompressed
-    24-bit BI_RGB only; rows are 4-byte padded, bottom-up unless the
-    header height is negative (top-down)."""
-    if buf[:2] != b"BM" or len(buf) < 54:
-        raise ValueError("not BMP")
-    (off,) = struct.unpack_from("<I", buf, 10)
-    hsize, width, height = struct.unpack_from("<Iii", buf, 14)
-    planes, bpp = struct.unpack_from("<HH", buf, 26)
-    (compression,) = struct.unpack_from("<I", buf, 30)
-    if hsize < 40 or planes != 1 or bpp != 24 or compression != 0:
-        raise ValueError("unsupported BMP variant")
-    top_down = height < 0
-    height = abs(height)
-    if not width or not height or width < 0:
-        raise ValueError("bad dimensions")
-    stride = (width * 3 + 3) & ~3
-    end = off + stride * height
-    if end > len(buf):
-        raise ValueError("truncated pixel array")
-    rows = np.frombuffer(buf[off:end], dtype=np.uint8).reshape(height, stride)
-    px = rows[:, : width * 3].reshape(height, width, 3)
-    if not top_down:
-        px = px[::-1]
-    return width, height, 3, px[:, :, ::-1]  # BGR → RGB
-
-
 _GIF_MAGICS = (b"GIF87a", b"GIF89a")
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int):
-    """GIF's LZW variant (GIF89a spec Appendix F): LITTLE-endian bit
-    packing, variable code width min+1..12, Clear resets the dictionary,
-    KwKwK self-reference allowed, dictionary capped at 4096. Decodes
-    exactly n_pixels indices (the EOI code, like real-world encoders,
-    is honored but not required once the pixel count is reached)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-
-    def fresh():
-        return [bytes([i]) for i in range(clear)] + [b"", b""], min_code_size + 1
-
-    table, width = fresh()
-    out = bytearray()
-    prev = None
-    acc = nbits = pos = 0
-    while len(out) < n_pixels:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("LZW stream ended early")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table, width = fresh()
-            prev = None
-            continue
-        if code == eoi:
+def _png_header_meta(b: bytes) -> tuple:
+    # IHDR must be the first chunk (PNG spec); CRC-check just it, then
+    # walk chunk HEADERS (skip data by length) for PLTE/tRNS/IDAT
+    (clen,) = struct.unpack_from(">I", b, 8)
+    if clen != 13 or b[12:16] != b"IHDR":
+        raise ValueError("missing IHDR")
+    (crc,) = struct.unpack_from(">I", b, 29)
+    if zlib.crc32(b[12:29]) & 0xFFFFFFFF != crc:
+        raise ValueError("IHDR CRC mismatch")
+    width, height, depth, ctype_i, comp, filt, interlace = struct.unpack(
+        ">IIBBBBB", b[16:29]
+    )
+    if depth != 8 or comp != 0 or filt != 0 or interlace not in (0, 1):
+        raise ValueError("unsupported PNG variant")
+    if ctype_i not in _PNG_CHANNELS and ctype_i != 3:
+        raise ValueError("unsupported color type")
+    if not width or not height:
+        raise ValueError("bad dimensions")
+    pos, has_idat, plte_len, trns_len = 33, False, None, None
+    while pos + 8 <= len(b):
+        (clen,) = struct.unpack_from(">I", b, pos)
+        ctype = b[pos + 4 : pos + 8]
+        if pos + 12 + clen > len(b):
+            raise ValueError("truncated chunk")
+        if ctype == b"IDAT":
+            has_idat = True
+        elif ctype == b"PLTE":
+            plte_len = clen
+        elif ctype == b"tRNS":
+            trns_len = clen
+        elif ctype == b"IEND":
             break
-        if code < len(table) and code != clear and code != eoi:
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]  # KwKwK
-        else:
-            raise ValueError("bad LZW code")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    if len(out) < n_pixels:
-        raise ValueError("LZW stream short of pixels")
-    return np.frombuffer(bytes(out[:n_pixels]), dtype=np.uint8)
+        pos += 12 + clen
+    if not has_idat:
+        raise ValueError("missing IDAT")
+    if ctype_i == 3:
+        # indexed: PLTE mandatory; tRNS upgrades output to RGBA
+        if not plte_len or plte_len % 3 or plte_len > 768:
+            raise ValueError("bad or missing PLTE")
+        if trns_len is not None and trns_len > plte_len // 3:
+            raise ValueError("tRNS longer than palette")
+        ch = 4 if trns_len is not None else 3
+    else:
+        ch = _PNG_CHANNELS[ctype_i]
+    if width * height * ch > MAX_PIXEL_BYTES:
+        raise ValueError("image exceeds decode pixel budget")
+    return width, height, ch, True
+
+
+def jpeg_header_meta(buf: bytes) -> tuple:
+    """Header-only (w, h, channels, valid): walks markers to the first SOF
+    without touching entropy data. Supported: huffman-DCT SOF0/SOF1/SOF2
+    at 8-bit precision, 1 or 3 components, integer-ratio chroma sampling
+    (every component's factor in 1..4 and dividing the frame max).
+    Arithmetic-coded, hierarchical and lossless SOF families, fractional
+    sampling, 12-bit precision and dims past the pixel budget →
+    valid=False."""
+    if buf[:2] != b"\xff\xd8":
+        return 0, 0, 0, False
+    i = 2
+    n = len(buf)
+    try:
+        while i + 4 <= n:
+            if buf[i] != 0xFF:
+                return 0, 0, 0, False
+            marker = buf[i + 1]
+            if marker == 0xFF:  # fill byte
+                i += 1
+                continue
+            if marker in (0xD9, 0xDA):  # EOI / SOS before SOF → malformed
+                return 0, 0, 0, False
+            (seglen,) = struct.unpack_from(">H", buf, i + 2)
+            if seglen < 2 or i + 2 + seglen > n:
+                return 0, 0, 0, False
+            if marker in (0xC0, 0xC1, 0xC2):
+                prec, height, width, nf = struct.unpack_from(
+                    ">BHHB", buf, i + 4
+                )
+                out_ch = 3 if nf == 3 else 1
+                ok = (
+                    prec == 8
+                    and nf in (1, 3)
+                    and width > 0
+                    and height > 0
+                    and width * height * out_ch <= MAX_PIXEL_BYTES
+                    and seglen >= 8 + 3 * nf
+                )
+                if ok and nf == 3:
+                    hs = [buf[i + 11 + 3 * k] >> 4 for k in range(nf)]
+                    vs = [buf[i + 11 + 3 * k] & 0x0F for k in range(nf)]
+                    ok = all(1 <= x <= 4 for x in hs + vs) and all(
+                        max(hs) % x == 0 for x in hs
+                    ) and all(max(vs) % x == 0 for x in vs)
+                return (width, height, out_ch, True) if ok else (0, 0, 0, False)
+            if marker in (
+                0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD,
+                0xCE, 0xCF,
+            ):
+                return 0, 0, 0, False  # arithmetic / unsupported family
+            i += 2 + seglen
+    except struct.error:
+        return 0, 0, 0, False
+    return 0, 0, 0, False
 
 
 def _gif_walk_to_frame(buf: bytes):
-    """Shared header walk: → (pos at first image descriptor's fields,
-    global color table | None, transparent index | None). Raises on
-    malformation; extensions are skipped by sub-block length (the GCE's
-    transparency flag is the one field read)."""
+    """Walk to the first image descriptor → (pos at its fields, has a
+    global color table, transparent index | None). Extensions are skipped
+    by sub-block length (the GCE's transparency flag is the one field
+    read). Raises on malformation."""
     if buf[:6] not in _GIF_MAGICS:
         raise ValueError("not GIF")
     if len(buf) < 13:
         raise ValueError("truncated GIF")
-    _sw, _sh, flags, _bg, _aspect = struct.unpack_from("<HHBBB", buf, 6)
+    flags = buf[10]
     pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        if pos + n * 3 > len(buf):
+    has_gct = bool(flags & 0x80)
+    if has_gct:
+        pos += 3 * (2 << (flags & 0x07))
+        if pos > len(buf):
             raise ValueError("truncated color table")
-        gct = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-        pos += n * 3
     transparent = None
     while True:
         b0 = buf[pos]  # IndexError on truncation → caller maps to invalid
         pos += 1
         if b0 == 0x2C:
-            return pos, gct, transparent
+            return pos, has_gct, transparent
         if b0 == 0x3B:
             raise ValueError("no image data")
         if b0 != 0x21:
@@ -364,340 +220,67 @@ def _gif_walk_to_frame(buf: bytes):
             pos += sz
 
 
-def _gif_frame_header(buf: bytes, pos: int, gct, transparent):
-    """Parse one image descriptor at ``pos`` → (w, h, out_ch, interlaced,
-    color table (n,3), pos after any local color table)."""
-    left_top_wh = struct.unpack_from("<HHHHB", buf, pos)
-    _left, _top, w, h, iflags = left_top_wh
-    pos += 9
-    table = gct
+def _gif_frame_header(buf: bytes, pos: int, has_gct: bool, transparent):
+    """Parse the image descriptor at ``pos`` → (w, h, channels): RGB, or
+    RGBA when the GCE names a transparent index."""
+    _left, _top, w, h, iflags = struct.unpack_from("<HHHHB", buf, pos)
     if iflags & 0x80:
-        n = 2 << (iflags & 0x07)
-        if pos + n * 3 > len(buf):
+        if pos + 9 + 3 * (2 << (iflags & 0x07)) > len(buf):
             raise ValueError("truncated color table")
-        table = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-        pos += n * 3
-    if table is None:
+    elif not has_gct:
         raise ValueError("no color table")
     if not w or not h:
         raise ValueError("bad dimensions")
     ch = 4 if transparent is not None else 3
-    if w * h * ch > _MAX_PIXEL_BYTES:
+    if w * h * ch > MAX_PIXEL_BYTES:
         raise ValueError("image exceeds decode pixel budget")
-    return w, h, ch, bool(iflags & 0x40), table, pos
+    return w, h, ch
 
 
-def _decode_gif(buf: bytes):
-    """→ (width, height, channels, pixels) for the FIRST frame of a
-    GIF87a/GIF89a stream (the crawl-sweep semantics for still images and
-    the cheap single-image path; animations with disposal compositing go
-    through :func:`gif_frames` / the ``sample_frames`` seam). Global/local
-    color tables, 4-pass interlacing, and GCE transparency (transparent
-    index → RGBA with alpha 0) supported; the LZW stream must cover the
-    frame exactly."""
-    pos, gct, transparent = _gif_walk_to_frame(buf)
-    w, h, ch, interlaced, table, pos = _gif_frame_header(
-        buf, pos, gct, transparent
-    )
-    min_code = buf[pos]
-    pos += 1
-    if not (2 <= min_code <= 8):
-        raise ValueError("bad LZW minimum code size")
-    data = bytearray()
-    while True:
-        sz = buf[pos]
-        pos += 1
-        if sz == 0:
-            break
-        if pos + sz > len(buf):
-            raise ValueError("truncated data sub-block")
-        data += buf[pos : pos + sz]
-        pos += sz
-    idx = _gif_lzw_decode(bytes(data), min_code, w * h).reshape(h, w)
-    if interlaced:
-        idx = _gif_deinterlace(idx)
-    if int(idx.max()) >= table.shape[0]:
-        raise ValueError("color index out of range")
-    lut = table
-    if transparent is not None:
-        alpha = np.full(table.shape[0], 255, dtype=np.uint8)
-        if transparent < table.shape[0]:
-            alpha[transparent] = 0
-        lut = np.concatenate([table, alpha[:, None]], axis=1)
-    return w, h, ch, lut[idx]
-
-
-def _gif_deinterlace(idx: np.ndarray) -> np.ndarray:
-    """Invert the 4-pass interlaced row order: stored row i → display
-    row order[i]."""
-    h = idx.shape[0]
-    order = (
-        list(range(0, h, 8)) + list(range(4, h, 8))
-        + list(range(2, h, 4)) + list(range(1, h, 2))
-    )
-    out = np.zeros_like(idx)
-    out[order] = idx
-    return out
-
-
-def _gif_iter_frames(buf: bytes):
-    """STRUCTURAL walk of every frame in a GIF stream — no LZW decode, no
-    pixel allocation. Yields one dict per image descriptor with the frame
-    rect, its color table, the preceding Graphic Control Extension state
-    (disposal method, delay in centiseconds, transparent index — GIF89a
-    §23: one GCE governs the single following image, then resets), and
-    the raw concatenated LZW bytes + minimum code size. Counting frames
-    is ``sum(1 for _ in _gif_iter_frames(b))`` at header-walk cost.
-    Raises ValueError on malformation (IndexError on truncation — callers
-    map both to invalid)."""
-    if buf[:6] not in _GIF_MAGICS:
-        raise ValueError("not GIF")
-    if len(buf) < 13:
-        raise ValueError("truncated GIF")
-    sw, sh, flags, _bg, _aspect = struct.unpack_from("<HHBBB", buf, 6)
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        if pos + n * 3 > len(buf):
-            raise ValueError("truncated color table")
-        gct = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-        pos += n * 3
-    gce = (0, 0, None)  # (disposal, delay_cs, transparent)
-    while True:
-        b0 = buf[pos]  # IndexError on truncation → caller maps to invalid
-        pos += 1
-        if b0 == 0x3B:
-            return
-        if b0 == 0x21:
-            label = buf[pos]
-            pos += 1
-            first = True
-            while True:
-                sz = buf[pos]
-                pos += 1
-                if sz == 0:
-                    break
-                if pos + sz > len(buf):
-                    raise ValueError("truncated sub-block")
-                if label == 0xF9 and first and sz >= 4:
-                    gflags, delay, tidx = struct.unpack_from("<BHB", buf, pos)
-                    gce = (
-                        (gflags >> 2) & 0x07,
-                        delay,
-                        tidx if gflags & 0x01 else None,
-                    )
-                first = False
-                pos += sz
-        elif b0 == 0x2C:
-            left, top, w, h, iflags = struct.unpack_from("<HHHHB", buf, pos)
-            pos += 9
-            table = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                if pos + n * 3 > len(buf):
-                    raise ValueError("truncated color table")
-                table = np.frombuffer(buf, np.uint8, n * 3, pos).reshape(-1, 3)
-                pos += n * 3
-            if table is None:
-                raise ValueError("no color table")
-            if not w or not h:
-                raise ValueError("bad dimensions")
-            min_code = buf[pos]
-            pos += 1
-            if not (2 <= min_code <= 8):
-                raise ValueError("bad LZW minimum code size")
-            data = bytearray()
-            while True:
-                sz = buf[pos]
-                pos += 1
-                if sz == 0:
-                    break
-                if pos + sz > len(buf):
-                    raise ValueError("truncated data sub-block")
-                data += buf[pos : pos + sz]
-                pos += sz
-            disposal, delay_cs, transparent = gce
-            yield {
-                "screen": (sw, sh),
-                "left": left, "top": top, "w": w, "h": h,
-                "interlaced": bool(iflags & 0x40),
-                "table": table,
-                "disposal": disposal,
-                "delay_cs": delay_cs,
-                "transparent": transparent,
-                "min_code": min_code,
-                "lzw": bytes(data),
-            }
-            gce = (0, 0, None)
-        else:
-            raise ValueError("unknown GIF block")
-
-
-def gif_frames(buf: bytes):
-    """Decode EVERY frame of a (possibly animated) GIF with full disposal
-    compositing — the animation counterpart of :func:`_decode_gif`.
-    Lazily yields ``(frame_idx, rgba)`` where ``rgba`` is the (sh, sw, 4)
-    uint8 snapshot of the LOGICAL SCREEN after the frame is drawn, so a
-    sampling caller (``sample_frames``) can stop paying LZW cost at its
-    last kept frame.
-
-    Pinned compositing semantics (GIF89a §23 Graphic Control Extension):
-
-    - the canvas starts fully transparent (0, 0, 0, 0);
-    - a frame's transparent-index pixels leave the canvas untouched; all
-      other pixels are written opaque (alpha 255);
-    - disposal 0 (unspecified) and 1 (do not dispose): the drawn frame
-      stays on the canvas;
-    - disposal 2 (restore to background): the frame's RECT is cleared to
-      transparent after the snapshot — the universal renderer convention
-      (browsers, Pillow); the spec's literal 'background color' predates
-      transparency and no modern renderer paints it;
-    - disposal 3 (restore to previous): the canvas reverts to its
-      pre-frame state after the snapshot.
-
-    Raises ValueError on malformation, a frame rect outside the logical
-    screen, or a canvas/frame over the shared pixel budget; raises on an
-    image-less stream only at first iteration.
-    """
-    canvas = None
-    for i, fr in enumerate(_gif_iter_frames(buf)):
-        if canvas is None:
-            sw, sh = fr["screen"]
-            if not sw or not sh:
-                raise ValueError("bad logical screen")
-            if sw * sh * 4 > _MAX_PIXEL_BYTES:
-                raise ValueError("canvas exceeds decode pixel budget")
-            canvas = np.zeros((sh, sw, 4), dtype=np.uint8)
-        w, h, left, top = fr["w"], fr["h"], fr["left"], fr["top"]
-        if left + w > canvas.shape[1] or top + h > canvas.shape[0]:
-            raise ValueError("frame rect outside logical screen")
-        if w * h * 4 > _MAX_PIXEL_BYTES:
-            raise ValueError("image exceeds decode pixel budget")
-        idx = _gif_lzw_decode(fr["lzw"], fr["min_code"], w * h).reshape(h, w)
-        if fr["interlaced"]:
-            idx = _gif_deinterlace(idx)
-        table = fr["table"]
-        if int(idx.max()) >= table.shape[0]:
-            raise ValueError("color index out of range")
-        saved = (
-            canvas[top : top + h, left : left + w].copy()
-            if fr["disposal"] == 3
-            else None
-        )
-        region = canvas[top : top + h, left : left + w]
-        if fr["transparent"] is None:
-            region[:, :, :3] = table[idx]
-            region[:, :, 3] = 255
-        else:
-            mask = idx != fr["transparent"]
-            region[mask, :3] = table[idx][mask]
-            region[mask, 3] = 255
-        yield i, canvas.copy()
-        if fr["disposal"] == 2:
-            canvas[top : top + h, left : left + w] = 0
-        elif fr["disposal"] == 3:
-            canvas[top : top + h, left : left + w] = saved
-    if canvas is None:
-        raise ValueError("no image data")
+def _bmp_header_meta(b: bytes) -> tuple:
+    if len(b) < 54:
+        raise ValueError("not BMP")
+    (off,) = struct.unpack_from("<I", b, 10)
+    hsize, width, height = struct.unpack_from("<Iii", b, 14)
+    planes, bpp = struct.unpack_from("<HH", b, 26)
+    (compression,) = struct.unpack_from("<I", b, 30)
+    if hsize < 40 or planes != 1 or bpp != 24 or compression != 0:
+        raise ValueError("unsupported BMP variant")
+    height_abs = abs(height)  # negative height = top-down rows
+    if not width or not height_abs or width < 0:
+        raise ValueError("bad dimensions")
+    if width * height_abs * 3 > MAX_PIXEL_BYTES:
+        raise ValueError("image exceeds decode pixel budget")
+    stride = (width * 3 + 3) & ~3
+    if off + stride * height_abs > len(b):
+        raise ValueError("truncated pixel array")
+    return width, height_abs, 3, True
 
 
 def image_header_meta(blob) -> tuple:
-    """One blob → (width, height, channels, valid) from HEADERS ONLY — no
-    inflate, no unfilter, no pixel allocation. The metadata path of
-    decode_image_batch(decoder='real') uses this: a 100 TB metadata sweep
-    should not pay a full pixel decode per image just to report dims.
+    """One blob → (width, height, channels, valid) from HEADERS ONLY.
 
-    'valid' here means STRUCTURALLY valid: magic + header parse, the same
-    supported-variant checks as the pixel decoders (8-bit PNG color
-    types 0/2/3/4/6 incl. indexed with PLTE/tRNS, non-interlaced or
-    Adam7; huffman-DCT JPEG
-    SOF0/SOF1/SOF2 via jpeg_header_meta;
-    24-bit BI_RGB BMP with an in-bounds pixel array; complete IMG1
-    payload), the 256 MB pixel budget, IHDR CRC, and IDAT presence for
-    PNG. Deep validity (per-chunk CRCs, inflate-vs-IHDR consistency,
-    entropy-stream integrity) is only asserted on the pixel paths
-    (decode_image_real) — a blob can be header-valid yet fail the full
-    decode."""
+    'valid' means STRUCTURALLY valid: magic and header parse, a supported
+    variant (8-bit PNG color types 0/2/3/4/6, non-interlaced or Adam7,
+    indexed with a well-formed PLTE and a tRNS no longer than it, at least
+    one IDAT; huffman-DCT JPEG per :func:`jpeg_header_meta`; GIF with a
+    color table for its first frame; 24-bit BI_RGB BMP with an in-bounds
+    pixel array; complete IMG1 payload), the IHDR CRC, and the pixel
+    budget. Entropy streams, IDAT contents and other chunks' CRCs are not
+    read, so a header-valid blob may still hold corrupt pixel data."""
     if blob is None:
         return 0, 0, 0, False
     b = bytes(blob)
     try:
         if b[:8] == _PNG_MAGIC:
-            # IHDR must be the first chunk (PNG spec); CRC-check just it,
-            # then walk chunk HEADERS (skip data by length) for an IDAT
-            (clen,) = struct.unpack_from(">I", b, 8)
-            if clen != 13 or b[12:16] != b"IHDR":
-                raise ValueError("missing IHDR")
-            (crc,) = struct.unpack_from(">I", b, 29)
-            if zlib.crc32(b[12:29]) & 0xFFFFFFFF != crc:
-                raise ValueError("IHDR CRC mismatch")
-            width, height, depth, ctype_i, comp, filt, interlace = (
-                struct.unpack(">IIBBBBB", b[16:29])
-            )
-            if depth != 8 or comp != 0 or filt != 0 or interlace not in (0, 1):
-                raise ValueError("unsupported PNG variant")
-            if (
-                ctype_i not in _PNG_CHANNELS and ctype_i != 3
-            ) or not width or not height:
-                raise ValueError("unsupported color type")
-            pos, has_idat, plte_len, trns_len = 33, False, None, None
-            while pos + 8 <= len(b):
-                (clen,) = struct.unpack_from(">I", b, pos)
-                ctype = b[pos + 4 : pos + 8]
-                if pos + 12 + clen > len(b):
-                    raise ValueError("truncated chunk")
-                if ctype == b"IDAT":
-                    has_idat = True
-                elif ctype == b"PLTE":
-                    plte_len = clen
-                elif ctype == b"tRNS":
-                    trns_len = clen
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + clen
-            if not has_idat:
-                raise ValueError("missing IDAT")
-            if ctype_i == 3:
-                # indexed: PLTE mandatory; tRNS upgrades output to RGBA
-                if not plte_len or plte_len % 3 or plte_len > 768:
-                    raise ValueError("bad or missing PLTE")
-                if trns_len is not None and trns_len > plte_len // 3:
-                    raise ValueError("tRNS longer than palette")
-                ch = 4 if trns_len is not None else 3
-            else:
-                ch = _PNG_CHANNELS[ctype_i]
-            if width * height * ch > _MAX_PIXEL_BYTES:
-                raise ValueError("image exceeds decode pixel budget")
-            return width, height, ch, True
+            return _png_header_meta(b)
         if b[:2] == b"\xff\xd8":
-            return _jpeg.jpeg_header_meta(b)
+            return jpeg_header_meta(b)
         if b[:6] in _GIF_MAGICS:
-            # walk to the first image descriptor (sub-blocks skipped by
-            # length — no LZW decode) for true frame dims + channels
-            pos, gct, transparent = _gif_walk_to_frame(b)
-            w, h, ch, _inter, _table, _pos = _gif_frame_header(
-                b, pos, gct, transparent
-            )
-            return w, h, ch, True
+            pos, has_gct, transparent = _gif_walk_to_frame(b)
+            return (*_gif_frame_header(b, pos, has_gct, transparent), True)
         if b[:2] == b"BM":
-            if len(b) < 54:
-                raise ValueError("not BMP")
-            (off,) = struct.unpack_from("<I", b, 10)
-            hsize, width, height = struct.unpack_from("<Iii", b, 14)
-            planes, bpp = struct.unpack_from("<HH", b, 26)
-            (compression,) = struct.unpack_from("<I", b, 30)
-            if hsize < 40 or planes != 1 or bpp != 24 or compression != 0:
-                raise ValueError("unsupported BMP variant")
-            height_abs = abs(height)
-            if not width or not height_abs or width < 0:
-                raise ValueError("bad dimensions")
-            if width * height_abs * 3 > _MAX_PIXEL_BYTES:
-                raise ValueError("image exceeds decode pixel budget")
-            stride = (width * 3 + 3) & ~3
-            if off + stride * height_abs > len(b):
-                raise ValueError("truncated pixel array")
-            return width, height_abs, 3, True
+            return _bmp_header_meta(b)
         if b[:4] == _MAGIC:
             w, h, c = _HEADER.unpack_from(b, 4)
             n = w * h * c
@@ -705,54 +288,16 @@ def image_header_meta(blob) -> tuple:
                 raise ValueError("truncated IMG1 payload")
             return w, h, c, True
         raise ValueError("unknown format")
-    except (ValueError, zlib.error, struct.error, IndexError):
+    except (ValueError, struct.error, IndexError):
         return 0, 0, 0, False
 
 
-def decode_image_real(blob) -> tuple:
-    """One blob → (width, height, channels, pixels | None, valid). Format
-    sniffed by magic (PNG, huffman-DCT JPEG, GIF, BMP, IMG1); anything
-    undecodable (arithmetic-coded JPEG, junk, None) comes back
-    valid=False — corrupt rows are data, not exceptions."""
-    if blob is None:
-        return 0, 0, 0, None, False
-    b = bytes(blob)
-    try:
-        if b[:8] == _PNG_MAGIC:
-            w, h, c, px = _decode_png(b)
-        elif b[:2] == b"\xff\xd8":
-            w, h, c, px = _jpeg.decode_jpeg(b)
-        elif b[:6] in _GIF_MAGICS:
-            w, h, c, px = _decode_gif(b)
-        elif b[:2] == b"BM":
-            w, h, c, px = _decode_bmp(b)
-        elif b[:4] == _MAGIC:
-            w, h, c = _HEADER.unpack_from(b, 4)
-            n = w * h * c
-            if len(b) < 9 + n or not n:
-                raise ValueError("truncated IMG1 payload")
-            px = np.frombuffer(b, dtype=np.uint8, count=n, offset=9).reshape(
-                h, w, c
-            )
-        else:
-            raise ValueError("unknown format")
-        return w, h, c, px, True
-    except (ValueError, zlib.error, struct.error, IndexError):
-        return 0, 0, 0, None, False
-
-
 def decode_image_batch(blobs: pd.Series, decoder: str = "fake") -> pd.DataFrame:
-    """Batch decode → metadata DataFrame, vectorized: the 9-byte headers of
-    the whole batch are gathered into ONE (n, 9) uint8 matrix and all field
-    extraction (magic check, little-endian u16 width/height, u8 channels)
-    runs as numpy column ops — no per-row struct.unpack, no per-row tuples.
-    decoder='real' dispatches per blob on the sniffed magic to the
-    HEADER-ONLY parser (image_header_meta): metadata needs dims + a
-    structural validity check, not an inflate+unfilter per image — the
-    full pixel decode is reserved for the feature/resize paths (for JPEG
-    that means marker-walk to the SOF, never entropy decode).
-    Arithmetic-coded JPEG → valid=False (huffman-only decoder,
-    jpeg.py)."""
+    """Batch decode → metadata DataFrame. The fake tier is vectorized: the
+    9-byte headers of the whole batch are gathered into ONE (n, 9) uint8
+    matrix and all field extraction (magic check, little-endian u16
+    width/height, u8 channels) runs as numpy column ops. decoder='real'
+    runs :func:`image_header_meta` once per blob."""
     if decoder == "real":
         n = len(blobs)
         width = np.zeros(n, dtype=np.int32)
@@ -817,40 +362,17 @@ def image_meta_udf(blob: pd.Series) -> pd.DataFrame:
     return decode_image_batch(blob)
 
 
-def mean_pixel_features(
-    df: DataFrame, blob_col: str = "img", decoder: str = "fake"
-) -> DataFrame:
-    """Feature-extraction shape: binary → fixed-width float vector via
-    mapInPandas (the batch shape a real embedding model would use).
-    decoder='real' runs the PNG/BMP decoders and computes the stats over
-    the DECODED pixel samples; 'fake' keeps the closed-form payload path
-    the driver oracle checks."""
+def mean_pixel_features(df: DataFrame, blob_col: str = "img") -> DataFrame:
+    """Feature-extraction shape: binary → fixed-width float vector
+    (mean, std, min, max of the IMG1 payload bytes) via mapInPandas, the
+    batch shape a real embedding model would use. Invalid or null blobs
+    get all-zero features."""
     out_schema = T.StructType(
         [
             T.StructField("item_id", T.LongType()),
             T.StructField("feat", T.ArrayType(T.DoubleType())),
         ]
     )
-
-    def extract_real(batches):
-        for pdf in batches:
-            n = len(pdf)
-            feats = np.zeros((n, 4), dtype=np.float64)
-            for i, b in enumerate(pdf[blob_col]):
-                _w, _h, _c, px, ok = decode_image_real(b)
-                if ok and px is not None and px.size:
-                    f = px.astype(np.float64)
-                    feats[i] = [f.mean(), f.std(), f.min(), f.max()]
-            yield pd.DataFrame({"item_id": pdf["item_id"], "feat": list(feats)})
-
-    if decoder == "real":
-        return df.mapInPandas(extract_real, schema=out_schema)
-    if decoder != "fake":
-        # mirror decode_image_batch: a typo'd tier must fail loudly on the
-        # driver, not silently fall through to all-zero fake features
-        raise NotImplementedError(
-            "unknown decoder tier: " + decoder + " (use 'fake' or 'real')"
-        )
 
     def extract(batches):
         for pdf in batches:
@@ -888,23 +410,76 @@ def mean_pixel_features(
     return df.mapInPandas(extract, schema=out_schema)
 
 
+# --- header-valid wire bytes for the real tier -----------------------------
+
+
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    crc = zlib.crc32(tag + data) & 0xFFFFFFFF
+    return struct.pack(">I", len(data)) + tag + data + struct.pack(">I", crc)
+
+
+def _real_blob(fmt: int, w: int, h: int, v: int) -> bytes:
+    """Wire bytes of format ``fmt`` (0 PNG gray, 1 PNG RGB, 2 PNG indexed,
+    3 GIF, 4 BMP, 5 baseline JPEG) for a w×h image of value ``v``, padded
+    to exactly 1024 bytes with elements the header walk skips. The pixel
+    data is well-framed but not meant to be decoded."""
+    if fmt <= 2:
+        ctype, spp = ((0, 1), (2, 3), (3, 1))[fmt]
+        ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
+        plte = b""
+        if fmt == 2:
+            plte = _png_chunk(b"PLTE", bytes([v] * 3 + [v + 17] * 3))
+        # filter-type-0 scanlines
+        idat = _png_chunk(b"IDAT", zlib.compress(bytes(1 + w * spp) * h))
+        head = _PNG_MAGIC + _png_chunk(b"IHDR", ihdr) + plte
+        tail = idat + _png_chunk(b"IEND", b"")
+        # ancillary, private, safe-to-copy chunk: 12 bytes of framing
+        pad = _png_chunk(b"spAd", bytes(1024 - len(head) - len(tail) - 12))
+        return head + pad + tail
+    if fmt == 3:
+        # logical screen descriptor with a 2-entry global color table, one
+        # image descriptor, LZW minimum code size 2 and one sub-block
+        # holding the clear and end codes, then the trailer
+        out = (
+            b"GIF89a"
+            + struct.pack("<HHBBB", w, h, 0x80, 0, 0)
+            + bytes([v] * 3 + [v + 17] * 3)
+            + b"\x2c"
+            + struct.pack("<HHHHB", 0, 0, w, h, 0)
+            + b"\x02\x01\x2c\x00\x3b"
+        )
+    elif fmt == 4:
+        stride = (w * 3 + 3) & ~3
+        out = (
+            b"BM"
+            + struct.pack("<IHHI", 54 + stride * h, 0, 0, 54)
+            + struct.pack(
+                "<IiiHHIIiiII", 40, w, h, 1, 24, 0, stride * h, 0, 0, 0, 0
+            )
+            + bytes([v]) * (stride * h)
+        )
+    else:
+        # SOI + SOF0 (8-bit, one component, 1x1 sampling, quant table 0),
+        # then a COM segment pads to 1022 bytes before EOI
+        sof = (
+            b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1)
+            + b"\x01\x11\x00"
+        )
+        com_len = 1024 - 2 - len(sof) - 2 - 2
+        return (
+            b"\xff\xd8" + sof + b"\xff\xfe" + struct.pack(">H", com_len)
+            + bytes(com_len - 2) + b"\xff\xd9"
+        )
+    return out + bytes(1024 - len(out))
+
+
 def synthetic_real_media_df(spark, n: int = 64) -> DataFrame:
     """Deterministic REAL-wire-format media table — a pure function of
-    item_id, so the driver's DuckDB oracle can state every decoded property
-    closed-form (see spiderspark.encoders). Per row i: every 11th null,
-    every 13th junk bytes (len 24); otherwise format i%6 ∈ (PNG gray, PNG
-    RGB, PNG indexed, GIF [interlaced on odd i//6], BMP, baseline JPEG),
-    dims (6 + 2*(i%5)) × (4 + i%9) — width EVEN so the checkerboard stats
-    are exact — values v / v+17 with v = 30 + (i*7)%190 (JPEG rows constant
-    v), every blob padded to exactly 1024 bytes via spec-skippable
-    elements."""
-    from .encoders import (
-        encode_bmp,
-        encode_gif,
-        encode_jpeg_const_gray,
-        encode_png,
-    )
-
+    item_id, so the driver's DuckDB oracle can state every header property
+    closed-form. Per row i: every 11th null, every 13th junk bytes (len
+    24); otherwise format i%6 ∈ (PNG gray, PNG RGB, PNG indexed, GIF,
+    BMP, baseline JPEG), dims (6 + 2*(i%5)) × (4 + i%9), value
+    v = 30 + (i*7)%190, every blob exactly 1024 bytes."""
     rows = []
     for i in range(n):
         if i % 11 == 10:
@@ -912,31 +487,8 @@ def synthetic_real_media_df(spark, n: int = 64) -> DataFrame:
         elif i % 13 == 12:
             blob = b"NOPE" + bytes([i % 256]) * 20
         else:
-            fmt = i % 6
-            w, h = 6 + 2 * (i % 5), 4 + i % 9
-            v = 30 + (i * 7) % 190
-            xs, ys = np.meshgrid(np.arange(w), np.arange(h))
-            checker = (v + 17 * ((xs + ys) % 2)).astype(np.uint8)
-            pal = np.array([[v] * 3, [v + 17] * 3], dtype=np.uint8)
-            idx = ((xs + ys) % 2).astype(np.uint8)
-            if fmt == 0:
-                blob = encode_png(checker, pad_to=1024)
-            elif fmt == 1:
-                blob = encode_png(
-                    np.repeat(checker[:, :, None], 3, axis=2), pad_to=1024
-                )
-            elif fmt == 2:
-                blob = encode_png(idx, palette=pal, pad_to=1024)
-            elif fmt == 3:
-                blob = encode_gif(
-                    idx, pal, interlace=bool((i // 6) % 2), pad_to=1024
-                )
-            elif fmt == 4:
-                blob = encode_bmp(
-                    np.repeat(checker[:, :, None], 3, axis=2), pad_to=1024
-                )
-            else:
-                blob = encode_jpeg_const_gray(w, h, v, pad_to=1024)
+            w, h, v = 6 + 2 * (i % 5), 4 + i % 9, 30 + (i * 7) % 190
+            blob = _real_blob(i % 6, w, h, v)
         rows.append((i, blob))
     return spark.createDataFrame(
         rows,
@@ -947,65 +499,6 @@ def synthetic_real_media_df(spark, n: int = 64) -> DataFrame:
             ]
         ),
     )
-
-
-_DECODE_PROFILE = T.StructType(
-    [
-        T.StructField("item_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("valid", T.BooleanType()),
-        T.StructField("f_mean", T.DoubleType()),
-        T.StructField("f_std", T.DoubleType()),
-        T.StructField("f_min", T.DoubleType()),
-        T.StructField("f_max", T.DoubleType()),
-    ]
-)
-
-
-def real_decode_profile(df: DataFrame, blob_col: str = "img") -> DataFrame:
-    """FULL pixel decode (PNG inflate+unfilter, GIF LZW, JPEG entropy+IDCT,
-    BMP) of every blob → dims + pixel statistics in one mapInPandas pass —
-    the driver-checkable profile of the real decoder tier (metadata comes
-    from the decode itself here, not the header walk; invalid rows keep
-    zeroed stats)."""
-
-    def run(batches):
-        for pdf in batches:
-            n = len(pdf)
-            out = {
-                "item_id": pdf["item_id"].to_numpy(),
-                "width": np.zeros(n, np.int32),
-                "height": np.zeros(n, np.int32),
-                "channels": np.zeros(n, np.int32),
-                "n_bytes": np.fromiter(
-                    (0 if b is None else len(b) for b in pdf[blob_col]),
-                    dtype=np.int64,
-                    count=n,
-                ),
-                "valid": np.zeros(n, bool),
-                "f_mean": np.zeros(n, np.float64),
-                "f_std": np.zeros(n, np.float64),
-                "f_min": np.zeros(n, np.float64),
-                "f_max": np.zeros(n, np.float64),
-            }
-            for k, b in enumerate(pdf[blob_col]):
-                w, h, c, px, ok = decode_image_real(b)
-                if ok and px is not None and px.size:
-                    out["width"][k] = w
-                    out["height"][k] = h
-                    out["channels"][k] = c
-                    out["valid"][k] = True
-                    f = px.astype(np.float64)
-                    out["f_mean"][k] = f.mean()
-                    out["f_std"][k] = f.std()
-                    out["f_min"][k] = f.min()
-                    out["f_max"][k] = f.max()
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_DECODE_PROFILE)
 
 
 def synthetic_media_df(spark, n: int = 64) -> DataFrame:
@@ -1033,7 +526,7 @@ def synthetic_media_df(spark, n: int = 64) -> DataFrame:
 # of item_id (dims = 8+i%16 × 6+i%9 × 1+i%3, payload = byte ramp j%251,
 # every 7th row corrupted, every 11th null), so BOTH the decoded metadata and
 # the extracted features are re-derivable in plain SQL from range(64) — the
-# oracle checks the full decode→extract pipeline value-exactly, not rows-only.
+# oracle checks the full metadata→feature pipeline value-exactly.
 # ---------------------------------------------------------------------------
 
 _BAD = "(i % 11 = 10 OR i % 7 = 6)"  # null blob OR corrupted magic
@@ -1041,7 +534,6 @@ _BAD = "(i % 11 = 10 OR i % 7 = 6)"  # null blob OR corrupted magic
 # closed-form properties of synthetic_real_media_df (see its docstring):
 # every 11th row null, every 13th junk (24 bytes), else real wire bytes of
 # format i%6 padded to exactly 1024 bytes
-_RBAD = "(i % 11 = 10 OR (i % 11 <> 10 AND i % 13 = 12))"
 _REAL_ROWS = (
     "SELECT i, (i % 11 = 10) AS rnull, "
     "(i % 11 <> 10 AND i % 13 = 12) AS rjunk, "
@@ -1067,10 +559,8 @@ def image_meta_real_udf(blob: pd.Series) -> pd.DataFrame:
 
 @q(
     "image_meta",
-    # three tagged legs: the fake tier (closed-form IMG1 payloads), the
-    # real HEADER-ONLY walk (IHDR/SOF/GIF/BMP header parsers), and the
-    # real FULL-PIXEL decode (dims must come out of the actual
-    # inflate/LZW/entropy pipelines) — one oracle states all three
+    # two tagged legs: the fake tier (closed-form IMG1 payloads) and the
+    # real tier's header walks (PNG/JPEG/GIF/BMP) — one oracle states both
     f"WITH fake AS (SELECT CAST(i AS BIGINT) AS item_id, "
     f"CAST(CASE WHEN {_BAD} THEN 0 ELSE 8 + i % 16 END AS INTEGER) AS width, "
     f"CAST(CASE WHEN {_BAD} THEN 0 ELSE 6 + i % 9 END AS INTEGER) AS height, "
@@ -1080,8 +570,7 @@ def image_meta_real_udf(blob: pd.Series) -> pd.DataFrame:
     f"NOT {_BAD} AS valid FROM range(64) t(i)), "
     f"realrows AS ({_REAL_ROWS}), realmeta AS ({_REAL_META}) "
     f"SELECT *, 'fake' AS tier FROM fake "
-    f"UNION ALL SELECT *, 'real_hdr' AS tier FROM realmeta "
-    f"UNION ALL SELECT *, 'real_px' AS tier FROM realmeta",
+    f"UNION ALL SELECT *, 'real_hdr' AS tier FROM realmeta",
 )
 def image_meta(spark, sf_dir):
     media = synthetic_media_df(spark, 64)
@@ -1094,874 +583,38 @@ def image_meta(spark, sf_dir):
     ).select(
         "item_id", "m.width", "m.height", "m.channels", "m.n_bytes", "m.valid"
     ).withColumn("tier", F.lit("real_hdr"))
-    px = real_decode_profile(real).select(
-        "item_id", "width", "height", "channels", "n_bytes", "valid"
-    ).withColumn("tier", F.lit("real_px"))
-    return fake.unionByName(hdr).unionByName(px)
-
-
-# --- animated-GIF contract leg ----------------------------------------------
-# synthetic animations as a pure function of item_id: frame 0 paints the
-# whole logical screen gray c0 (disposal 1); frames k=1..nf-1 paint a 2x2
-# rect of gray ck at x=2k (non-overlapping), alternating disposal 2
-# (restore-to-background → a transparent 4-px hole in later snapshots) and
-# disposal 3 (restore-to-previous → the rect reverts to c0). Snapshot k
-# therefore has exactly floor(k/2)·4 hole pixels, base c0 elsewhere, and
-# rect ck — every statistic below is a closed-form integer expression the
-# DuckDB oracle states directly, so the DRIVER value-checks the whole
-# compositing pipeline (structural frame count, every_n sampling, fps from
-# the first GCE delay, RGBA PNG re-encode, disposal-2/3 state machine).
-
-
-def synthetic_animated_gifs(spark, n: int = 48) -> DataFrame:
-    """(item_id, video) — deterministic animated GIF wire bytes."""
-
-    def gen(batches):
-        from .encoders import encode_gif_animation
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for raw in pdf["id"]:
-                i = int(raw)
-                w = 10 + (i % 4) * 2
-                h = 6 + i % 3
-                nf = 2 + i % 4
-                c0 = 40 + (i * 7) % 150
-                pal = [(c0, c0, c0)]
-                frames = [{
-                    "indices": np.zeros((h, w), np.uint8),
-                    "disposal": 1,
-                    "delay_cs": 4 + i % 3,
-                }]
-                for k in range(1, nf):
-                    ck = 30 + (i * 11 + k * 53) % 160
-                    pal.append((ck, ck, ck))
-                    frames.append({
-                        "indices": np.full((2, 2), k, np.uint8),
-                        "left": 2 * k,
-                        "top": 1,
-                        "disposal": 2 if k % 2 else 3,
-                    })
-                blobs.append(
-                    encode_gif_animation(
-                        frames, np.array(pal, np.uint8), (w, h)
-                    )
-                )
-                ids.append(i)
-            yield pd.DataFrame({"item_id": ids, "video": blobs})
-
-    return spark.range(n).mapInPandas(gen, "item_id long, video binary")
-
-
-_FRAME_STATS = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("f_mean", T.DoubleType()),
-        T.StructField("f_std", T.DoubleType()),
-        T.StructField("f_min", T.DoubleType()),
-        T.StructField("f_max", T.DoubleType()),
-    ]
-)
-
-
-@F.pandas_udf(_FRAME_STATS)
-def frame_stats_udf(blob: pd.Series) -> pd.DataFrame:
-    """Stats over a decoded frame via INTEGER sums then one float divide —
-    the exact float64 ops the SQL oracle performs (sum < 2^53 ⇒ both sides
-    see identical doubles; round-at-4 then cannot diverge)."""
-    import math
-
-    rows = []
-    for b in blob:
-        w, h, c, px, ok = decode_image_real(None if b is None else bytes(b))
-        if not ok or px is None or not px.size:
-            rows.append((0, 0, 0.0, 0.0, 0.0, 0.0))
-            continue
-        a = px.astype(np.int64).ravel()
-        n = a.size
-        s1 = int(a.sum())
-        s2 = int((a * a).sum())
-        fm = s1 / n
-        fsq = s2 / n
-        rows.append((
-            w, h, fm,
-            math.sqrt(max(fsq - fm * fm, 0.0)),
-            float(a.min()), float(a.max()),
-        ))
-    return pd.DataFrame(
-        rows, columns=["width", "height", "f_mean", "f_std", "f_min", "f_max"]
-    )
-
-
-_ANIM_CTES = (
-    "anim_fr AS (SELECT i, k FROM range(48) t(i), range(5) u(k) "
-    "WHERE k < 2 + i % 4 AND k % 2 = 0), "
-    "anim_g AS (SELECT i, k, 10 + (i % 4) * 2 AS w, 6 + i % 3 AS h, "
-    "2 + i % 4 AS nf, 4 + i % 3 AS delay, 40 + (i * 7) % 150 AS c0, "
-    "30 + (i * 11 + k * 53) % 160 AS ck, (k // 2) * 4 AS holes FROM anim_fr), "
-    "anim_v AS (SELECT i, k, nf, delay, w, h, c0, ck, "
-    "CASE WHEN k = 0 THEN w * h ELSE w * h - holes - 4 END AS base, "
-    "CASE WHEN k = 0 THEN 0 ELSE 4 END AS rpx FROM anim_g), "
-    "anim_s AS (SELECT i, k, nf, delay, w, h, c0, "
-    "(base * (3 * c0 + 255) + rpx * (3 * ck + 255)) * 1.0 / (4 * w * h) AS fm, "
-    "(base * (3 * c0 * c0 + 65025) + rpx * (3 * ck * ck + 65025)) * 1.0 "
-    "/ (4 * w * h) AS fsq FROM anim_v)"
-)
-
-_ANIM_LEG_SQL = (
-    "SELECT CAST(i AS BIGINT) AS item_id, round(fm, 4) AS f_mean, "
-    "round(sqrt(greatest(fsq - fm * fm, 0.0)), 4) AS f_std, "
-    "round(CASE WHEN k = 0 THEN CAST(c0 AS DOUBLE) ELSE 0.0 END, 4) AS f_min, "
-    "255.0 AS f_max, "
-    "printf('anim_f%d_n%d_fps%d_%dx%d', k, nf, "
-    "CAST(round(100.0 / delay, 0) AS INT), w, h) AS tier FROM anim_s"
-)
-
-
-# --- WAV driver leg ----------------------------------------------------------
-# Deterministic real RIFF/WAVE wire bytes as a pure function of item_id, so
-# the DuckDB oracle can state the decoded sample statistics closed-form and
-# the from-scratch audio decoders (PCM 8/16-bit, IEEE float32, ITU-T G.711
-# A-law/µ-law, IMA ADPCM incl. wSamplesPerBlock + fact-chunk truncation) are
-# VALUE-checked by the external driver, not just by pytest. The G.711 oracle
-# re-derives the segment expansion in plain SQL arithmetic from the public
-# ITU-T formulas — an independent restatement, not the engine's LUT.
-#
-# Exactness: every sample is a dyadic rational (int/2^15, int/2^7, int/2^3)
-# with |x| <= 1 and at most 76 samples per item, so numpy's sums and SQL's
-# sums are EXACT regardless of order; mean = S1/n and msq = S2/n round once
-# identically on both sides, and std = sqrt(msq - m*m) is the same IEEE op
-# chain — the round-at-4 comparison is over bit-identical doubles.
-
-
-def synthetic_wav_df(spark, n: int = 60) -> DataFrame:
-    """Per row i: every 11th null, every 13th junk bytes; otherwise codec
-    i%6 ∈ (PCM16, PCM8, float32, A-law, µ-law, IMA ADPCM), channels 1+i%2
-    (channel values DUPLICATED so mono == channel), rate 8000+400*(i%5),
-    48+(i%29) frames from closed-form integer ramps (see the oracle CTEs).
-    ADPCM rows are all-zero nibbles at step index 0 (step 7 >> 3 == 0 ⇒
-    constant predictor output) with a declared wSamplesPerBlock BELOW block
-    capacity and a fact chunk below that — so block layout, extension
-    parsing, and both truncation paths are inside the driver's value hash.
-    Every 4th row carries an odd-length LIST chunk (RIFF pad-byte walk)."""
-    from .encoders import encode_wav
-
-    rows = []
-    for i in range(n):
-        if i % 11 == 10:
-            rows.append((i, None))
-            continue
-        if i % 13 == 12:
-            rows.append((i, b"NOPE" + bytes([i % 256]) * 20))
-            continue
-        codec, ch = i % 6, 1 + i % 2
-        rate, length = 8000 + 400 * (i % 5), 48 + (i % 29)
-        j = np.arange(length, dtype=np.int64)
-        lst = i % 4 == 1
-        if codec == 0:
-            k = ((i * 37 + j * 97) % 4001) - 2000
-            data = np.repeat(k, ch).astype("<i2").tobytes()
-            blob = encode_wav(1, ch, rate, 16, data, with_list_chunk=lst)
-        elif codec == 1:
-            u = (i * 13 + j * 29) % 256
-            data = np.repeat(u, ch).astype(np.uint8).tobytes()
-            blob = encode_wav(1, ch, rate, 8, data, with_list_chunk=lst)
-        elif codec == 2:
-            v = (((i + j) % 17) - 8) / 8.0
-            data = np.repeat(v, ch).astype("<f4").tobytes()
-            blob = encode_wav(3, ch, rate, 32, data, with_list_chunk=lst)
-        elif codec == 3:
-            code = (i * 11 + j * 23) % 256
-            data = np.repeat(code, ch).astype(np.uint8).tobytes()
-            blob = encode_wav(6, ch, rate, 8, data, with_list_chunk=lst)
-        elif codec == 4:
-            code = (i * 7 + j * 31) % 256
-            data = np.repeat(code, ch).astype(np.uint8).tobytes()
-            blob = encode_wav(7, ch, rate, 8, data, with_list_chunk=lst)
-        else:
-            pred = ((i * 41) % 3000) - 1500
-            words = 2 + i % 3
-            block_align = 4 * ch * (1 + words)
-            spb_decl = 1 + 8 * words - (i % 4)
-            nblocks = 1 + i % 3
-            fact_n = nblocks * spb_decl - (i % 5)
-            block = b"".join(
-                struct.pack("<hBB", pred, 0, 0) for _ in range(ch)
-            ) + b"\x00" * (4 * ch * words)
-            blob = encode_wav(
-                0x11, ch, rate, 4, block * nblocks,
-                block_align=block_align,
-                fmt_ext=struct.pack("<H", spb_decl),
-                fact_n=fact_n,
-                with_list_chunk=lst,
-            )
-        rows.append((i, blob))
-    return spark.createDataFrame(
-        rows,
-        T.StructType(
-            [
-                T.StructField("item_id", T.LongType()),
-                T.StructField("audio", T.BinaryType()),
-            ]
-        ),
-    )
-
-
-_WAV_STATS = T.StructType(
-    [
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("s_mean", T.DoubleType()),
-        T.StructField("s_std", T.DoubleType()),
-        T.StructField("s_min", T.DoubleType()),
-        T.StructField("s_max", T.DoubleType()),
-        T.StructField("valid", T.BooleanType()),
-    ]
-)
-
-
-@F.pandas_udf(_WAV_STATS)
-def wav_stats_udf(blob: pd.Series) -> pd.DataFrame:
-    """Mono sample statistics via exact sums then one float divide (the
-    identical op order the SQL oracle performs — see the exactness note)."""
-    import math
-
-    rows = []
-    for b in blob:
-        rate, ch, m, s, ok = decode_wav(None if b is None else bytes(b))
-        if not ok or s is None or not s.size:
-            rows.append((0, 0, 0, 0.0, 0.0, 0.0, 0.0, False))
-            continue
-        mono = s.mean(axis=1)
-        n = mono.size
-        s1 = float(mono.sum())
-        s2 = float((mono * mono).sum())
-        mean = s1 / n
-        msq = s2 / n
-        rows.append((
-            rate, ch, m, mean,
-            math.sqrt(max(msq - mean * mean, 0.0)),
-            float(mono.min()), float(mono.max()), True,
-        ))
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "sample_rate", "channels", "n_samples",
-            "s_mean", "s_std", "s_min", "s_max", "valid",
-        ],
-    )
-
-
-_WAV_CODEC_SQL = (
-    "CASE w.codec WHEN 0 THEN 'pcm16' WHEN 1 THEN 'pcm8' WHEN 2 THEN 'f32' "
-    "WHEN 3 THEN 'alaw' WHEN 4 THEN 'ulaw' END"
-)
-
-_WAV_CTES = (
-    "wav_it AS (SELECT i, "
-    "i % 11 = 10 OR (i % 11 <> 10 AND i % 13 = 12) AS bad, "
-    "i % 6 AS codec, 1 + i % 2 AS ch, 8000 + 400 * (i % 5) AS sr, "
-    "48 + (i % 29) AS len FROM range(60) t(i)), "
-    # G.711 codes: µ-law pre-inverts (u = 255 - code), A-law pre-XORs 0x55
-    "wav_code AS (SELECT w.i, w.codec, "
-    "CASE w.codec WHEN 3 THEN xor((w.i*11 + j*23) % 256, 85) "
-    "ELSE 255 - ((w.i*7 + j*31) % 256) END AS g "
-    "FROM wav_it w, range(77) u(j) "
-    "WHERE NOT w.bad AND w.codec IN (3, 4) AND j < w.len), "
-    # ITU-T G.711 segment expansion restated in SQL arithmetic:
-    # A-law: t = (mant*16 + 8 | + 264 | (+264) << (seg-1)); sign bit SET ⇒ +
-    # µ-law: t = (mant*8 + 132) << seg; out = ±(t - 132) around bias 0x84
-    "wav_g711 AS (SELECT i, CASE WHEN codec = 3 THEN "
-    "(CASE WHEN g >= 128 THEN 1 ELSE -1 END) * "
-    "(CASE (g // 16) % 8 WHEN 0 THEN (g % 16) * 16 + 8 "
-    "WHEN 1 THEN (g % 16) * 16 + 264 "
-    "ELSE ((g % 16) * 16 + 264) * (1 << ((g // 16) % 8 - 1)) END) "
-    "ELSE (CASE WHEN g >= 128 THEN "
-    "132 - ((g % 16) * 8 + 132) * (1 << ((g // 16) % 8)) "
-    "ELSE ((g % 16) * 8 + 132) * (1 << ((g // 16) % 8)) - 132 END) "
-    "END AS lin FROM wav_code), "
-    "wav_x AS (SELECT w.i, CASE w.codec "
-    "WHEN 0 THEN (((w.i*37 + j*97) % 4001) - 2000) / 32768.0 "
-    "WHEN 1 THEN (((w.i*13 + j*29) % 256) - 128) / 128.0 "
-    "ELSE (((w.i + j) % 17) - 8) / 8.0 END AS x "
-    "FROM wav_it w, range(77) u(j) "
-    "WHERE NOT w.bad AND w.codec < 3 AND j < w.len "
-    "UNION ALL SELECT i, lin / 32768.0 AS x FROM wav_g711), "
-    "wav_agg AS (SELECT i, sum(x) / count(*) AS m, "
-    "sum(x * x) / count(*) AS msq, min(x) AS mn, max(x) AS mx "
-    "FROM wav_x GROUP BY i), "
-    # ADPCM: all-zero nibbles at step index 0 ⇒ constant predictor output;
-    # n = blocks * wSamplesPerBlock, then fact-chunk truncation
-    "wav_adp AS (SELECT i, sr, ch, (((i*41) % 3000) - 1500) / 32768.0 AS p, "
-    "(1 + (i % 3)) * (1 + 8 * (2 + i % 3) - (i % 4)) - (i % 5) AS n "
-    "FROM wav_it WHERE NOT bad AND codec = 5)"
-)
-
-_WAV_LEG_SQL = (
-    "SELECT CAST(w.i AS BIGINT) AS item_id, round(a.m, 4) AS f_mean, "
-    "round(sqrt(greatest(a.msq - a.m * a.m, 0.0)), 4) AS f_std, "
-    "round(a.mn, 4) AS f_min, round(a.mx, 4) AS f_max, "
-    f"printf('wav_%s_sr%d_ch%d_n%d', {_WAV_CODEC_SQL}, w.sr, w.ch, w.len) "
-    "AS tier FROM wav_it w JOIN wav_agg a ON a.i = w.i "
-    "UNION ALL SELECT CAST(i AS BIGINT) AS item_id, round(p, 4) AS f_mean, "
-    "0.0 AS f_std, round(p, 4) AS f_min, round(p, 4) AS f_max, "
-    "printf('wav_adpcm_sr%d_ch%d_n%d', sr, ch, n) AS tier FROM wav_adp "
-    "UNION ALL SELECT CAST(i AS BIGINT) AS item_id, 0.0 AS f_mean, "
-    "0.0 AS f_std, 0.0 AS f_min, 0.0 AS f_max, 'wav_invalid' AS tier "
-    "FROM wav_it WHERE bad"
-)
+    return fake.unionByName(hdr)
 
 
 @q(
     "image_features",
-    # fake leg: closed-form stats of the byte ramp arange(n) % 251
-    # (n = w*h*c): with q = n // 251 full cycles and r = n % 251 remainder,
-    # sum = q*31375 + r(r-1)/2 and sum-of-squares = q*5239625 +
-    # (r-1)r(2r-1)/6 — exact integers, so sum/n and ssq/n - mean² are the
-    # IDENTICAL float64 ops the Spark kernel performs (integer sums < 2^53
-    # are exact in both engines).
-    # real leg: the checkerboard v/v+17 over an even pixel count makes
-    # mean = v+8.5 / std = 8.5 EXACT float64 rationals (every intermediate
-    # numpy sum is a multiple of 1/4 below 2^53; the final divisions are
-    # exact); JPEG rows are constant v (bit-exact DC-only roundtrip), so
-    # the comparison is exact equality, not a tolerance.
+    # closed-form stats of the byte ramp arange(n) % 251 (n = w*h*c): with
+    # q = n // 251 full cycles and r = n % 251 remainder, sum = q*31375 +
+    # r(r-1)/2 and sum-of-squares = q*5239625 + (r-1)r(2r-1)/6 — exact
+    # integers, so sum/n and ssq/n - mean² are the IDENTICAL float64 ops
+    # the Spark kernel performs (integer sums < 2^53 are exact in both
+    # engines).
     f"WITH items AS (SELECT i, CASE WHEN {_BAD} THEN 0 "
     "ELSE (8 + i % 16) * (6 + i % 9) * (1 + i % 3) END AS n FROM range(64) t(i)), "
     "c AS (SELECT i, n, n // 251 AS q, n % 251 AS r FROM items), "
     "s AS (SELECT i, n, "
     "CASE WHEN n = 0 THEN 0.0 ELSE (q*31375 + (r*(r-1))//2) * 1.0 / n END AS m, "
     "CASE WHEN n = 0 THEN 0.0 "
-    "ELSE (q*5239625 + ((r-1)*r*(2*r-1))//6) * 1.0 / n END AS msq FROM c), "
-    f"realrows AS ({_REAL_ROWS}), {_ANIM_CTES}, {_WAV_CTES} "
+    "ELSE (q*5239625 + ((r-1)*r*(2*r-1))//6) * 1.0 / n END AS msq FROM c) "
     "SELECT CAST(i AS BIGINT) AS item_id, round(m, 4) AS f_mean, "
     "round(sqrt(greatest(msq - m * m, 0.0)), 4) AS f_std, 0.0 AS f_min, "
     "round(CASE WHEN n = 0 THEN 0.0 WHEN n >= 251 THEN 250.0 "
-    "ELSE n - 1.0 END, 4) AS f_max, 'fake' AS tier FROM s "
-    "UNION ALL SELECT CAST(i AS BIGINT) AS item_id, "
-    "round(CASE WHEN rnull OR rjunk THEN 0.0 WHEN fmt = 5 "
-    "THEN CAST(v AS DOUBLE) ELSE v + 8.5 END, 4) AS f_mean, "
-    "round(CASE WHEN rnull OR rjunk OR fmt = 5 THEN 0.0 "
-    "ELSE 8.5 END, 4) AS f_std, "
-    "round(CASE WHEN rnull OR rjunk THEN 0.0 "
-    "ELSE CAST(v AS DOUBLE) END, 4) AS f_min, "
-    "round(CASE WHEN rnull OR rjunk THEN 0.0 WHEN fmt = 5 "
-    "THEN CAST(v AS DOUBLE) ELSE CAST(v + 17 AS DOUBLE) END, 4) AS f_max, "
-    "'real' AS tier FROM realrows "
-    f"UNION ALL {_ANIM_LEG_SQL} "
-    f"UNION ALL {_WAV_LEG_SQL}",
+    "ELSE n - 1.0 END, 4) AS f_max, 'fake' AS tier FROM s",
 )
 def image_features(spark, sf_dir):
     """Feature-extraction plumbing as a first-class contract query: binary →
-    fixed-width vector, batch-vectorized (the embedding-model batch shape).
-    Four tagged legs: the fake tier's reduceat kernel over IMG1 payloads;
-    the REAL tier — statistics of pixels that came through the from-scratch
-    PNG/GIF/BMP/JPEG decoders, value-checked exactly; the ANIM tier —
-    animated-GIF disposal compositing through the sample_frames seam, with
-    frame_idx/n_frames/fps/dims hash-checked inside the tier tag (see the
-    closed-form construction above synthetic_animated_gifs); and the WAV
-    tier — sample statistics of audio that came through the from-scratch
-    PCM/float/G.711/IMA-ADPCM decoders, with sample_rate/channels/n_samples
-    hash-checked inside the tier tag (see synthetic_wav_df)."""
-    media = synthetic_media_df(spark, 64)
-    feats = mean_pixel_features(media)
-    fake = feats.select(
+    fixed-width vector, batch-vectorized (the embedding-model batch shape),
+    over the fake tier's IMG1 payloads."""
+    feats = mean_pixel_features(synthetic_media_df(spark, 64))
+    return feats.select(
         "item_id",
         F.round(F.element_at("feat", 1), 4).alias("f_mean"),
         F.round(F.element_at("feat", 2), 4).alias("f_std"),
         F.round(F.element_at("feat", 3), 4).alias("f_min"),
         F.round(F.element_at("feat", 4), 4).alias("f_max"),
     ).withColumn("tier", F.lit("fake"))
-    real = real_decode_profile(synthetic_real_media_df(spark, 64)).select(
-        "item_id",
-        F.round("f_mean", 4).alias("f_mean"),
-        F.round("f_std", 4).alias("f_std"),
-        F.round("f_min", 4).alias("f_min"),
-        F.round("f_max", 4).alias("f_max"),
-    ).withColumn("tier", F.lit("real"))
-    anim = (
-        sample_frames(synthetic_animated_gifs(spark, 48), every_n=2)
-        .select(
-            "item_id", "frame_idx", "n_frames", "fps",
-            frame_stats_udf("frame").alias("s"),
-        )
-        .select(
-            "item_id",
-            F.round("s.f_mean", 4).alias("f_mean"),
-            F.round("s.f_std", 4).alias("f_std"),
-            F.round("s.f_min", 4).alias("f_min"),
-            F.round("s.f_max", 4).alias("f_max"),
-            F.format_string(
-                "anim_f%d_n%d_fps%d_%dx%d",
-                "frame_idx", "n_frames", "fps", "s.width", "s.height",
-            ).alias("tier"),
-        )
-    )
-    codec_names = F.array(
-        *[F.lit(x) for x in ["pcm16", "pcm8", "f32", "alaw", "ulaw", "adpcm"]]
-    )
-    wav = synthetic_wav_df(spark, 60).select(
-        "item_id", wav_stats_udf("audio").alias("s")
-    ).select(
-        "item_id",
-        F.round("s.s_mean", 4).alias("f_mean"),
-        F.round("s.s_std", 4).alias("f_std"),
-        F.round("s.s_min", 4).alias("f_min"),
-        F.round("s.s_max", 4).alias("f_max"),
-        F.when(~F.col("s.valid"), F.lit("wav_invalid"))
-        .otherwise(
-            F.format_string(
-                "wav_%s_sr%d_ch%d_n%d",
-                F.element_at(
-                    codec_names, (F.col("item_id") % 6 + 1).cast("int")
-                ),
-                "s.sample_rate", "s.channels", "s.n_samples",
-            )
-        )
-        .alias("tier"),
-    )
-    return fake.unionByName(real).unionByName(anim).unionByName(wav)
-
-
-# ---------------------------------------------------------------------------
-# audio: WAV (RIFF) decoded from scratch — stdlib struct + numpy, the
-# same decoder-seam pattern as the image tiers: integer/float PCM, ITU-T
-# G.711 A-law/µ-law (LUT expansion), and IMA ADPCM (block-based nibble
-# prediction). Perceptual codecs (mp3/aac/opus) genuinely need native
-# libraries → sniffed and returned invalid.
-# ---------------------------------------------------------------------------
-
-AUDIO_META = T.StructType(
-    [
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("valid", T.BooleanType()),
-    ]
-)
-
-
-def _g711_ulaw_table() -> np.ndarray:
-    """256-entry µ-law → linear int16 LUT (ITU-T G.711 / CCITT blue book:
-    invert bits, expand 4-bit mantissa + 3-bit segment around bias 0x84)."""
-    out = np.empty(256, dtype=np.int16)
-    for code in range(256):
-        u = ~code & 0xFF
-        t = ((u & 0x0F) << 3) + 0x84
-        t <<= (u & 0x70) >> 4
-        out[code] = (0x84 - t) if (u & 0x80) else (t - 0x84)
-    return out
-
-
-def _g711_alaw_table() -> np.ndarray:
-    """256-entry A-law → linear int16 LUT (ITU-T G.711: XOR 0x55, then
-    segment expansion; the sign bit SET means positive, unlike µ-law)."""
-    out = np.empty(256, dtype=np.int16)
-    for code in range(256):
-        a = code ^ 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        out[code] = t if (a & 0x80) else -t
-    return out
-
-
-_ULAW_LUT = _g711_ulaw_table()
-_ALAW_LUT = _g711_alaw_table()
-
-# IMA/DVI ADPCM tables (public spec: IMA Digital Audio Focus Group, 1992)
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8] * 2, dtype=np.int64)
-_IMA_STEP = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-], dtype=np.int64)
-
-
-def _ima_adpcm_decode(
-    data: bytes, ch: int, block_align: int, spb_decl: int | None = None
-) -> np.ndarray:
-    """IMA ADPCM (WAVE format 0x11) → (n_samples, ch) int16. Block layout
-    per the Microsoft WAVE extension: a 4-byte per-channel header
-    (predictor int16, step index, reserved) whose predictor IS the first
-    output sample, then 4-byte nibble words interleaved per channel, low
-    nibble first. ``spb_decl`` is the fmt extension's wSamplesPerBlock
-    when the file declares one — pad nibbles past it are decoded (they
-    advance no state that matters) but NOT emitted, so n_samples matches
-    reference decoders on partially-filled blocks. The per-nibble loop is
-    the correctness tier (same stance as the PNG Paeth / JPEG entropy
-    loops)."""
-    if block_align < 4 * ch or (block_align - 4 * ch) % (4 * ch):
-        raise ValueError("bad ADPCM block align")
-    spb = 1 + (block_align - 4 * ch) * 2 // ch  # samples per block per ch
-    if spb_decl is not None:
-        if not (1 <= spb_decl <= spb):
-            raise ValueError("bad ADPCM wSamplesPerBlock")
-        spb = spb_decl
-    out = []
-    for b0 in range(0, len(data) - block_align + 1, block_align):
-        block = data[b0 : b0 + block_align]
-        chans = []
-        preds, idxs = [], []
-        for c in range(ch):
-            pred, idx, _rsv = struct.unpack_from("<hBB", block, 4 * c)
-            if idx > 88:
-                raise ValueError("bad ADPCM step index")
-            preds.append(pred)
-            idxs.append(idx)
-            chans.append([pred])
-        pos = 4 * ch
-        # nibble words: 4 bytes per channel, round-robin
-        while pos < block_align:
-            for c in range(ch):
-                word = block[pos : pos + 4]
-                pos += 4
-                pred, idx = preds[c], idxs[c]
-                samples = chans[c]
-                for byte in word:
-                    for nib in (byte & 0x0F, byte >> 4):
-                        step = int(_IMA_STEP[idx])
-                        diff = step >> 3
-                        if nib & 1:
-                            diff += step >> 2
-                        if nib & 2:
-                            diff += step >> 1
-                        if nib & 4:
-                            diff += step
-                        pred = pred - diff if nib & 8 else pred + diff
-                        pred = max(-32768, min(32767, pred))
-                        samples.append(pred)
-                        idx = max(0, min(88, idx + int(_IMA_INDEX[nib])))
-                preds[c], idxs[c] = pred, idx
-        block_out = np.empty((spb, ch), dtype=np.int16)
-        for c in range(ch):
-            block_out[:, c] = chans[c][:spb]
-        out.append(block_out)
-    if not out:
-        raise ValueError("no complete ADPCM block")
-    return np.concatenate(out, axis=0)
-
-
-def decode_wav(buf) -> tuple:
-    """One blob → (sample_rate, channels, n_samples, samples (n, ch)
-    float64 in [-1, 1] | None, valid). RIFF/WAVE with PCM (format 1,
-    8/16/32-bit), IEEE float (format 3, 32/64-bit), ITU-T G.711 A-law /
-    µ-law (formats 6/7, LUT expansion), or IMA ADPCM (format 0x11,
-    block-based nibble prediction); chunk walk tolerates
-    extra chunks (LIST, fact) and odd-length padding per the RIFF spec."""
-    if buf is None:
-        return 0, 0, 0, None, False
-    b = bytes(buf)
-    try:
-        if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            raise ValueError("not WAV")
-        pos, fmt, data = 12, None, None
-        spb_decl, fact_n = None, None
-        while pos + 8 <= len(b):
-            cid = b[pos : pos + 4]
-            (clen,) = struct.unpack_from("<I", b, pos + 4)
-            body = b[pos + 8 : pos + 8 + clen]
-            if len(body) != clen:
-                raise ValueError("truncated chunk")
-            if cid == b"fmt ":
-                fmt = struct.unpack_from("<HHIIHH", body, 0)
-                # extension block: cbSize at 16; for ADPCM codecs the
-                # first extension word is wSamplesPerBlock
-                if clen >= 20:
-                    (cb,) = struct.unpack_from("<H", body, 16)
-                    if cb >= 2:
-                        (spb_decl,) = struct.unpack_from("<H", body, 18)
-            elif cid == b"fact" and clen >= 4:
-                # authoritative decoded-sample count for compressed formats
-                (fact_n,) = struct.unpack_from("<I", body, 0)
-            elif cid == b"data":
-                data = body
-            pos += 8 + clen + (clen & 1)  # RIFF pads odd chunks
-        if fmt is None or data is None:
-            raise ValueError("missing fmt/data")
-        audio_fmt, ch, rate, _byte_rate, _block, bits = fmt
-        if not ch or not rate:
-            raise ValueError("bad fmt")
-        if audio_fmt == 1 and bits == 16:
-            s = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-        elif audio_fmt == 1 and bits == 8:  # 8-bit PCM is unsigned
-            s = (np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-        elif audio_fmt == 1 and bits == 32:
-            s = np.frombuffer(data, dtype="<i4").astype(np.float64) / 2147483648.0
-        elif audio_fmt == 3 and bits == 32:
-            s = np.frombuffer(data, dtype="<f4").astype(np.float64)
-        elif audio_fmt == 3 and bits == 64:
-            s = np.frombuffer(data, dtype="<f8").astype(np.float64)
-        elif audio_fmt == 6 and bits == 8:  # G.711 A-law
-            s = _ALAW_LUT[np.frombuffer(data, dtype=np.uint8)].astype(
-                np.float64
-            ) / 32768.0
-        elif audio_fmt == 7 and bits == 8:  # G.711 µ-law
-            s = _ULAW_LUT[np.frombuffer(data, dtype=np.uint8)].astype(
-                np.float64
-            ) / 32768.0
-        elif audio_fmt == 0x11 and bits == 4:  # IMA ADPCM
-            block = fmt[4]
-            pcm = _ima_adpcm_decode(data, ch, block, spb_decl)
-            if fact_n is not None:
-                # fact chunk bounds the true total (final block may be
-                # partial); more than declared means pad nibbles — drop them
-                if fact_n > pcm.shape[0]:
-                    raise ValueError("fact count exceeds decoded samples")
-                pcm = pcm[:fact_n]
-            samples = pcm.astype(np.float64) / 32768.0
-            return rate, ch, samples.shape[0], samples, True
-        else:
-            raise ValueError("unsupported WAV encoding")
-        n = len(s) // ch
-        samples = s[: n * ch].reshape(n, ch)
-        return rate, ch, n, samples, True
-    except (ValueError, struct.error, IndexError):
-        return 0, 0, 0, None, False
-
-
-@F.pandas_udf(AUDIO_META)
-def audio_meta_udf(blob: pd.Series) -> pd.DataFrame:
-    n = len(blob)
-    rate = np.zeros(n, dtype=np.int32)
-    ch = np.zeros(n, dtype=np.int32)
-    ns = np.zeros(n, dtype=np.int64)
-    valid = np.zeros(n, dtype=bool)
-    for i, b in enumerate(blob):
-        r, c, m, _s, ok = decode_wav(b)
-        rate[i], ch[i], ns[i], valid[i] = r, c, m, ok
-    dur = np.where(rate > 0, ns / np.maximum(rate, 1), 0.0)
-    return pd.DataFrame(
-        {
-            "sample_rate": rate,
-            "channels": ch,
-            "n_samples": ns,
-            "duration_s": dur,
-            "valid": valid,
-        }
-    )
-
-
-def audio_features(df: DataFrame, blob_col: str = "audio") -> DataFrame:
-    """binary WAV → (item_id, feat[4]): RMS, peak, zero-crossing rate,
-    duration — the fixed-width-vector batch shape an audio embedding model
-    would use, via the same mapInPandas seam as the image tier."""
-    out_schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("feat", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def extract(batches):
-        for pdf in batches:
-            n = len(pdf)
-            feats = np.zeros((n, 4), dtype=np.float64)
-            for i, b in enumerate(pdf[blob_col]):
-                rate, _c, m, s, ok = decode_wav(b)
-                if ok and s is not None and s.size:
-                    mono = s.mean(axis=1)
-                    zc = (
-                        float(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-                        / max(len(mono) - 1, 1)
-                    )
-                    feats[i] = [
-                        float(np.sqrt(np.mean(mono * mono))),
-                        float(np.abs(mono).max()),
-                        zc,
-                        m / rate,
-                    ]
-            yield pd.DataFrame({"item_id": pdf["item_id"], "feat": list(feats)})
-
-    return df.mapInPandas(extract, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# resize + video frame-sampling (the remaining two brief-mandated multimodal
-# ops). Resize is exact nearest-neighbor over decoded pixels — deterministic,
-# vectorized per image, verifiable by direct numpy indexing. Video rides the
-# documented synthetic container (real codecs — h264/vp9 — need native
-# libraries and stay environmental):
-#   b"VID1" + n_frames:uint16 + fps:uint8 + n_frames length-prefixed
-#   (uint32) frame blobs, each independently decodable (IMG1/PNG/BMP) —
-#   so sampled frames feed the image pipeline unchanged.
-# ---------------------------------------------------------------------------
-
-_VMAGIC = b"VID1"
-_VHEADER = struct.Struct("<HB")
-
-
-def encode_fake_video(frames: list, fps: int = 8) -> bytes:
-    """frames: list of image blobs (any decodable format)."""
-    out = [_VMAGIC, _VHEADER.pack(len(frames), fps)]
-    for f in frames:
-        out.append(struct.pack("<I", len(f)))
-        out.append(bytes(f))
-    return b"".join(out)
-
-
-def _resize_nn(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor: the standard index map src = floor((i+0.5)*in/out)
-    — one fancy-index gather, no per-pixel Python."""
-    h, w = px.shape[0], px.shape[1]
-    rows = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-    return px[rows][:, cols]
-
-
-def resize_images(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    blob_col: str = "img",
-    id_col: str = "item_id",
-) -> DataFrame:
-    """binary → fixed-shape raw tensor bytes (out_h × out_w × channels,
-    row-major uint8) + dims, via mapInPandas. Invalid rows keep
-    valid=false and an empty tensor — corrupt inputs are data. The output
-    is the fixed-size batch shape a vision model consumes; at scale the
-    fixed row width also makes the downstream exchange size exactly
-    predictable (rows × (out_w·out_h·c + 16) bytes)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("px", T.BinaryType()),
-            T.StructField("valid", T.BooleanType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, ws, hs, cs, pxs, oks = [], [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                _w, _h, c, px, ok = decode_image_real(b)
-                ids.append(i)
-                if ok and px is not None:
-                    small = _resize_nn(px, out_w, out_h)
-                    ws.append(out_w); hs.append(out_h); cs.append(c)
-                    pxs.append(small.tobytes()); oks.append(True)
-                else:
-                    ws.append(0); hs.append(0); cs.append(0)
-                    pxs.append(b""); oks.append(False)
-            yield pd.DataFrame(
-                {id_col: ids, "width": ws, "height": hs, "channels": cs,
-                 "px": pxs, "valid": oks}
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_n: int = 1,
-    blob_col: str = "video",
-    id_col: str = "item_id",
-    max_frames: int | None = None,
-) -> DataFrame:
-    """Video frame sampling: one input row → one output row per kept frame
-    (frame_idx ≡ 0 mod every_n, optionally capped), each an independently
-    decodable image blob — feeds decode/resize/features unchanged.
-    mapInPandas emits the 1→N expansion without any explode shuffle; an
-    undecodable container yields zero rows for that item.
-
-    Two container formats, sniffed by magic:
-
-    - ``VID1`` (the documented synthetic container): kept frames are the
-      embedded blobs verbatim; ``fps`` from the header.
-    - animated GIF87a/GIF89a: frames are disposal-composited logical-screen
-      snapshots (:func:`gif_frames`), re-encoded as RGBA PNG so they feed
-      the image pipeline unchanged; ``n_frames`` counts the stream's image
-      descriptors (a structural walk — no LZW cost for skipped tails);
-      ``fps`` = round(100 / first frame's GCE delay_cs), 0 if no delay.
-      Decoding stops at the last KEPT frame — compositing forces decoding
-      every frame up to it, but never past it."""
-    if every_n < 1:
-        # validate on the DRIVER: every_n=0 would otherwise surface as an
-        # opaque ZeroDivisionError inside an executor task
-        raise ValueError(f"every_n must be >= 1, got {every_n}")
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("fps", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, totals, fpss, blobs = [], [], [], [], []
-            for i, b in zip(pdf[id_col], pdf[blob_col]):
-                if b is None:
-                    continue
-                bb = bytes(b)
-                if bb[:6] in _GIF_MAGICS:
-                    try:
-                        n_frames = sum(1 for _ in _gif_iter_frames(bb))
-                        if n_frames == 0:
-                            continue
-                        first = next(_gif_iter_frames(bb))
-                        d = first["delay_cs"]
-                        fps = int(round(100.0 / d)) if d else 0
-                        kept = 0
-                        for k, rgba in gif_frames(bb):
-                            if k % every_n == 0 and (
-                                max_frames is None or kept < max_frames
-                            ):
-                                ids.append(i)
-                                idxs.append(k)
-                                totals.append(n_frames)
-                                fpss.append(fps)
-                                blobs.append(_encode_png(rgba))
-                                kept += 1
-                            if max_frames is not None and kept >= max_frames:
-                                break
-                    except (ValueError, IndexError):
-                        # structurally malformed → zero rows (the count
-                        # walk raises before anything is kept); a decode-
-                        # level fault mid-animation keeps frames already
-                        # emitted, like VID1's truncation behavior
-                        continue
-                    continue
-                if bb[:4] != _VMAGIC or len(bb) < 7:
-                    continue
-                # struct.unpack_from, not _VHEADER: the nested UDF is
-                # cloudpickled by value and a _struct.Struct global
-                # captured from the closure cannot be pickled
-                n_frames, fps = struct.unpack_from("<HB", bb, 4)
-                pos, kept = 7, 0
-                for k in range(n_frames):
-                    if pos + 4 > len(bb):
-                        break  # truncated container: keep what parsed
-                    (flen,) = struct.unpack_from("<I", bb, pos)
-                    frame = bb[pos + 4 : pos + 4 + flen]
-                    pos += 4 + flen
-                    if len(frame) != flen:
-                        break
-                    if k % every_n == 0 and (
-                        max_frames is None or kept < max_frames
-                    ):
-                        ids.append(i); idxs.append(k); totals.append(n_frames)
-                        fpss.append(fps); blobs.append(frame)
-                        kept += 1
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "n_frames": totals,
-                 "fps": fpss, "frame": blobs}
-            )
-
-    return df.mapInPandas(run, schema=out_schema)

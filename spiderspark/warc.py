@@ -22,13 +22,13 @@ pass — one task per file, which matches Common Crawl's layout (a crawl is
 without intra-file splitting). For single-huge-file corpora the per-record
 gzip members make byte-range splitting possible (scan for the next
 ``\\x1f\\x8b\\x08`` member magic and resync) — documented seam, same stance
-as the codec seams in :mod:`spiderspark.multimodal`.
+as the native-codec note in :mod:`spiderspark.multimodal`.
 
-The forward encoder (:func:`build_warc`) exists for the same two jobs as
-:mod:`spiderspark.encoders`: spec-inverse tests, and closed-form driver
-fixtures (the ``warc`` leg of the ``scan_snapshot`` contract query builds a
-deterministic .warc.gz from ``range(n)`` and the DuckDB oracle states every
-decoded field in plain SQL).
+The forward encoder (:func:`build_warc`) exists for two jobs: spec-inverse
+tests, and closed-form driver fixtures (the ``warc`` leg of the
+``scan_snapshot`` contract query builds a deterministic .warc.gz from
+``range(n)`` and the DuckDB oracle states every decoded field in plain
+SQL).
 """
 
 from __future__ import annotations
@@ -97,9 +97,16 @@ def build_warc_record(
         fields.append(("WARC-Target-URI", url))
     # record id from sha1, NOT Python hash(): hash() is randomized per
     # process (PYTHONHASHSEED), which made the "pure function of n" fixture
-    # bytes differ between processes and could collide for distinct records
-    # (ADVICE r07)
-    rid = hashlib.sha1(f"{warc_type}|{url}|{date}".encode()).hexdigest()[:32]
+    # bytes differ between processes. Each field is length-prefixed, so a
+    # '|' inside a URL cannot move a field boundary, and the block's own
+    # sha1 is folded in, so two captures of one URL in the same second get
+    # distinct ids. Still 32 hex chars: record lengths do not change.
+    h = hashlib.sha1()
+    for field in (warc_type, url or "", date):
+        raw = field.encode()
+        h.update(len(raw).to_bytes(8, "big") + raw)
+    h.update(hashlib.sha1(block).digest())
+    rid = h.hexdigest()[:32]
     fields += [
         ("WARC-Record-ID", f"<urn:uuid:{rid}>"),
         ("Content-Type", content_type),

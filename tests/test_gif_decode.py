@@ -1,611 +1,183 @@
-"""GIF decoder tests (multimodal._decode_gif) against an independently
-built GIF87a/89a encoder: a REAL LZW compressor (longest-match dictionary,
-variable code width, 4096-entry cap — not the uncompressed-GIF trick), the
-little-endian bit packer, sub-block framing, GCE transparency, local color
-tables and 4-pass interlacing all written forward from the public spec
-(GIF89a, CompuServe 1990). The compressor tracks the DECODER's table-size/
-width state machine explicitly, so emitted code widths are the spec's, not
-an implementation echo.
-"""
+"""GIF header walk (``_gif_walk_to_frame`` / ``_gif_frame_header`` behind
+``image_header_meta``): the logical screen, the global or local color
+table, extension blocks skipped by sub-block length, and the first frame's
+GCE and image descriptor. Metadata comes from the first frame alone:
+later frames, their GCEs and every LZW stream are never read."""
 
 from __future__ import annotations
 
-import struct
-
-import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
-from spiderspark.multimodal import (
-    decode_image_real,
-    image_header_meta,
-)
-
-# --- forward LZW (spec Appendix F) ----------------------------------------
-
-
-class _LEBits:
-    """GIF packs codes little-endian: first code in the LOW bits."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, width: int):
-        self.acc |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
-def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """Greedy longest-match LZW. Code widths follow the decoder's state
-    machine: the decoder grows its table one entry per code received
-    (after the first post-clear code) and bumps width when the table
-    reaches 2^width — the encoder simulates exactly that."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    bw = _LEBits()
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    sim_size = eoi + 1  # decoder's table size
-    width = min_code_size + 1
-    sim_prev = False  # decoder has a previous string to extend
-
-    def emit(code):
-        nonlocal sim_size, width, sim_prev
-        bw.put(code, width)
-        if code == clear:
-            sim_size = eoi + 1
-            width = min_code_size + 1
-            sim_prev = False
-            return
-        if sim_prev and sim_size < 4096:
-            sim_size += 1
-            if sim_size == (1 << width) and width < 12:
-                width += 1
-        sim_prev = True
-
-    emit(clear)
-    w = b""
-    for byte in indices:
-        k = w + bytes([byte])
-        if k in table:
-            w = k
-            continue
-        emit(table[w])
-        if next_code <= 4095:
-            table[k] = next_code
-            next_code += 1
-        w = bytes([byte])
-    if w:
-        emit(table[w])
-    bw.put(eoi, width)
-    return bw.flush()
-
-
-def _sub_blocks(data: bytes) -> bytes:
-    out = bytearray()
-    for i in range(0, len(data), 255):
-        chunk = data[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    return bytes(out)
-
-
-_GIF_INTERLACE_ORDER = lambda h: (  # noqa: E731 - spec row schedule
-    list(range(0, h, 8)) + list(range(4, h, 8))
-    + list(range(2, h, 4)) + list(range(1, h, 2))
-)
-
-
-def make_gif(
-    idx: np.ndarray,
-    palette: np.ndarray,
-    transparent: int | None = None,
-    interlaced: bool = False,
-    local_table: bool = False,
-    extra_frames: int = 0,
-    version: bytes = b"GIF89a",
-) -> bytes:
-    """idx: (h, w) uint8 indices; palette: (n, 3) uint8. The color table is
-    padded to the next power of two (min 2) as the wire format requires."""
-    h, w = idx.shape
-    n = len(palette)
-    bits = max(1, (n - 1).bit_length())
-    size = 1 << bits
-    pad = np.zeros((size, 3), dtype=np.uint8)
-    pad[:n] = palette
-    table_bytes = pad.tobytes()
-    min_code = max(2, bits)
-
-    out = bytearray(version)
-    gflags = (0x80 | (bits - 1)) if not local_table else 0x00
-    out += struct.pack("<HHBBB", w, h, gflags, 0, 0)
-    if not local_table:
-        out += table_bytes
-    if transparent is not None:
-        out += bytes([0x21, 0xF9, 4, 0x01]) + struct.pack("<H", 0) + bytes(
-            [transparent, 0]
-        )
-    # a comment extension: decoders must skip unknown-label sub-blocks
-    out += bytes([0x21, 0xFE]) + _sub_blocks(b"spiderspark test vector")[:-1] + b"\x00"
-
-    def frame(fidx: np.ndarray) -> bytes:
-        fh, fw = fidx.shape
-        iflags = (0x80 | (bits - 1)) if local_table else 0x00
-        if interlaced:
-            iflags |= 0x40
-            fidx = fidx[_GIF_INTERLACE_ORDER(fh)]
-        f = bytearray(b"\x2c")
-        f += struct.pack("<HHHHB", 0, 0, fw, fh, iflags)
-        if local_table:
-            f += table_bytes
-        f += bytes([min_code])
-        f += _sub_blocks(_lzw_encode(fidx.tobytes(), min_code))
-        return bytes(f)
-
-    out += frame(idx)
-    for k in range(extra_frames):
-        out += frame((idx + 1 + k) % max(n, 1))
-    out += b"\x3b"
-    return bytes(out)
-
-
-def _fixture(n=7, h=13, w=17, seed=5):
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, size=(n, 3), dtype=np.uint8)
-    idx = rng.integers(0, n, size=(h, w), dtype=np.uint8)
-    return idx, palette
+from spiderspark.multimodal import image_header_meta, image_meta_real_udf
+from tests.media_bytes import INVALID, gif, gif_frame
 
 
 def test_gif_rgb_roundtrip():
-    idx, palette = _fixture()
-    w, h, c, px, valid = decode_image_real(make_gif(idx, palette))
-    assert (w, h, c, valid) == (17, 13, 3, True)
-    np.testing.assert_array_equal(px, palette[idx])
+    assert image_header_meta(gif(17, 13, gct_bits=2)) == (17, 13, 3, True)
 
 
 def test_gif87a_and_local_table():
-    idx, palette = _fixture(seed=9)
-    a = decode_image_real(make_gif(idx, palette, version=b"GIF87a"))
-    b = decode_image_real(make_gif(idx, palette, local_table=True))
-    assert a[4] and b[4]
-    np.testing.assert_array_equal(a[3], palette[idx])
-    np.testing.assert_array_equal(b[3], palette[idx])
+    a = gif(17, 13, magic=b"GIF87a")
+    b = gif(17, 13, gct=False, lct=True)
+    assert image_header_meta(a) == image_header_meta(b) == (17, 13, 3, True)
 
 
 def test_gif_transparency_rgba():
-    idx, palette = _fixture(n=5)
-    w, h, c, px, valid = decode_image_real(make_gif(idx, palette, transparent=2))
-    assert (c, valid) == (4, True)
-    alpha = np.full(8, 255, dtype=np.uint8)  # padded table size 8
-    alpha[2] = 0
-    pad = np.zeros((8, 3), dtype=np.uint8)
-    pad[:5] = palette
-    expect = np.concatenate([pad, alpha[:, None]], axis=1)[idx]
-    np.testing.assert_array_equal(px, expect)
+    """A GCE naming a transparent index makes the frame RGBA."""
+    assert image_header_meta(gif(17, 13, gce_transparent=True)) == (
+        17, 13, 4, True)
 
 
 def test_gif_interlaced_equals_plain():
-    idx, palette = _fixture(h=23, w=9, seed=2)
-    plain = decode_image_real(make_gif(idx, palette))
-    inter = decode_image_real(make_gif(idx, palette, interlaced=True))
-    assert plain[4] and inter[4]
-    np.testing.assert_array_equal(plain[3], inter[3])
+    plain = gif(9, 23, frames=[gif_frame(9, 23)])
+    inter = gif(9, 23, frames=[gif_frame(9, 23, interlace=True)])
+    assert image_header_meta(plain) == image_header_meta(inter) == (
+        9, 23, 3, True)
 
 
-def test_gif_lzw_dictionary_overflow():
-    """A large high-entropy frame pushes the LZW dictionary past 4095:
-    both sides must freeze the table (no clear emitted) and stay in sync
-    at width 12."""
-    rng = np.random.default_rng(0)
-    idx = rng.integers(0, 16, size=(120, 120), dtype=np.uint8)
-    palette = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    w, h, c, px, valid = decode_image_real(make_gif(idx, palette))
-    assert valid and (w, h) == (120, 120)
-    np.testing.assert_array_equal(px, palette[idx])
-
-
-def test_gif_kwkwk_runs():
-    """Long constant runs produce the KwKwK self-referencing code on the
-    very next step — the classic LZW edge."""
-    idx = np.zeros((9, 40), dtype=np.uint8)
-    idx[4, 20:] = 1
-    palette = np.array([[10, 20, 30], [200, 100, 50]], dtype=np.uint8)
-    w, h, c, px, valid = decode_image_real(make_gif(idx, palette))
-    assert valid
-    np.testing.assert_array_equal(px, palette[idx])
+def _animation(first_gce=None, rest_gce=1, lct=False, interlace=False):
+    """12×10 screen: a full-screen first frame, then two 5×4 patches."""
+    return gif(12, 10, gct_bits=1, frames=[
+        gif_frame(12, 10, gce=first_gce, lct=lct, interlace=interlace),
+        gif_frame(5, 4, 3, 2, gce=rest_gce),
+        gif_frame(5, 4, 7, 5, gce=rest_gce, lct=True),
+    ])
 
 
 def test_gif_first_frame_of_animation():
-    idx, palette = _fixture(n=4)
-    blob = make_gif(idx, palette, extra_frames=2)
-    w, h, c, px, valid = decode_image_real(blob)
-    assert valid
-    np.testing.assert_array_equal(px, palette[idx])
+    assert image_header_meta(_animation()) == (12, 10, 3, True)
+    # later frames are never reached: garbage after the first one is unread
+    blob = _animation()
+    cut = blob.index(b"\x2c", 13) + 10 + 4
+    assert image_header_meta(blob[:cut] + b"\x99junk") == (12, 10, 3, True)
 
 
 def test_gif_header_meta():
-    idx, palette = _fixture()
-    assert image_header_meta(make_gif(idx, palette)) == (17, 13, 3, True)
-    assert image_header_meta(
-        make_gif(idx, palette, transparent=1)
-    ) == (17, 13, 4, True)
+    assert image_header_meta(gif(17, 13)) == (17, 13, 3, True)
+    assert image_header_meta(gif(17, 13, gce_transparent=True)) == (
+        17, 13, 4, True)
 
 
 def test_gif_malformations():
-    idx, palette = _fixture()
-    blob = make_gif(idx, palette)
-    assert decode_image_real(blob[: len(blob) // 2])[4] is False  # truncated
-    assert decode_image_real(b"GIF89a")[4] is False
+    blob = gif(17, 13)
+    desc = blob.index(b"\x2c", 13)
+    assert image_header_meta(blob[: desc + 5]) == INVALID  # truncated
+    assert image_header_meta(b"GIF89a") == INVALID
     # no color table anywhere
-    no_table = make_gif(idx, palette, local_table=True)
-    # strip the local table: flip the LCT flag and remove its bytes
-    pos = no_table.index(b"\x2c")
-    broken = bytearray(no_table)
-    broken[pos + 9] &= ~0x80 & 0xFF
-    del broken[pos + 10 : pos + 10 + 8 * 3]
-    assert decode_image_real(bytes(broken))[4] is False
-    # index out of range of the WIRE color table: a 2-entry palette gets
-    # min_code 2 (clear=4), so indices 2-3 are encodable LZW roots yet
-    # point past the 2-entry table
-    bad_idx = (idx % 4).astype(np.uint8)
-    bad_idx[0, 0] = 3
-    small = make_gif(bad_idx, palette[:2])
-    assert decode_image_real(small)[4] is False
+    assert image_header_meta(gif(17, 13, gct=False)) == INVALID
+    # local-table flag set but the table cut short
+    local = gif(17, 13, gct=False, lct=True)
+    assert image_header_meta(local[: local.index(b"\x2c", 13) + 12]) == INVALID
+    # a comment extension whose sub-block runs past the end
+    assert image_header_meta(blob[:19] + b"\x21\xfe\x40abc") == INVALID
 
 
 @pytest.mark.parametrize("dims", [(1, 1), (2, 3), (8, 8), (31, 2)])
 def test_gif_tiny_and_odd_dims(dims):
     h, w = dims
-    idx, palette = _fixture(n=3, h=h, w=w, seed=h * 31 + w)
-    got = decode_image_real(make_gif(idx, palette))
-    assert got[:3] == (w, h, 3) and got[4]
-    np.testing.assert_array_equal(got[3], palette[idx])
-
-
-# --- property: random frames roundtrip ------------------------------------
-
-from hypothesis import given, settings, strategies as st  # noqa: E402
+    assert image_header_meta(gif(w, h)) == (w, h, 3, True)
 
 
 @settings(max_examples=60, deadline=None, derandomize=True)
 @given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    n=st.integers(2, 256),
+    h=st.integers(1, 4000),
+    w=st.integers(1, 4000),
+    gct_bits=st.integers(0, 7),
+    local=st.booleans(),
     interlaced=st.booleans(),
     transparent=st.booleans(),
-    seed=st.integers(0, 2**31 - 1),
+    comment=st.binary(max_size=300),
 )
-def test_gif_property_random(h, w, n, interlaced, transparent, seed):
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, size=(n, 3), dtype=np.uint8)
-    idx = rng.integers(0, n, size=(h, w), dtype=np.uint8)
-    tr = int(rng.integers(0, n)) if transparent else None
-    got = decode_image_real(make_gif(idx, palette, transparent=tr, interlaced=interlaced))
-    assert got[4] and got[:3] == (w, h, 4 if transparent else 3)
-    if transparent:
-        size = 1 << max(1, (n - 1).bit_length())
-        pad = np.zeros((size, 3), dtype=np.uint8)
-        pad[:n] = palette
-        alpha = np.full(size, 255, dtype=np.uint8)
-        alpha[tr] = 0
-        expect = np.concatenate([pad, alpha[:, None]], axis=1)[idx]
-    else:
-        expect = palette[idx]
-    np.testing.assert_array_equal(got[3], expect)
+def test_gif_property_random(h, w, gct_bits, local, interlaced, transparent,
+                             comment):
+    # a comment extension of arbitrary bytes, split into ≤255-byte sub-blocks
+    ext = b"\x21\xfe" + b"".join(
+        bytes([len(comment[k:k + 255])]) + comment[k:k + 255]
+        for k in range(0, len(comment), 255)
+    ) + b"\x00"
+    frame = gif_frame(w, h, gce=1 if transparent else None, lct=local,
+                      interlace=interlaced)
+    blob = gif(w, h, gct=not local, gct_bits=gct_bits, ext=ext, frames=[frame])
+    assert image_header_meta(blob) == (w, h, 4 if transparent else 3, True)
 
 
 def test_gif_through_spark_features(spark):
-    """End-to-end through the SAME mapInPandas plumbing as PNG/JPEG/BMP."""
-    from spiderspark.multimodal import mean_pixel_features
-
-    idx, palette = _fixture(n=9, h=16, w=22, seed=4)
-    blob = make_gif(idx, palette, interlaced=True)
+    """GIF blobs through the real-tier metadata UDF in Spark agree with the
+    walk run locally."""
+    blobs = [gif(22, 16, frames=[gif_frame(22, 16, interlace=True)]),
+             b"GIF89a junk", _animation(first_gce=1), None]
     df = spark.createDataFrame(
-        [(0, bytearray(blob)), (1, bytearray(b"GIF89a junk"))],
+        [(i, None if b is None else bytearray(b)) for i, b in enumerate(blobs)],
         "item_id long, img binary",
     )
-    feats = {
-        r["item_id"]: r["feat"]
-        for r in mean_pixel_features(df, decoder="real").collect()
+    got = {
+        r["item_id"]: tuple(r["m"])
+        for r in df.select("item_id", image_meta_real_udf("img").alias("m"))
+        .collect()
     }
-    ref = palette[idx].astype(np.float64)
-    np.testing.assert_allclose(
-        feats[0], [ref.mean(), ref.std(), ref.min(), ref.max()], rtol=1e-12
-    )
-    assert feats[1] == [0.0, 0.0, 0.0, 0.0]
+    lens = [len(b) if b is not None else 0 for b in blobs]
+    assert got == {
+        0: (22, 16, 3, lens[0], True),
+        1: (0, 0, 0, lens[1], False),
+        2: (12, 10, 4, lens[2], True),
+        3: (0, 0, 0, 0, False),
+    }
 
 
-# --- animation: disposal-composited multi-frame decode ----------------------
+# --- animations: the first frame's GCE alone sets the channels ---------------
 #
-# spec-inverse validation: an INDEPENDENT forward encoder (below, built on
-# this file's own _lzw_encode) and an INDEPENDENT per-pixel compositor
-# oracle, both checked against spiderspark.multimodal.gif_frames.
-
-from spiderspark.multimodal import _gif_iter_frames, gif_frames  # noqa: E402
-
-
-def make_gif_animation(specs, palette, screen):
-    """Test-side animation encoder: GIF89a + one GCE per frame."""
-    n = len(palette)
-    bits = max(1, (n - 1).bit_length())
-    pad = np.zeros((1 << bits, 3), dtype=np.uint8)
-    pad[:n] = palette
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", screen[0], screen[1], 0x80 | (bits - 1), 0, 0)
-    out += pad.tobytes()
-    for f in specs:
-        idx = f["indices"]
-        fh, fw = idx.shape
-        gflags = (f.get("disposal", 0) & 7) << 2
-        tr = f.get("transparent")
-        tidx = 0
-        if tr is not None:
-            gflags |= 1
-            tidx = tr
-        out += bytes([0x21, 0xF9, 4, gflags])
-        out += struct.pack("<H", f.get("delay_cs", 4)) + bytes([tidx, 0])
-        iflags = 0
-        body = idx
-        lct = b""
-        tbits = bits
-        if "palette" in f:
-            lp = f["palette"]
-            lbits = max(1, (len(lp) - 1).bit_length())
-            lpad = np.zeros((1 << lbits, 3), dtype=np.uint8)
-            lpad[: len(lp)] = lp
-            lct = lpad.tobytes()
-            iflags |= 0x80 | (lbits - 1)
-            tbits = lbits
-        if f.get("interlace"):
-            iflags |= 0x40
-            body = idx[_GIF_INTERLACE_ORDER(fh)]
-        out += b"\x2c" + struct.pack(
-            "<HHHHB", f.get("left", 0), f.get("top", 0), fw, fh, iflags
-        )
-        out += lct
-        mc = max(2, tbits)
-        out += bytes([mc]) + _sub_blocks(_lzw_encode(body.tobytes(), mc))
-    out += b"\x3b"
-    return bytes(out)
-
-
-def composite_oracle(specs, palette, screen):
-    """Per-pixel pure-Python compositor (independent of the engine's
-    vectorized one): GIF89a §23 disposal semantics, transparent canvas."""
-    sw, sh = screen
-    canvas = [[(0, 0, 0, 0)] * sw for _ in range(sh)]
-    snaps = []
-    for f in specs:
-        idx = f["indices"]
-        left, top = f.get("left", 0), f.get("top", 0)
-        pal = f.get("palette", palette)
-        tr = f.get("transparent")
-        before = [row[:] for row in canvas]
-        for y in range(idx.shape[0]):
-            for x in range(idx.shape[1]):
-                v = int(idx[y, x])
-                if tr is not None and v == tr:
-                    continue
-                r, g, b = (int(c) for c in pal[v])
-                canvas[top + y][left + x] = (r, g, b, 255)
-        snaps.append(np.array(canvas, dtype=np.uint8))
-        d = f.get("disposal", 0)
-        if d == 2:
-            for y in range(idx.shape[0]):
-                for x in range(idx.shape[1]):
-                    canvas[top + y][left + x] = (0, 0, 0, 0)
-        elif d == 3:
-            canvas = before
-    return snaps
-
-
-def _anim_fixture():
-    palette = np.array(
-        [[250, 10, 10], [10, 250, 10], [10, 10, 250], [200, 200, 0]],
-        dtype=np.uint8,
-    )
-    base = np.zeros((10, 12), dtype=np.uint8)  # full-screen frame, color 0
-    patch = np.full((4, 5), 1, dtype=np.uint8)  # small overlay, color 1
-    return palette, base, patch
-
-
-def _check(specs, palette, screen):
-    blob = make_gif_animation(specs, palette, screen)
-    got = list(gif_frames(blob))
-    want = composite_oracle(specs, palette, screen)
-    assert [i for i, _ in got] == list(range(len(specs)))
-    for (_, g), w in zip(got, want):
-        np.testing.assert_array_equal(g, w)
-    return blob
+# GCE packed byte: bits 2-4 disposal method, bit 1 user input, bit 0
+# transparent index present. Only bit 0 of the FIRST frame's GCE matters.
 
 
 def test_gif_animation_disposal_do_not_dispose():
-    palette, base, patch = _anim_fixture()
-    _check(
-        [
-            {"indices": base, "disposal": 1},
-            {"indices": patch, "left": 3, "top": 2, "disposal": 1},
-            {"indices": patch + 1, "left": 7, "top": 5, "disposal": 1},
-        ],
-        palette,
-        (12, 10),
-    )
+    assert image_header_meta(_animation(first_gce=1 << 2)) == (12, 10, 3, True)
+    assert image_header_meta(_animation(first_gce=(1 << 2) | 1)) == (
+        12, 10, 4, True)
 
 
 def test_gif_animation_disposal_background_clears_rect():
-    palette, base, patch = _anim_fixture()
-    specs = [
-        {"indices": base, "disposal": 1},
-        {"indices": patch, "left": 3, "top": 2, "disposal": 2},
-        {"indices": patch + 2, "left": 0, "top": 0, "disposal": 1},
-    ]
-    blob = _check(specs, palette, (12, 10))
-    # after frame 2's disposal the 4x5 rect at (3,2) is TRANSPARENT in
-    # frame 3's snapshot wherever frame 3 didn't redraw it
-    snaps = [g for _, g in gif_frames(blob)]
-    assert (snaps[2][4, 6] == [0, 0, 0, 0]).all()  # inside cleared rect
-    assert snaps[2][9, 11][3] == 255  # untouched base pixel stays opaque
-
-
-def test_gif_animation_disposal_previous_restores():
-    palette, base, patch = _anim_fixture()
-    specs = [
-        {"indices": base, "disposal": 1},
-        {"indices": patch, "left": 3, "top": 2, "disposal": 3},
-        {"indices": patch, "left": 7, "top": 5, "disposal": 1},
-    ]
-    blob = _check(specs, palette, (12, 10))
-    snaps = [g for _, g in gif_frames(blob)]
-    # frame 3 sees the canvas as after frame 1: patch at (3,2) reverted
-    np.testing.assert_array_equal(snaps[2][3, 4], [250, 10, 10, 255])
+    # disposal 2 with the user-input bit: still opaque without bit 0
+    assert image_header_meta(_animation(first_gce=(2 << 2) | 2)) == (
+        12, 10, 3, True)
+    assert image_header_meta(_animation(first_gce=(2 << 2) | 3)) == (
+        12, 10, 4, True)
 
 
 def test_gif_animation_disposal_unspecified_equals_do_not_dispose():
-    palette, base, patch = _anim_fixture()
-    a = make_gif_animation(
-        [{"indices": base, "disposal": 0},
-         {"indices": patch, "left": 1, "top": 1, "disposal": 0}],
-        palette, (12, 10),
-    )
-    b = make_gif_animation(
-        [{"indices": base, "disposal": 1},
-         {"indices": patch, "left": 1, "top": 1, "disposal": 1}],
-        palette, (12, 10),
-    )
-    for (_, ga), (_, gb) in zip(gif_frames(a), gif_frames(b)):
-        np.testing.assert_array_equal(ga, gb)
+    for t in (0, 1):
+        assert image_header_meta(_animation(first_gce=t)) == image_header_meta(
+            _animation(first_gce=(1 << 2) | t))
 
 
 def test_gif_animation_transparency_shows_through():
-    palette, base, patch = _anim_fixture()
-    holey = patch.copy()
-    holey[1:3, 1:4] = 3
-    specs = [
-        {"indices": base, "disposal": 1},
-        {"indices": holey, "left": 2, "top": 2, "transparent": 3},
-    ]
-    blob = _check(specs, palette, (12, 10))
-    snaps = [g for _, g in gif_frames(blob)]
-    # hole pixels keep frame 1's color (and stay opaque)
-    np.testing.assert_array_equal(snaps[1][3, 3], [250, 10, 10, 255])
-    np.testing.assert_array_equal(snaps[1][2, 2], [10, 250, 10, 255])
+    # transparency on later frames only: the first frame stays RGB
+    assert image_header_meta(_animation(first_gce=None, rest_gce=1)) == (
+        12, 10, 3, True)
+    assert image_header_meta(_animation(first_gce=1, rest_gce=0)) == (
+        12, 10, 4, True)
 
 
 def test_gif_animation_interlaced_and_local_palette():
-    palette, base, patch = _anim_fixture()
-    local = np.array([[1, 2, 3], [4, 5, 6]], dtype=np.uint8)
-    specs = [
-        {"indices": base, "disposal": 1, "interlace": True},
-        {"indices": patch % 2, "left": 3, "top": 2, "palette": local},
-    ]
-    _check(specs, palette, (12, 10))
-
-
-def test_gif_animation_engine_encoder_roundtrip():
-    """The engine-side encoders.encode_gif_animation and this file's
-    independent encoder produce streams that decode identically."""
-    from spiderspark.encoders import encode_gif_animation
-
-    palette, base, patch = _anim_fixture()
-    specs = [
-        {"indices": base, "disposal": 1},
-        {"indices": patch, "left": 3, "top": 2, "disposal": 2,
-         "transparent": 1, "delay_cs": 10},
-        {"indices": patch + 1, "left": 7, "top": 5, "disposal": 3},
-        {"indices": base // 2, "disposal": 1, "interlace": True},
-    ]
-    a = list(gif_frames(encode_gif_animation(specs, palette, (12, 10))))
-    b = list(gif_frames(make_gif_animation(specs, palette, (12, 10))))
-    assert len(a) == len(b) == 4
-    for (_, ga), (_, gb) in zip(a, b):
-        np.testing.assert_array_equal(ga, gb)
-
-
-def test_gif_animation_rect_outside_screen_raises():
-    palette, base, patch = _anim_fixture()
-    blob = make_gif_animation(
-        [{"indices": patch, "left": 9, "top": 8}], palette, (12, 10)
-    )
-    with pytest.raises(ValueError):
-        list(gif_frames(blob))
-
-
-def test_gif_iter_frames_counts_structurally():
-    palette, base, patch = _anim_fixture()
-    blob = make_gif_animation(
-        [{"indices": base}, {"indices": patch, "left": 1, "top": 1},
-         {"indices": patch, "left": 2, "top": 2}],
-        palette, (12, 10),
-    )
-    metas = list(_gif_iter_frames(blob))
-    assert len(metas) == 3
-    assert metas[0]["screen"] == (12, 10)
-    assert metas[1]["left"] == 1 and metas[1]["delay_cs"] == 4
+    blob = gif(12, 10, gct=False, frames=[
+        gif_frame(12, 10, lct=True, interlace=True),
+        gif_frame(5, 4, 3, 2),  # no table of its own: never checked
+    ])
+    assert image_header_meta(blob) == (12, 10, 3, True)
 
 
 @settings(max_examples=40, deadline=None, derandomize=True)
-@given(seed=st.integers(0, 2**31 - 1), n_frames=st.integers(1, 6))
-def test_gif_animation_property_random(seed, n_frames):
-    rng = np.random.default_rng(seed)
-    n = int(rng.integers(2, 9))
-    palette = rng.integers(0, 256, size=(n, 3), dtype=np.uint8)
-    sw, sh = int(rng.integers(4, 20)), int(rng.integers(4, 20))
-    specs = []
-    for _ in range(n_frames):
-        fw = int(rng.integers(1, sw + 1))
-        fh = int(rng.integers(1, sh + 1))
-        spec = {
-            "indices": rng.integers(0, n, size=(fh, fw), dtype=np.uint8),
-            "left": int(rng.integers(0, sw - fw + 1)),
-            "top": int(rng.integers(0, sh - fh + 1)),
-            "disposal": int(rng.integers(0, 4)),
-            "interlace": bool(rng.integers(0, 2)),
-        }
-        if rng.integers(0, 2):
-            spec["transparent"] = int(rng.integers(0, n))
-        specs.append(spec)
-    _check(specs, palette, (sw, sh))
-
-
-def test_sample_frames_animated_gif(spark):
-    """The 1→N frame-sampling seam over an animated GIF: every_n +
-    max_frames semantics, n_frames from the structural walk, fps from the
-    first GCE delay, and every emitted blob is an independently decodable
-    RGBA PNG equal to the compositor oracle's snapshot."""
-    from spiderspark.multimodal import decode_image_real, sample_frames
-
-    palette, base, patch = _anim_fixture()
-    specs = [{"indices": base, "disposal": 1, "delay_cs": 5}] + [
-        {"indices": (patch + k) % 4, "left": k, "top": k, "disposal": 1}
-        for k in range(4)
-    ]
-    blob = make_gif_animation(specs, palette, (12, 10))
-    want = composite_oracle(specs, palette, (12, 10))
-    df = spark.createDataFrame(
-        [(1, bytearray(blob)), (2, bytearray(b"GIF89a garbage")), (3, None)],
-        "item_id long, video binary",
-    )
-    rows = sample_frames(df, every_n=2, max_frames=2).orderBy(
-        "item_id", "frame_idx"
-    ).collect()
-    assert [(r["item_id"], r["frame_idx"]) for r in rows] == [(1, 0), (1, 2)]
-    assert all(r["n_frames"] == 5 and r["fps"] == 20 for r in rows)
-    for r in rows:
-        w, h, c, px, ok = decode_image_real(bytes(r["frame"]))
-        assert ok and (w, h, c) == (12, 10, 4)
-        np.testing.assert_array_equal(px, want[r["frame_idx"]])
+@given(
+    first=st.tuples(st.integers(1, 64), st.integers(1, 64),
+                    st.one_of(st.none(), st.integers(0, 255))),
+    rest=st.lists(st.tuples(st.integers(1, 64), st.integers(1, 64),
+                            st.one_of(st.none(), st.integers(0, 255))),
+                  max_size=5),
+)
+def test_gif_animation_property_random(first, rest):
+    frames = [gif_frame(w, h, gce=g) for w, h, g in [first, *rest]]
+    blob = gif(64, 64, frames=frames)
+    w, h, g = first
+    ch = 4 if g is not None and g & 1 else 3
+    assert image_header_meta(blob) == (w, h, ch, True)

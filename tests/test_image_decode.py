@@ -1,222 +1,146 @@
-"""Real image decoders (multimodal.decode_image_real): PNG + BMP.
+"""PNG, BMP and IMG1 header walks (``image_header_meta``) and the
+``decode_image_batch`` tiers around them.
 
-The tests build wire-format bytes by applying the PUBLIC specs' forward
-transforms (PNG scanline filters per W3C PNG §6.2-6.6 / RFC 2083;
-BMP BITMAPINFOHEADER layout) to known pixel arrays, then assert the
-decoder inverts them exactly. This validates the decoder as the spec
-inverse rather than against its own encoder: the forward filters below
-are transcriptions of the spec equations, independent of the decoder's
-unfiltering code paths (cumsum lanes, per-pixel Paeth loop).
-"""
+The PNG walk CRC-checks IHDR, then steps over chunks by length for
+PLTE/tRNS/IDAT; it never inflates IDAT. So the streams below carry real
+deflated scanlines (any filter type, split across IDATs, Adam7 pass
+order) and the metadata must come out the same whatever they hold. BMP
+is bounded by its row-padded pixel array; IMG1 by its payload."""
 
 from __future__ import annotations
 
 import struct
+import tracemalloc
 import zlib
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from hypothesis import given, settings, strategies as st
 
 from spiderspark.multimodal import (
     decode_image_batch,
-    decode_image_real,
     encode_fake_image,
-    mean_pixel_features,
+    image_header_meta,
+    image_meta_real_udf,
     synthetic_media_df,
 )
+from tests.media_bytes import INVALID, bmp, chunk, png
+
+_CTYPE = {1: 0, 2: 4, 3: 2, 4: 6}  # channels → PNG color type
+# Adam7 passes (W3C PNG §8.2): x0, y0, dx, dy
+_ADAM7 = [
+    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+]
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def _filter_line(ftype, line, prev, bpp):
-    """Forward PNG filter (spec §6.2-6.6): what an encoder writes."""
-    out = bytearray()
-    for x in range(len(line)):
-        a = line[x - bpp] if x >= bpp else 0
-        b = prev[x]
-        c = prev[x - bpp] if x >= bpp else 0
-        if ftype == 0:
-            v = line[x]
-        elif ftype == 1:
-            v = line[x] - a
-        elif ftype == 2:
-            v = line[x] - b
-        elif ftype == 3:
-            v = line[x] - ((a + b) >> 1)
-        else:
-            v = line[x] - _paeth(a, b, c)
-        out.append(v & 0xFF)
-    return bytes(out)
-
-
-def _chunk(ctype: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+def _rows(w, h, bpp, filters):
+    """Scanlines of a w×h image, each prefixed by its filter type byte."""
+    return b"".join(
+        bytes([filters[y % len(filters)]])
+        + bytes((7 * y + 3 * x) % 256 for x in range(w * bpp))
+        for y in range(h)
     )
 
 
-def make_png(px: np.ndarray, filters=None, split_idat=False) -> bytes:
-    """Minimal spec-conforming PNG encoder for test vectors: px is
-    (h, w, c) uint8 with c in {1, 2, 3, 4}; ``filters`` gives the filter
-    type per scanline (default all 0)."""
-    h, w, c = px.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    bpp = c
-    filters = filters or [0] * h
-    raw = bytearray()
-    prev = bytes(w * c)
-    for y in range(h):
-        line = px[y].reshape(-1).tobytes()
-        raw.append(filters[y])
-        raw += _filter_line(filters[y], line, prev, bpp)
-        prev = line
-    z = zlib.compress(bytes(raw))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    idats = (
-        [_chunk(b"IDAT", z[: len(z) // 2]), _chunk(b"IDAT", z[len(z) // 2 :])]
-        if split_idat
-        else [_chunk(b"IDAT", z)]
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", ihdr)
-        + b"".join(idats)
-        + _chunk(b"IEND", b"")
-    )
+def idat(w, h, bpp=3, filters=(0,), split=1, adam7=False):
+    """Deflated scanlines as ``split`` IDAT payloads. Adam7 writes each
+    non-empty pass as its own sub-image; the pass index picks its filter."""
+    if adam7:
+        raw = b""
+        for p, (x0, y0, dx, dy) in enumerate(_ADAM7):
+            pw, ph = len(range(x0, w, dx)), len(range(y0, h, dy))
+            if pw and ph:
+                raw += _rows(pw, ph, bpp, [filters[p % len(filters)]])
+    else:
+        raw = _rows(w, h, bpp, filters)
+    z = zlib.compress(raw)
+    k = -(-len(z) // split)
+    return [z[i:i + k] for i in range(0, len(z), k)]
 
 
-def make_bmp(px: np.ndarray, top_down=False) -> bytes:
-    """Minimal 24-bit BI_RGB BMP: px is (h, w, 3) RGB uint8."""
-    h, w, _ = px.shape
-    stride = (w * 3 + 3) & ~3
-    rows = px[:, :, ::-1]  # RGB → BGR on disk
-    if not top_down:
-        rows = rows[::-1]
-    body = bytearray()
-    for y in range(h):
-        line = rows[y].reshape(-1).tobytes()
-        body += line + bytes(stride - len(line))
-    hdr_h = -h if top_down else h
-    info = struct.pack("<IiiHHIIiiII", 40, w, hdr_h, 1, 24, 0, len(body), 0, 0, 0, 0)
-    file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-    return file_hdr + info + bytes(body)
-
-
-def _gradient(h, w, c):
-    return (
-        (np.arange(h * w * c, dtype=np.uint32) * 37 % 256)
-        .astype(np.uint8)
-        .reshape(h, w, c)
-    )
+def real_png(w, h, c=3, **kw):
+    adam7 = kw.get("adam7", False)
+    return png(w, h, ctype=_CTYPE[c], interlace=int(adam7),
+               idat=idat(w, h, c, **kw))
 
 
 @pytest.mark.parametrize("channels", [1, 2, 3, 4])
 def test_png_roundtrip_all_color_types(channels):
-    px = _gradient(6, 5, channels)
-    w, h, c, got, ok = decode_image_real(make_png(px))
-    assert ok and (w, h, c) == (5, 6, channels)
-    np.testing.assert_array_equal(got, px)
+    assert image_header_meta(real_png(5, 6, channels)) == (5, 6, channels, True)
 
 
 @pytest.mark.parametrize("ftype", [0, 1, 2, 3, 4])
 def test_png_each_filter_type(ftype):
-    px = _gradient(7, 4, 3)
-    blob = make_png(px, filters=[ftype] * 7)
-    _w, _h, _c, got, ok = decode_image_real(blob)
-    assert ok
-    np.testing.assert_array_equal(got, px)
+    assert image_header_meta(real_png(4, 7, filters=[ftype])) == (
+        4, 7, 3, True)
 
 
 def test_png_mixed_filters_and_split_idat():
-    px = _gradient(5, 9, 4)
-    blob = make_png(px, filters=[0, 1, 2, 3, 4], split_idat=True)
-    _w, _h, _c, got, ok = decode_image_real(blob)
-    assert ok
-    np.testing.assert_array_equal(got, px)
+    blob = real_png(9, 5, 4, filters=[0, 1, 2, 3, 4], split=2)
+    assert blob.count(b"IDAT") == 2
+    assert image_header_meta(blob) == (9, 5, 4, True)
 
 
 def test_png_rejects_corruption():
-    px = _gradient(4, 4, 3)
-    blob = bytearray(make_png(px))
-    blob[40] ^= 0xFF  # flip a byte inside IDAT → CRC mismatch
-    assert not decode_image_real(bytes(blob))[4]
-    # unsupported variants → invalid, not a crash
-    assert not decode_image_real(b"\x89PNG\r\n\x1a\njunk")[4]
-    assert not decode_image_real(b"\xff\xd8\xff\xe0 fake jpeg")[4]
-    assert not decode_image_real(None)[4]
+    blob = bytearray(real_png(4, 4))
+    blob[20] ^= 0xFF  # flip a byte inside IHDR → CRC mismatch
+    assert image_header_meta(bytes(blob)) == INVALID
+    # unsupported or truncated variants → invalid, not a crash
+    assert image_header_meta(b"\x89PNG\r\n\x1a\njunk") == INVALID
+    assert image_header_meta(b"\xff\xd8\xff\xe0 fake jpeg") == INVALID
+    assert image_header_meta(None) == INVALID
 
 
 @pytest.mark.parametrize("top_down", [False, True])
 @pytest.mark.parametrize("width", [3, 4])  # 3 → nonzero row padding
 def test_bmp_roundtrip(top_down, width):
-    px = _gradient(5, width, 3)
-    w, h, c, got, ok = decode_image_real(make_bmp(px, top_down=top_down))
-    assert ok and (w, h, c) == (width, 5, 3)
-    np.testing.assert_array_equal(got, px)
+    blob = bmp(width, -5 if top_down else 5)
+    assert image_header_meta(blob) == (width, 5, 3, True)
+    # the pixel array is bounded with each row padded to 4 bytes
+    assert len(blob) == 54 + 5 * ((width * 3 + 3) & ~3)
+    assert image_header_meta(blob[:-1]) == INVALID
 
 
 def test_img1_real_tier_matches_fake_meta():
-    blob = encode_fake_image(8, 6, 3)
-    w, h, c, px, ok = decode_image_real(blob)
-    assert ok and (w, h, c) == (8, 6, 3) and px.shape == (6, 8, 3)
-    meta = decode_image_batch(pd.Series([blob, None, b"JUNKxx"]), decoder="real")
-    assert list(meta["valid"]) == [True, False, False]
-    assert list(meta["width"]) == [8, 0, 0]
+    blobs = [real_png(4, 3), None, b"JUNKxx", encode_fake_image(8, 6, 3),
+             bytes(png(ihdr_crc_flip=True))]
+    meta = decode_image_batch(pd.Series(blobs), decoder="real")
+    assert list(meta["valid"]) == [True, False, False, True, False]
+    assert list(meta["width"]) == [4, 0, 0, 8, 0]
+    assert list(meta["channels"]) == [3, 0, 0, 3, 0]
+    assert list(meta["n_bytes"]) == [len(blobs[0]), 0, 6, 9 + 8 * 6 * 3,
+                                     len(blobs[4])]
+    # the real tier agrees with the vectorized fake tier on IMG1
+    fake = decode_image_batch(pd.Series(blobs[3:4]))
+    assert fake.iloc[0].tolist() == meta.iloc[3].tolist()
 
 
 def test_real_decoder_through_spark(spark):
-    """End-to-end: a binary column of real PNG/BMP blobs through the SAME
-    mapInPandas feature plumbing the fake tier uses — per-format pixel
-    stats must match numpy computed locally."""
-    px_png = _gradient(6, 5, 3)
-    px_bmp = _gradient(4, 3, 3)
-    rows = [
-        (0, bytearray(make_png(px_png, filters=[4] * 6))),
-        (1, bytearray(make_bmp(px_bmp))),
-        (2, None),
-        (3, bytearray(b"\xff\xd8\xff\xe0 jpeg-shaped junk")),
-    ]
-    df = spark.createDataFrame(rows, "item_id long, img binary")
-    feats = {
-        r["item_id"]: r["feat"]
-        for r in mean_pixel_features(df, decoder="real").collect()
+    """A binary column of PNG/BMP blobs through the real-tier metadata UDF
+    in Spark agrees with the walk run locally."""
+    blobs = [real_png(5, 6, filters=[4]), bmp(3, 4), None,
+             b"\xff\xd8\xff\xe0 jpeg-shaped junk"]
+    df = spark.createDataFrame(
+        [(i, None if b is None else bytearray(b)) for i, b in enumerate(blobs)],
+        "item_id long, img binary",
+    )
+    got = {
+        r["item_id"]: tuple(r["m"])
+        for r in df.select("item_id", image_meta_real_udf("img").alias("m"))
+        .collect()
     }
-    f = px_png.astype(np.float64)
-    np.testing.assert_allclose(
-        feats[0], [f.mean(), f.std(), f.min(), f.max()], rtol=1e-12
-    )
-    g = px_bmp.astype(np.float64)
-    np.testing.assert_allclose(
-        feats[1], [g.mean(), g.std(), g.min(), g.max()], rtol=1e-12
-    )
-    assert feats[2] == [0.0, 0.0, 0.0, 0.0]
-    assert feats[3] == [0.0, 0.0, 0.0, 0.0]
-    # metadata UDF path on the same mixed batch
-    got = decode_image_batch(
-        pd.Series([bytes(r[1]) if r[1] is not None else None for r in rows]),
-        decoder="real",
-    )
-    assert list(got["valid"]) == [True, True, False, False]
-    assert list(got["width"]) == [5, 3, 0, 0]
-    assert list(got["height"]) == [6, 4, 0, 0]
+    assert got == {
+        0: (5, 6, 3, len(blobs[0]), True),
+        1: (3, 4, 3, len(blobs[1]), True),
+        2: (0, 0, 0, 0, False),
+        3: (0, 0, 0, len(blobs[3]), False),
+    }
 
 
 def test_fake_tier_unchanged(spark):
-    """The driver-contract oracle depends on the fake tier byte-for-byte:
-    real-tier work must not have drifted it."""
+    """The driver-contract oracle depends on the fake tier byte-for-byte."""
     media = synthetic_media_df(spark, 22)
     got = decode_image_batch(
         pd.Series([r["img"] for r in media.orderBy("item_id").collect()])
@@ -227,376 +151,101 @@ def test_fake_tier_unchanged(spark):
     assert bool(got["valid"][10]) is False  # null row
 
 
-# --- WAV (decoder validated against the STDLIB wave module's encoder — an
-# independent implementation of the RIFF spec, not our own round trip) ---
-
-import io
-import wave
-
-from spiderspark.multimodal import audio_features, audio_meta_udf, decode_wav
-
-
-def _wav_bytes(rate, channels, samples_i16: np.ndarray) -> bytes:
-    bio = io.BytesIO()
-    with wave.open(bio, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(samples_i16.astype("<i2").tobytes())
-    return bio.getvalue()
-
-
-def test_wav_pcm16_roundtrip_vs_stdlib():
-    t = np.arange(800)
-    sig = (np.sin(2 * np.pi * t / 50) * 20000).astype(np.int16)
-    stereo = np.column_stack([sig, -sig]).reshape(-1)
-    rate, ch, n, s, ok = decode_wav(_wav_bytes(16000, 2, stereo))
-    assert ok and (rate, ch, n) == (16000, 2, 800)
-    np.testing.assert_allclose(s[:, 0], sig / 32768.0, atol=1e-12)
-    np.testing.assert_allclose(s[:, 1], -sig / 32768.0, atol=1e-12)
-
-
-def test_wav_float_and_extra_chunks():
-    """fmt 3 (IEEE float) + a LIST chunk before data + odd-length chunk
-    padding — the chunk walk must skip what it doesn't know."""
-    sig = np.linspace(-1, 1, 321, dtype=np.float32)
-    fmt = struct.pack("<HHIIHH", 3, 1, 8000, 8000 * 4, 4, 32)
-    odd = b"x" * 3  # odd-length chunk → 1 pad byte per RIFF
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"LIST" + struct.pack("<I", len(odd)) + odd + b"\x00"
-        + b"data" + struct.pack("<I", sig.nbytes) + sig.tobytes()
-    )
-    blob = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-    rate, ch, n, s, ok = decode_wav(blob)
-    assert ok and (rate, ch, n) == (8000, 1, 321)
-    np.testing.assert_allclose(s[:, 0], sig.astype(np.float64), atol=1e-12)
-
-
-def test_wav_rejects_garbage():
-    assert not decode_wav(None)[4]
-    assert not decode_wav(b"RIFFxxxxWAVE")[4]
-    assert not decode_wav(b"\xffmp3 frame junk")[4]
-
-
-def test_audio_through_spark(spark):
-    sig = (np.sin(np.arange(400) / 7.0) * 30000).astype(np.int16)
-    rows = [
-        (0, bytearray(_wav_bytes(8000, 1, sig))),
-        (1, None),
-        (2, bytearray(b"not audio at all")),
-    ]
-    df = spark.createDataFrame(rows, "item_id long, audio binary")
-    meta = {
-        r["item_id"]: r
-        for r in df.select("item_id", audio_meta_udf("audio").alias("m"))
-        .select("item_id", "m.*")
-        .collect()
-    }
-    assert meta[0]["valid"] and meta[0]["sample_rate"] == 8000
-    assert meta[0]["n_samples"] == 400 and abs(meta[0]["duration_s"] - 0.05) < 1e-9
-    assert not meta[1]["valid"] and not meta[2]["valid"]
-    feats = {
-        r["item_id"]: r["feat"] for r in audio_features(df).collect()
-    }
-    mono = sig / 32768.0
-    assert abs(feats[0][0] - np.sqrt(np.mean(mono * mono))) < 1e-9
-    assert abs(feats[0][1] - np.abs(mono).max()) < 1e-9
-    assert feats[1] == [0.0, 0.0, 0.0, 0.0]
-
-
-# --- resize + video frame-sampling (brief-mandated multimodal ops) ---
-
-from spiderspark.multimodal import (
-    encode_fake_video,
-    resize_images,
-    sample_frames,
-)
-
-
-def test_resize_nn_exact(spark):
-    """Nearest-neighbor resize must equal the direct numpy index map."""
-    px = _gradient(10, 8, 3)
-    df = spark.createDataFrame(
-        [(0, bytearray(make_png(px))), (1, None)], "item_id long, img binary"
-    )
-    out = {r["item_id"]: r for r in resize_images(df, 4, 5).collect()}
-    rows = np.minimum(((np.arange(5) + 0.5) * 10 / 5).astype(int), 9)
-    cols = np.minimum(((np.arange(4) + 0.5) * 8 / 4).astype(int), 7)
-    want = px[rows][:, cols]
-    got = np.frombuffer(bytes(out[0]["px"]), dtype=np.uint8).reshape(5, 4, 3)
-    np.testing.assert_array_equal(got, want)
-    assert out[0]["valid"] and (out[0]["width"], out[0]["height"]) == (4, 5)
-    assert not out[1]["valid"] and bytes(out[1]["px"]) == b""
-
-
-def test_frame_sample_and_compose(spark):
-    """video → every-2nd frame → image features must equal per-frame
-    direct computation; truncated container keeps the parsed prefix."""
-    frames = [encode_fake_image(4 + k, 3, 1) for k in range(5)]
-    vid = encode_fake_video(frames, fps=12)
-    junk = b"VID1" + bytes([200, 0, 12]) + b"\x01"  # truncated
-    df = spark.createDataFrame(
-        [(0, bytearray(vid)), (1, bytearray(junk)), (2, None)],
-        "item_id long, video binary",
-    )
-    got = sample_frames(df, every_n=2).orderBy("frame_idx").collect()
-    assert [r["frame_idx"] for r in got] == [0, 2, 4]
-    assert all(r["item_id"] == 0 and r["n_frames"] == 5 and r["fps"] == 12 for r in got)
-    # sampled frames feed the image pipeline unchanged
-    fr = sample_frames(df, every_n=2).select(
-        F.col("frame_idx").cast("long").alias("item_id"),
-        F.col("frame").alias("img"),
-    )
-    feats = {
-        r["item_id"]: r["feat"]
-        for r in mean_pixel_features(fr, decoder="real").collect()
-    }
-    for k in (0, 2, 4):
-        _w, _h, _c, px, ok = decode_image_real(frames[k])
-        assert ok
-        f = px.astype(np.float64)
-        np.testing.assert_allclose(feats[k][0], f.mean(), rtol=1e-12)
-    # cap
-    capped = sample_frames(df, every_n=1, max_frames=2).collect()
-    assert sorted(r["frame_idx"] for r in capped) == [0, 1]
-
-
 def test_png_decompression_bomb_rejected():
-    """A tiny blob whose IDAT inflates far past its IHDR dims (or whose
-    IHDR claims absurd dims) must be rejected WITHOUT the big allocation."""
-    # IHDR says 2x2 gray but IDAT inflates to ~1 MB → trailing data → invalid
-    bomb = zlib.compress(b"\x00" * 1_000_000)
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
-    blob = (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", bomb)
-        + _chunk(b"IEND", b"")
-    )
-    assert not decode_image_real(blob)[4]
-    # IHDR claiming dims past the pixel budget → rejected before inflate
-    huge = struct.pack(">IIBBBBB", 60000, 60000, 8, 6, 0, 0, 0)
-    blob2 = (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", huge)
-        + _chunk(b"IDAT", zlib.compress(b"\x00" * 64))
-        + _chunk(b"IEND", b"")
-    )
-    assert not decode_image_real(blob2)[4]
-    # short stream (IDAT inflates to LESS than IHDR needs) → invalid
-    short = struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0)
-    blob3 = (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", short)
-        + _chunk(b"IDAT", zlib.compress(b"\x00" * 10))
-        + _chunk(b"IEND", b"")
-    )
-    assert not decode_image_real(blob3)[4]
-
-
-# --- header-only metadata path (round 6: metadata must not pay a full
-# pixel decode — ADVICE r05) -------------------------------------------------
-
-from spiderspark.multimodal import image_header_meta  # noqa: E402
+    """A tiny blob whose IDAT would inflate far past its IHDR dims is never
+    inflated; an IHDR claiming dims past the pixel budget is rejected."""
+    bomb = png(2, 2, ctype=0, idat=[zlib.compress(b"\x00" * 4_000_000)])
+    tracemalloc.start()
+    try:
+        assert image_header_meta(bomb) == (2, 2, 1, True)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+    huge = png(60000, 60000, ctype=6, idat=[zlib.compress(b"\x00" * 64)])
+    assert image_header_meta(huge) == INVALID
 
 
 def test_header_meta_matches_full_decode_on_good_blobs():
-    """On well-formed PNG/BMP/IMG1 the header path and the pixel decoder
-    must report identical (w, h, c, valid)."""
-    blobs = [
-        make_png(_gradient(6, 5, 3)),
-        make_png(_gradient(3, 2, 1)),
-        make_png(_gradient(4, 4, 4), split_idat=True),
-        make_bmp(_gradient(5, 3, 3)),
-        make_bmp(_gradient(2, 4, 3), top_down=True),
-        encode_fake_image(8, 6, 3),
-        None,
-        b"\xff\xd8\xff\xe0 jpeg junk",
-        b"",
+    """On well-formed PNG/BMP/IMG1 the walk reports the dims and channels
+    the blob was written with; on anything else, (0, 0, 0, False)."""
+    cases = [
+        (real_png(5, 6), (5, 6, 3, True)),
+        (real_png(2, 3, 1), (2, 3, 1, True)),
+        (real_png(4, 4, 4, split=2), (4, 4, 4, True)),
+        (bmp(5, 3), (5, 3, 3, True)),
+        (bmp(2, -4), (2, 4, 3, True)),
+        (encode_fake_image(8, 6, 3), (8, 6, 3, True)),
+        (None, INVALID),
+        (b"\xff\xd8\xff\xe0 jpeg junk", INVALID),
+        (b"", INVALID),
     ]
-    for b in blobs:
-        w, h, c, ok = image_header_meta(b)
-        fw, fh, fc, _px, fok = decode_image_real(b)
-        assert (w, h, c, ok) == (fw, fh, fc, fok), repr(b)[:40]
+    for blob, want in cases:
+        assert image_header_meta(blob) == want, repr(blob)[:40]
 
 
 def test_header_meta_structural_rejections():
-    """Header-level malformations the cheap path must still catch."""
-    good = make_png(_gradient(4, 4, 3))
-    # IHDR CRC flipped
+    """Header-level malformations the walk catches."""
+    good = real_png(4, 4)
     bad_crc = bytearray(good)
-    bad_crc[29] ^= 0xFF
-    assert not image_header_meta(bytes(bad_crc))[3]
+    bad_crc[29] ^= 0xFF  # the IHDR CRC itself
+    assert image_header_meta(bytes(bad_crc)) == INVALID
     # pixel-budget bomb dims rejected without allocation
-    huge = struct.pack(">IIBBBBB", 60000, 60000, 8, 6, 0, 0, 0)
-    bomb = (
-        b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", huge)
-        + _chunk(b"IDAT", zlib.compress(b"\x00" * 64)) + _chunk(b"IEND", b"")
-    )
-    assert not image_header_meta(bomb)[3]
+    assert image_header_meta(png(60000, 60000, ctype=6)) == INVALID
     # no IDAT chunk at all
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
-    no_idat = b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", ihdr) + _chunk(b"IEND", b"")
-    assert not image_header_meta(no_idat)[3]
+    assert image_header_meta(png(4, 4, idat=False)) == INVALID
     # truncated BMP pixel array
-    bmp = bytearray(make_bmp(_gradient(5, 3, 3)))
-    assert not image_header_meta(bytes(bmp[:-8]))[3]
-    # Adam7-interlaced PNG is now a supported variant — header-valid
-    inter = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 1)
-    blob = (
-        b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", inter)
-        + _chunk(b"IDAT", zlib.compress(b"\x00" * 8)) + _chunk(b"IEND", b"")
-    )
-    assert image_header_meta(blob) == (4, 4, 3, True)
-    # interlace method 2 does not exist → unsupported variant
-    bad_inter = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 2)
-    blob2 = (
-        b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", bad_inter)
-        + _chunk(b"IDAT", zlib.compress(b"\x00" * 8)) + _chunk(b"IEND", b"")
-    )
-    assert not image_header_meta(blob2)[3]
+    assert image_header_meta(bmp(5, 3)[:-8]) == INVALID
+    # Adam7-interlaced is a supported variant; interlace method 2 is not
+    assert image_header_meta(png(4, 4, interlace=1)) == (4, 4, 3, True)
+    assert image_header_meta(png(4, 4, interlace=2)) == INVALID
 
 
 def test_header_meta_is_shallow_by_contract():
-    """Documented semantics: a header-valid blob whose IDAT is garbage is
-    valid=True on the metadata path but valid=False on the pixel path —
-    deep validity is only asserted where pixels are actually needed."""
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
-    blob = (
-        b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", b"not-zlib-data") + _chunk(b"IEND", b"")
-    )
+    """Documented semantics: a header-valid blob whose IDAT is garbage (or
+    whose IDAT CRC is wrong) is valid=True on the metadata path."""
+    blob = png(4, 4, idat=[b"not-zlib-data"])
     assert image_header_meta(blob) == (4, 4, 3, True)
-    assert not decode_image_real(blob)[4]
-    # and the batch metadata API routes through the header path
+    corrupt = bytearray(real_png(4, 4))
+    corrupt[41] ^= 0xFF  # inside IDAT's data
+    assert image_header_meta(bytes(corrupt)) == (4, 4, 3, True)
+    # and the batch metadata API routes through the header walk
     meta = decode_image_batch(pd.Series([blob]), decoder="real")
     assert bool(meta["valid"][0]) and int(meta["width"][0]) == 4
 
 
-def test_unknown_decoder_tier_raises_everywhere(spark):
-    """A typo'd tier must fail loudly, not fall back to fake features."""
-    df = spark.createDataFrame(
-        [(0, bytearray(encode_fake_image(4, 4, 3)))], "item_id long, img binary"
-    )
-    with pytest.raises(NotImplementedError):
-        mean_pixel_features(df, decoder="reall")
+def test_unknown_decoder_tier_raises_everywhere():
+    """A typo'd tier fails loudly, not by falling back to the fake tier."""
     with pytest.raises(NotImplementedError):
         decode_image_batch(pd.Series([b"x"]), decoder="reall")
 
 
-def test_sample_frames_validates_every_n(spark):
-    from spiderspark.multimodal import sample_frames
-
-    df = spark.createDataFrame([(0, bytearray(b""))], "item_id long, video binary")
-    with pytest.raises(ValueError, match="every_n"):
-        sample_frames(df, every_n=0)
-
-
-# --- Adam7 interlacing (W3C PNG §8.2) -------------------------------------
-#
-# The forward pass below is an independent transcription of the spec's
-# pass grid: split the image into the 7 sub-images, filter each pass's
-# scanlines independently (prev resets to zero at each pass boundary),
-# concatenate, deflate. Equality with the straight decode of the same
-# pixels validates the decoder's pass walk + scatter as the spec inverse.
-
-_ADAM7_FWD = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def make_png_adam7(px: np.ndarray, filters=None) -> bytes:
-    """Adam7-interlaced PNG encoder: ``filters`` gives one filter type per
-    PASS (default all 0), exercising the per-pass unfilter reset."""
-    h, w, c = px.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    filters = filters or [0] * 7
-    raw = bytearray()
-    for pi, (x0, y0, dx, dy) in enumerate(_ADAM7_FWD):
-        sub = px[y0::dy, x0::dx]
-        ph, pw = sub.shape[:2]
-        if ph == 0 or pw == 0:
-            continue  # empty pass: no scanlines, not even filter bytes
-        prev = bytes(pw * c)
-        for y in range(ph):
-            line = sub[y].reshape(-1).tobytes()
-            raw.append(filters[pi])
-            raw += _filter_line(filters[pi], line, prev, c)
-            prev = line
-    z = zlib.compress(bytes(raw))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 1)  # interlace=1
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", z)
-        + _chunk(b"IEND", b"")
-    )
-
-
-def _ramp(h, w, c):
-    return (
-        (np.arange(h)[:, None, None] * 7
-         + np.arange(w)[None, :, None] * 3
-         + np.arange(c) * 29) % 256
-    ).astype(np.uint8)
+# --- Adam7 interlacing (W3C PNG §8.2) ----------------------------------------
 
 
 @pytest.mark.parametrize("c", [1, 2, 3, 4])
 def test_adam7_equals_straight_decode(c):
-    px = _ramp(21, 19, c)  # odd dims: ragged pass widths/heights
-    straight = decode_image_real(make_png(px))
-    inter = decode_image_real(make_png_adam7(px))
-    assert straight[4] and inter[4]
-    assert inter[:3] == (19, 21, c)
-    np.testing.assert_array_equal(straight[3], inter[3])
+    straight = real_png(19, 21, c)  # odd dims: ragged pass widths/heights
+    inter = real_png(19, 21, c, adam7=True)
+    assert image_header_meta(straight) == image_header_meta(inter) == (
+        19, 21, c, True)
 
 
 def test_adam7_all_filter_types_per_pass():
-    """Each pass filtered with a different type: the unfilter state (prev
-    row) must reset at every pass boundary or Up/Paeth bleed across."""
-    px = _ramp(24, 24, 3)
-    inter = decode_image_real(make_png_adam7(px, filters=[0, 1, 2, 3, 4, 2, 1]))
-    assert inter[4]
-    np.testing.assert_array_equal(inter[3], px)
+    blob = real_png(24, 24, filters=[0, 1, 2, 3, 4, 2, 1], adam7=True)
+    assert image_header_meta(blob) == (24, 24, 3, True)
 
 
 @pytest.mark.parametrize("dims", [(1, 1), (2, 2), (3, 3), (5, 5), (8, 1), (1, 8), (4, 12)])
 def test_adam7_tiny_images_empty_passes(dims):
-    """Images smaller than the 8x8 pass grid: several passes are EMPTY
-    (contribute zero scanlines). The expected-inflate-size accounting and
-    the scatter must both honor that."""
+    """Images smaller than the 8×8 pass grid, where several passes are
+    empty and contribute no scanlines."""
     h, w = dims
-    px = _ramp(h, w, 3)
-    inter = decode_image_real(make_png_adam7(px))
-    assert inter[:3] == (w, h, 3) and inter[4]
-    np.testing.assert_array_equal(inter[3], px)
-
-
-def test_adam7_wrong_length_rejected():
-    """An interlaced stream whose inflate matches the NON-interlaced size
-    (missing the extra per-sub-row filter bytes) is a malformation."""
-    px = _ramp(16, 16, 3)
-    good = make_png(px)  # non-interlaced sizing
-    # flip the IHDR interlace byte to 1 and fix the CRC
-    ihdr = struct.pack(">IIBBBBB", 16, 16, 8, 2, 0, 0, 1)
-    bad = (
-        b"\x89PNG\r\n\x1a\n" + _chunk(b"IHDR", ihdr) + good[8 + 25 :]
-    )
-    assert decode_image_real(bad)[4] is False
+    assert image_header_meta(real_png(w, h, adam7=True)) == (w, h, 3, True)
 
 
 def test_adam7_header_meta_valid():
-    from spiderspark.multimodal import image_header_meta
-
-    px = _ramp(10, 14, 3)
-    assert image_header_meta(make_png_adam7(px)) == (14, 10, 3, True)
-
-
-# --- property: random pixels/dims/filters, Adam7 == straight --------------
-
-from hypothesis import given, settings, strategies as st  # noqa: E402
+    assert image_header_meta(real_png(14, 10, adam7=True)) == (14, 10, 3, True)
 
 
 @settings(max_examples=60, deadline=None, derandomize=True)
@@ -605,359 +254,59 @@ from hypothesis import given, settings, strategies as st  # noqa: E402
     w=st.integers(1, 40),
     c=st.sampled_from([1, 2, 3, 4]),
     filters=st.lists(st.integers(0, 4), min_size=7, max_size=7),
-    seed=st.integers(0, 2**31 - 1),
+    split=st.integers(1, 3),
 )
-def test_adam7_property_random(h, w, c, filters, seed):
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-    inter = decode_image_real(make_png_adam7(px, filters=filters))
-    assert inter[:3] == (w, h, c) and inter[4]
-    np.testing.assert_array_equal(inter[3], px)
+def test_adam7_property_random(h, w, c, filters, split):
+    blob = real_png(w, h, c, filters=filters, split=split, adam7=True)
+    assert image_header_meta(blob) == (w, h, c, True)
 
 
-# --- indexed-color (palette) PNG ------------------------------------------
+# --- indexed-color (palette) PNG ---------------------------------------------
 
 
-def make_png_palette(
-    idx: np.ndarray,
-    palette: np.ndarray,
-    trns: bytes | None = None,
-    interlaced: bool = False,
-    filters=None,
-) -> bytes:
-    """idx: (h, w) uint8 palette indices; palette: (n, 3) uint8 RGB.
-    Forward path mirrors the spec: indices are filtered exactly like any
-    1-byte-per-pixel stream; PLTE/tRNS chunks precede IDAT."""
-    h, w = idx.shape
-    raw = bytearray()
-    if interlaced:
-        filters = filters or [0] * 7
-        for pi, (x0, y0, dx, dy) in enumerate(_ADAM7_FWD):
-            sub = idx[y0::dy, x0::dx]
-            ph, pw = sub.shape
-            if ph == 0 or pw == 0:
-                continue
-            prev = bytes(pw)
-            for y in range(ph):
-                line = sub[y].tobytes()
-                raw.append(filters[pi])
-                raw += _filter_line(filters[pi], line, prev, 1)
-                prev = line
-    else:
-        filters = filters or [0] * h
-        prev = bytes(w)
-        for y in range(h):
-            line = idx[y].tobytes()
-            raw.append(filters[y])
-            raw += _filter_line(filters[y], line, prev, 1)
-            prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 1 if interlaced else 0)
-    chunks = [_chunk(b"IHDR", ihdr), _chunk(b"PLTE", palette.tobytes())]
-    if trns is not None:
-        chunks.append(_chunk(b"tRNS", trns))
-    chunks += [_chunk(b"IDAT", zlib.compress(bytes(raw))), _chunk(b"IEND", b"")]
-    return b"\x89PNG\r\n\x1a\n" + b"".join(chunks)
-
-
-def _pal_fixture(n=7, h=13, w=17, seed=3):
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, size=(n, 3), dtype=np.uint8)
-    idx = rng.integers(0, n, size=(h, w), dtype=np.uint8)
-    return idx, palette
+def palette_png(w=17, h=13, n=7, trns=None, **kw):
+    rng = np.random.default_rng(3)
+    plte = rng.integers(0, 256, 3 * n, dtype=np.uint8).tobytes()
+    return png(w, h, ctype=3, interlace=int(kw.get("adam7", False)),
+               plte=plte, trns=trns, idat=idat(w, h, 1, **kw))
 
 
 def test_palette_rgb_roundtrip():
-    idx, palette = _pal_fixture()
-    w, h, c, px, valid = decode_image_real(make_png_palette(idx, palette))
-    assert (w, h, c, valid) == (17, 13, 3, True)
-    np.testing.assert_array_equal(px, palette[idx])
+    assert image_header_meta(palette_png()) == (17, 13, 3, True)
 
 
 def test_palette_trns_rgba_and_default_alpha():
-    """tRNS shorter than the palette: uncovered entries default to 255."""
-    idx, palette = _pal_fixture(n=5)
-    trns = bytes([0, 128, 255])  # entries 0-2; 3-4 default opaque
-    w, h, c, px, valid = decode_image_real(make_png_palette(idx, palette, trns))
-    assert (c, valid) == (4, True)
-    alpha = np.array([0, 128, 255, 255, 255], dtype=np.uint8)
-    expect = np.concatenate([palette, alpha[:, None]], axis=1)[idx]
-    np.testing.assert_array_equal(px, expect)
+    """tRNS shorter than the palette (uncovered entries default opaque) or
+    as long as it: either way the output is RGBA."""
+    assert image_header_meta(palette_png(n=5, trns=bytes([0, 128, 255]))) == (
+        17, 13, 4, True)
+    assert image_header_meta(palette_png(n=5, trns=bytes(5))) == (
+        17, 13, 4, True)
 
 
 def test_palette_filtered_and_interlaced():
-    idx, palette = _pal_fixture(n=11, h=21, w=19)
-    plain = decode_image_real(make_png_palette(idx, palette, filters=[1, 2, 3, 4] * 5 + [0]))
-    inter = decode_image_real(
-        make_png_palette(idx, palette, interlaced=True, filters=[0, 1, 2, 3, 4, 2, 1])
-    )
-    assert plain[4] and inter[4]
-    np.testing.assert_array_equal(plain[3], palette[idx])
-    np.testing.assert_array_equal(inter[3], palette[idx])
+    plain = palette_png(19, 21, 11, filters=[1, 2, 3, 4] * 5 + [0])
+    inter = palette_png(19, 21, 11, filters=[0, 1, 2, 3, 4, 2, 1], adam7=True)
+    assert image_header_meta(plain) == image_header_meta(inter) == (
+        19, 21, 3, True)
 
 
 def test_palette_malformations():
-    idx, palette = _pal_fixture()
-    # index out of range: palette of 7 entries, index 200
-    bad_idx = idx.copy()
-    bad_idx[0, 0] = 200
-    assert decode_image_real(make_png_palette(bad_idx, palette))[4] is False
+    blob = palette_png()
+    plte = blob[blob.index(b"PLTE") - 4:blob.index(b"IDAT") - 4]
     # PLTE not a multiple of 3
-    blob = make_png_palette(idx, palette)
-    ragged = blob.replace(
-        _chunk(b"PLTE", palette.tobytes()),
-        _chunk(b"PLTE", palette.tobytes() + b"\x01"),
-    )
-    assert decode_image_real(ragged)[4] is False
+    ragged = blob.replace(plte, chunk(b"PLTE", plte[8:-4] + b"\x01"))
+    assert image_header_meta(ragged) == INVALID
     # missing PLTE entirely
-    gone = blob.replace(_chunk(b"PLTE", palette.tobytes()), b"")
-    assert decode_image_real(gone)[4] is False
+    assert image_header_meta(blob.replace(plte, b"")) == INVALID
     # tRNS longer than the palette
-    too_long = make_png_palette(idx, palette, trns=bytes(8))
-    assert decode_image_real(too_long)[4] is False
+    assert image_header_meta(palette_png(trns=bytes(8))) == INVALID
+    # more than 256 entries
+    assert image_header_meta(palette_png(n=257)) == INVALID
 
 
 def test_palette_header_meta_channels():
-    from spiderspark.multimodal import image_header_meta
-
-    idx, palette = _pal_fixture()
-    assert image_header_meta(make_png_palette(idx, palette)) == (17, 13, 3, True)
-    assert image_header_meta(
-        make_png_palette(idx, palette, trns=bytes([7]))
-    ) == (17, 13, 4, True)
-    gone = make_png_palette(idx, palette).replace(
-        _chunk(b"PLTE", palette.tobytes()), b""
-    )
-    assert image_header_meta(gone)[3] is False
-
-
-# --- G.711 (A-law / µ-law) + IMA ADPCM WAV --------------------------------
-#
-# Validated against the stdlib `audioop` C implementation — an independent
-# transcription of the same public specs (ITU-T G.711; IMA ADPCM 1992) —
-# whose outputs are FROZEN in tests/fixtures/audio_golden.json because
-# audioop was removed in Python 3.13 (tests/gen_audio_golden.py is the
-# regenerator; test_audio_golden_matches_audioop re-derives live while the
-# interpreter still ships the module). audioop packs ADPCM nibbles
-# HIGH-first while WAV blocks are LOW-first, so reference streams are
-# repacked accordingly.
-
-import json  # noqa: E402
-import os  # noqa: E402
-
-from spiderspark.multimodal import (  # noqa: E402
-    _ALAW_LUT,
-    _ULAW_LUT,
-    _ima_adpcm_decode,
-)
-
-with open(
-    os.path.join(os.path.dirname(__file__), "fixtures", "audio_golden.json")
-) as _f:
-    _AUDIO_GOLDEN = json.load(_f)
-
-
-def test_audio_golden_matches_audioop():
-    """Live cross-check of the frozen oracle, while audioop still exists:
-    the committed fixture must be exactly what audioop produces today."""
-    pytest.importorskip("audioop")
-    from tests.gen_audio_golden import golden
-
-    assert golden() == _AUDIO_GOLDEN
-
-
-def _wav_blob(fmt_tag, ch, rate, bits, data, block_align=None, extra=b""):
-    block = block_align if block_align else ch * max(1, bits // 8)
-    fmt = struct.pack(
-        "<HHIIHH", fmt_tag, ch, rate, rate * block, block, bits
-    ) + extra
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_g711_luts_match_golden():
-    np.testing.assert_array_equal(_ULAW_LUT, _AUDIO_GOLDEN["ulaw_lut"])
-    np.testing.assert_array_equal(_ALAW_LUT, _AUDIO_GOLDEN["alaw_lut"])
-    # spec anchor values: µ-law 0xFF is +0; A-law 0x55 is -8
-    assert _ULAW_LUT[0xFF] == 0
-    assert _ALAW_LUT[0x55] == -8
-
-
-@pytest.mark.parametrize("tag,lut", [(6, "_ALAW_LUT"), (7, "_ULAW_LUT")])
-def test_g711_wav_end_to_end(tag, lut):
-    import spiderspark.multimodal as mm
-
-    codes = bytes(range(256)) * 3
-    rate, ch, n, s, ok = decode_wav(_wav_blob(tag, 2, 8000, 8, codes))
-    assert ok and (rate, ch, n) == (8000, 2, len(codes) // 2)
-    table = getattr(mm, lut)
-    expect = table[np.frombuffer(codes, np.uint8)].astype(np.float64) / 32768.0
-    np.testing.assert_allclose(s.reshape(-1), expect, atol=1e-15)
-
-
-def _ima_block(pred, idx, nibbles):
-    """One mono WAV IMA block: 4-byte header + low-nibble-first words."""
-    assert len(nibbles) % 8 == 0
-    body = bytearray(struct.pack("<hBB", pred, idx, 0))
-    for i in range(0, len(nibbles), 2):
-        body.append(nibbles[i] | (nibbles[i + 1] << 4))
-    return bytes(body)
-
-
-def test_ima_adpcm_inner_loop_matches_golden():
-    g = _AUDIO_GOLDEN["adpcm_inner"]
-    pred, idx, nibbles = g["pred"], g["idx"], g["nibbles"]
-    block = _ima_block(pred, idx, nibbles)
-    got = _ima_adpcm_decode(block, 1, len(block))
-    assert got.shape == (65, 1) and got[0, 0] == pred
-    np.testing.assert_array_equal(got[1:, 0], g["ref"])
-
-
-def test_ima_adpcm_stereo_interleave():
-    """Stereo blocks interleave 4-byte nibble words per channel; each
-    channel must decode exactly as its own mono stream."""
-    rng = np.random.default_rng(4)
-    nib = {c: list(rng.integers(0, 16, size=16)) for c in range(2)}
-    hdr = {0: (100, 10), 1: (-2000, 44)}
-    block = bytearray()
-    for c in range(2):
-        block += struct.pack("<hBB", *hdr[c], 0)
-    for w in range(2):  # two words per channel
-        for c in range(2):
-            for i in range(w * 8, w * 8 + 8, 2):
-                block.append(nib[c][i] | (nib[c][i + 1] << 4))
-    got = _ima_adpcm_decode(bytes(block), 2, len(block))
-    assert got.shape == (17, 2)
-    for c in range(2):
-        mono = _ima_adpcm_decode(
-            _ima_block(*hdr[c], nib[c]), 1, 4 + 8
-        )
-        np.testing.assert_array_equal(got[:, c], mono[:, 0])
-
-
-def test_ima_adpcm_wav_end_to_end_multiblock():
-    """Two-block mono fmt-0x11 WAV through decode_wav, against audioop's
-    encoder driven from zero state (the first block header is then (0,0)
-    and WAV's leading header sample is 0). Stream + reference decode are
-    the frozen audioop vectors (see module comment)."""
-    g = _AUDIO_GOLDEN["adpcm_multiblock"]
-    packed = bytes.fromhex(g["packed_hex"])
-    # repack high-first → low-first, split into two 32-sample-pair blocks
-    nibbles = []
-    for byte in packed:
-        nibbles += [byte >> 4, byte & 0x0F]
-    decoded_ref = np.asarray(g["ref"], dtype=np.int16)
-    spb_nibbles = 64  # (block_align 36 - 4) * 2 = 64 data samples/block
-    blocks = bytearray()
-    state_points = [(0, 0)]
-    # replay the state machine to find each block's header state
-    pred, idx = 0, 0
-    for i, n in enumerate(nibbles):
-        if i and i % spb_nibbles == 0:
-            state_points.append((pred, idx))
-        step = int(_IMA_STEP_REF[idx])
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + int(_IMA_INDEX_REF[n])))
-    for b in range(2):
-        blocks += _ima_block(
-            *state_points[b], nibbles[b * spb_nibbles : (b + 1) * spb_nibbles]
-        )
-    extra = struct.pack("<HH", 2, 65)  # cbSize=2, samples/block=65
-    blob = _wav_blob(0x11, 1, 8000, 4, bytes(blocks), block_align=36, extra=extra)
-    rate, ch, n, s, ok = decode_wav(blob)
-    assert ok and (rate, ch, n) == (8000, 1, 130)
-    got = np.round(s[:, 0] * 32768.0).astype(np.int16)
-    # block samples: header sample + 64 nibble samples; nibble samples
-    # must equal audioop's stream at the right offsets
-    np.testing.assert_array_equal(got[1:65], decoded_ref[:64])
-    np.testing.assert_array_equal(got[66:130], decoded_ref[64:128])
-    assert got[0] == 0 and got[65] == decoded_ref[63]
-
-
-# independent table transcriptions for the header-state replay above
-_IMA_INDEX_REF = [-1, -1, -1, -1, 2, 4, 6, 8] * 2
-_IMA_STEP_REF = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-
-
-def test_ima_adpcm_malformations():
-    # step index > 88 in the header
-    bad = _ima_block(0, 100, [0] * 8)
-    assert decode_wav(
-        _wav_blob(0x11, 1, 8000, 4, bad, block_align=len(bad))
-    )[4] is False
-    # block align not matching channel word structure
-    assert decode_wav(_wav_blob(0x11, 2, 8000, 4, b"\x00" * 10, block_align=10))[4] is False
-
-
-def test_ima_adpcm_samples_per_block_truncation():
-    """A fmt-extension wSamplesPerBlock below block capacity marks the
-    tail nibbles as PADDING: they must not become output samples
-    (n_samples/duration would otherwise exceed reference decoders)."""
-    rng = np.random.default_rng(7)
-    nibbles = list(rng.integers(0, 16, size=64))  # capacity 65 samples
-    block = _ima_block(500, 20, nibbles)
-    full = _ima_adpcm_decode(block, 1, len(block))
-    assert full.shape == (65, 1)
-    # declared 57 samples/block → last 8 nibbles are pad
-    extra = struct.pack("<HH", 2, 57)
-    blob = _wav_blob(0x11, 1, 8000, 4, block, block_align=len(block), extra=extra)
-    rate, ch, n, s, ok = decode_wav(blob)
-    assert ok and n == 57
-    got = np.round(s[:, 0] * 32768.0).astype(np.int16)
-    np.testing.assert_array_equal(got, full[:57, 0])
-    # declared count exceeding capacity is malformed
-    bad = struct.pack("<HH", 2, 66)
-    assert decode_wav(
-        _wav_blob(0x11, 1, 8000, 4, block, block_align=len(block), extra=bad)
-    )[4] is False
-
-
-def test_ima_adpcm_fact_chunk_truncates_final_block():
-    """The fact chunk's sample count bounds the decoded total: a partial
-    final block decodes only up to it."""
-    rng = np.random.default_rng(8)
-    b1 = _ima_block(0, 0, list(rng.integers(0, 16, size=64)))
-    b2 = _ima_block(123, 5, list(rng.integers(0, 16, size=64)))
-    data = b1 + b2
-    fmt = struct.pack("<HHIIHH", 0x11, 1, 8000, 8000 * 36 // 65, 36, 4)
-    fact = struct.pack("<I", 100)  # 65 + 35: final block partial
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", 4) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    blob = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-    rate, ch, n, s, ok = decode_wav(blob)
-    assert ok and n == 100
-    ref = np.concatenate(
-        [_ima_adpcm_decode(b1, 1, 36), _ima_adpcm_decode(b2, 1, 36)]
-    )
-    got = np.round(s[:, 0] * 32768.0).astype(np.int16)
-    np.testing.assert_array_equal(got, ref[:100, 0])
-    # fact exceeding what the data chunk holds is malformed
-    bad_fact = struct.pack("<I", 131)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", 4) + bad_fact
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    blob = b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-    assert decode_wav(blob)[4] is False
+    assert image_header_meta(palette_png()) == (17, 13, 3, True)
+    assert image_header_meta(palette_png(trns=bytes([7]))) == (17, 13, 4, True)
+    gone = png(17, 13, ctype=3, idat=idat(17, 13, 1))
+    assert image_header_meta(gone) == INVALID

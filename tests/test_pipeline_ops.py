@@ -193,8 +193,8 @@ def test_multimodal_meta_and_features(spark):
 
 
 def test_unknown_decoder_tier_raises():
-    # 'real' is now implemented (PNG/BMP — tests/test_image_decode.py);
-    # only an unknown tier name should raise
+    # 'real' is the header-walk tier (tests/test_media_headers.py); only
+    # an unknown tier name should raise
     with pytest.raises(NotImplementedError):
         decode_image_batch(pd.Series([b"x"]), decoder="nope")
     assert not decode_image_batch(pd.Series([b"x"]), decoder="real")["valid"][0]

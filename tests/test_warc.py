@@ -124,6 +124,26 @@ def test_bad_chunk_terminator_raises():
         parse_http_response(http)
 
 
+def _record_id(rec: bytes) -> bytes:
+    start = rec.index(b"WARC-Record-ID: <urn:uuid:") + 26
+    return rec[start : rec.index(b">", start)]
+
+
+def test_record_ids_distinct():
+    """Two captures of one URL in the same second differ by block; a '|'
+    inside a field must not let two field tuples share an id."""
+
+    def rid(block, url, date="2026-03-01T12:00:00Z"):
+        return _record_id(build_warc_record("response", block, url, date))
+
+    a, b = rid(b"body one", "http://x.test/"), rid(b"body two", "http://x.test/")
+    assert len(a) == len(b) == 32
+    assert a != b
+    assert rid(b"same", "a|b", "c") != rid(b"same", "a", "b|c")
+    # still a pure function of its inputs
+    assert a == rid(b"body one", "http://x.test/")
+
+
 def test_synthetic_fixture_contract():
     """Every response record of the driver fixture decodes to its
     closed-form fields (the same facts the scan_snapshot oracle states)."""
