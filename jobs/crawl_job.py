@@ -8,12 +8,12 @@ Local smoke (sandbox):
         --py-files dist/spiderspark.zip jobs/crawl_job.py \\
         --rounds 3 --corpus 1000 --store /tmp/crawlstore
 
-Cluster (documented; Iceberg store needs the runtime jar — snapshots.py):
+Cluster (documented; the store is a ParquetManifestStore on a shared path):
     spark-submit --master yarn --deploy-mode cluster \\
         --py-files spiderspark.zip \\
         --conf spark.sql.adaptive.enabled=true \\
         jobs/crawl_job.py --rounds N --seeds s3://…/seeds.txt \\
-        --pages <iceberg table> --store <warehouse path>
+        --pages <pages parquet path> --store <store path>
 
 Resumes automatically if the store already has a HEAD snapshot.
 """

@@ -16,7 +16,7 @@ Module map (SURVEY.md §7.6):
 - ``frontier``    canonicalize+hash+dedup DataFrame pipeline
 - ``politeness``  per-host token buckets + robots gating
 - ``schedule``    heavy-host salting, per-host top-k, deterministic ordering
-- ``snapshots``   SnapshotStore: ParquetManifestStore (sandbox) / IcebergStore
+- ``snapshots``   SnapshotStore: ParquetManifestStore (Iceberg-shaped manifests)
 - ``crawl``       crawl_round / resume loops, lineage, metrics
 - ``pages``       deterministic synthetic Common-Crawl-style pages generator
 - ``textops``     language-ID, quality scoring, token counts, fingerprints

@@ -889,21 +889,26 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
                 n, config.bloom_capacity_per_bucket, config.bloom_fpp,
                 routing=FRONTIER_KEY, kind=config.sketch_kind,
             )
-    host_state = _materialize(store.read(spark, snapshot_id, "host_state"))
-    salts = (
-        _materialize(store.read(spark, snapshot_id, "salt_table"))
-        if "salt_table" in m["tables"]
-        else _materialize(
-            spark.createDataFrame([], "host string, n_salts int")
-        )
-    )
-    return CrawlState(
-        frontier=SegmentedTable.from_df(
+    # the four pins are independent: overlap their jobs
+    host_state, salts, frontier, seen = materialize_many([
+        lambda: _materialize(store.read(spark, snapshot_id, "host_state")),
+        lambda: _materialize(
+            store.read(spark, snapshot_id, "salt_table")
+            if "salt_table" in m["tables"]
+            else spark.createDataFrame([], "host string, n_salts int")
+        ),
+        lambda: SegmentedTable.from_df(
             store.read(spark, snapshot_id, "frontier"),
             n_parts=n,
             key=FRONTIER_KEY,
         ),
-        seen=SegmentedTable.from_df(store.read(spark, snapshot_id, "seen"), n_parts=n),
+        lambda: SegmentedTable.from_df(
+            store.read(spark, snapshot_id, "seen"), n_parts=n
+        ),
+    ])
+    return CrawlState(
+        frontier=frontier,
+        seen=seen,
         host_state=host_state,
         sketch=sketch,
         batch_id=int(m["batch_id"]),

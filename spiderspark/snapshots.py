@@ -2,32 +2,40 @@
 (BASELINE.json:6; SURVEY.md §7.4).
 
 No Iceberg runtime jar exists in this sandbox (verified — SURVEY.md §0.4),
-so the engine targets a ``SnapshotStore`` interface with two impls:
-
-- ``ParquetManifestStore`` (used everywhere in-sandbox): each commit writes
-  immutable parquet file-sets then atomically renames a JSON manifest into
-  place; ``HEAD`` is an atomic pointer file. This reproduces the Iceberg
-  properties the engine relies on — atomic snapshot commit, snapshot-id time
-  travel, parent lineage — with plain files.
-- ``IcebergStore``: the thin cluster adapter over ``spark.read.format
-  ("iceberg")`` / ``df.writeTo(...).append()``; requires the
-  iceberg-spark-runtime jar + catalog conf at spark-submit time, so it is
-  documented and smoke-guarded but not testable here.
+so the engine targets a ``SnapshotStore`` interface implemented by
+``ParquetManifestStore``: each commit writes immutable parquet file-sets,
+then atomically links a JSON manifest into place; ``HEAD`` is an atomic
+pointer file. This reproduces the Iceberg properties the engine relies on —
+atomic snapshot commit, snapshot-id time travel, parent lineage — with plain
+files, and the manifest lists each data file with its row count as an
+Iceberg manifest entry does (data file + ``record_count``). Row counts come
+from the parquet footers on the driver, so neither commit nor validate runs
+a Spark job to count rows.
 
 Manifest schema (one JSON per snapshot):
-  {snapshot_id, parent_id, batch_id, committed_unix, tables:
-    {name: {path, row_count}}, lineage: {name: [{partition_id, rows}]}}
+  {snapshot_id, parent_id, batch_id, committed_unix,
+   tables: {name: {path, row_count, schema}},
+   lineage: {name: [{file, rows, bytes}]}}
+``lineage`` has one entry per data file, i.e. per writing task; ``file`` is
+relative to the table's ``path`` (``bucket=N/part-…`` for partitioned
+tables) and ``row_count`` is the sum of ``rows``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
 from abc import ABC, abstractmethod
+from operator import itemgetter
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+from .state import materialize_many
 
 
 class SnapshotStore(ABC):
@@ -80,6 +88,19 @@ class ParquetManifestStore(SnapshotStore):
     ) -> int:
         snapshot_id = max(self._next_id(), (parent_id or 0) + 1)
         partition_by = partition_by or {}
+
+        def write(name: str, df: DataFrame) -> str:
+            rel = f"data/{name}/snap{snapshot_id:012d}-{uuid.uuid4().hex[:8]}"
+            writer = df.write.mode("errorifexists")
+            if name in partition_by:
+                writer = writer.partitionBy(*partition_by[name])
+            writer.parquet(os.path.join(self.root, rel))
+            return rel
+
+        # the tables are independent: overlap their write jobs
+        rels = materialize_many(
+            [functools.partial(write, name, df) for name, df in tables.items()]
+        )
         entry: dict = {
             "snapshot_id": snapshot_id,
             "parent_id": parent_id,
@@ -88,33 +109,18 @@ class ParquetManifestStore(SnapshotStore):
             "tables": {},
             "lineage": {},
         }
-        for name, df in tables.items():
-            rel = f"data/{name}/snap{snapshot_id:012d}-{uuid.uuid4().hex[:8]}"
-            path = os.path.join(self.root, rel)
-            writer = df.write.mode("errorifexists")
-            if name in partition_by:
-                writer = writer.partitionBy(*partition_by[name])
-            writer.parquet(path)
-            # per-partition lineage read back from the files just written —
-            # records exactly what was committed (BASELINE.json:14). The
-            # read is schema-pinned: an EMPTY table commit writes only
-            # _SUCCESS, and schema inference on a files-less dir raises.
-            spark = df.sparkSession
-            written = spark.read.schema(df.schema).parquet(path)
-            lineage = [
-                {"partition_id": r["pid"], "rows": r["rows"]}
-                for r in written.groupBy(
-                    F.spark_partition_id().alias("pid")
-                ).agg(F.count(F.lit(1)).alias("rows")).collect()
-            ]
+        for (name, df), rel in zip(tables.items(), rels):
+            # what was committed, read from the written files' footers
+            # (BASELINE.json:14); an EMPTY table may have no data file at all
+            files = _data_files(os.path.join(self.root, rel))
             entry["tables"][name] = {
                 "path": rel,
-                "row_count": int(sum(l["rows"] for l in lineage)),
+                "row_count": sum(f["rows"] for f in files),
                 # schema rides the manifest so time travel to an empty
                 # table (zero data files) stays readable without inference
                 "schema": df.schema.jsonValue(),
             }
-            entry["lineage"][name] = lineage
+            entry["lineage"][name] = files
 
         # atomic commit: write tmp manifest then hardlink into place — the
         # link fails (EEXIST) instead of clobbering if the id was raced
@@ -122,8 +128,10 @@ class ParquetManifestStore(SnapshotStore):
         tmp = mpath + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
             json.dump(entry, f)
-        os.link(tmp, mpath)
-        os.unlink(tmp)
+        try:
+            os.link(tmp, mpath)
+        finally:
+            os.unlink(tmp)
         head_tmp = os.path.join(self.root, f"HEAD.tmp-{uuid.uuid4().hex[:8]}")
         with open(head_tmp, "w") as f:
             f.write(str(snapshot_id))
@@ -158,59 +166,49 @@ class ParquetManifestStore(SnapshotStore):
             return json.load(f)
 
     def validate(self, snapshot_id: int, spark: SparkSession) -> bool:
-        """Resume precondition: every table's files readable and row counts
-        match the manifest (per-partition lineage integrity)."""
+        """Resume precondition: every table's files are present and hold the
+        rows the manifest says. With a file list (the lineage) the check is
+        metadata only — the file set on disk must equal the list and every
+        footer must read and match its rows and bytes, so a missing, extra
+        or truncated file fails with no Spark job. A manifest without one
+        falls back to a ``count()`` per table."""
         m = self.manifest(snapshot_id)
         for name, meta in m["tables"].items():
-            n = self.read(spark, snapshot_id, name).count()
+            files = m.get("lineage", {}).get(name)
+            if files is None or any("file" not in f for f in files):
+                n = self.read(spark, snapshot_id, name).count()
+            else:
+                path = os.path.join(self.root, meta["path"])
+                if not os.path.isdir(path):
+                    return False
+                try:
+                    on_disk = _data_files(path)
+                except (OSError, pa.ArrowException):
+                    return False  # a footer that does not read: truncated
+                by_file = itemgetter("file")
+                if sorted(on_disk, key=by_file) != sorted(files, key=by_file):
+                    return False
+                n = sum(f["rows"] for f in files)
             if n != meta["row_count"]:
                 return False
         return True
 
 
-class IcebergStore(SnapshotStore):
-    """Cluster adapter — requires iceberg-spark-runtime on the classpath and
-    a configured catalog, e.g.::
-
-        spark-submit --py-files spiderspark.zip \\
-          --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \\
-          --conf spark.sql.catalog.crawl=org.apache.iceberg.spark.SparkCatalog \\
-          --conf spark.sql.catalog.crawl.type=hadoop \\
-          --conf spark.sql.catalog.crawl.warehouse=<path> job.py
-
-    Not executable in this sandbox (no jar, no network — SURVEY.md §0.4);
-    kept as the documented deployment path behind the same interface.
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        self.spark = spark
-        self.prefix = f"{catalog}.{namespace}"
-        try:
-            spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.prefix}")
-        except Exception as exc:  # pragma: no cover - sandbox has no jar
-            raise RuntimeError(
-                "Iceberg runtime not available; use ParquetManifestStore"
-            ) from exc
-
-    def commit(self, tables, batch_id, parent_id, partition_by=None):  # pragma: no cover
-        for name, df in tables.items():
-            full = f"{self.prefix}.{name}"
-            df.writeTo(full).createOrReplace()
-        row = self.spark.sql(
-            f"SELECT snapshot_id FROM {self.prefix}.frontier.snapshots "
-            "ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-        return int(row[0][0]) if row else 0
-
-    def read(self, spark, snapshot_id, table):  # pragma: no cover
-        return (
-            spark.read.format("iceberg")
-            .option("snapshot-id", snapshot_id)
-            .load(f"{self.prefix}.{table}")
-        )
-
-    def head(self):  # pragma: no cover
-        return None
-
-    def manifest(self, snapshot_id):  # pragma: no cover
-        return {}
+def _data_files(table_path: str) -> list[dict]:
+    """``{file, rows, bytes}`` for each data file under ``table_path``,
+    ``file`` relative to it. Names starting with ``_`` or ``.`` are not data
+    (``_SUCCESS``, ``.crc``); partition directories are walked. Rows come
+    from the parquet footer, read on the driver."""
+    out = []
+    for d, dirs, names in os.walk(table_path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        for n in sorted(names):
+            if n.startswith(("_", ".")):
+                continue
+            full = os.path.join(d, n)
+            out.append({
+                "file": os.path.relpath(full, table_path),
+                "rows": pq.read_metadata(full).num_rows,
+                "bytes": os.path.getsize(full),
+            })
+    return out

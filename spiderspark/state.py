@@ -40,6 +40,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 _DURABLE_SEQ = itertools.count()
@@ -121,12 +122,18 @@ def materialize_many(thunks):
     Determinism is unaffected: each materialization's CONTENT is a pure
     function of its own plan; only the wall-clock interleaving changes.
     The first exception (in input order) propagates after all thunks have
-    settled, so no job is abandoned mid-flight."""
+    settled, so no job is abandoned mid-flight. The caller's Spark job tags
+    ride into each thunk, so jobs run on pool threads keep its phase
+    labels."""
     thunks = list(thunks)
     if len(thunks) <= 1:
         return [t() for t in thunks]
     if threading.current_thread().name.startswith(_MAT_THREAD_PREFIX):
         return [t() for t in thunks]
+    sc = SparkContext._active_spark_context
+    tags = set(sc.getJobTags()) if sc is not None else set()
+    if tags:
+        thunks = [_with_job_tags(sc, tags, t) for t in thunks]
     futures = [_mat_pool().submit(t) for t in thunks]
     results, first_err = [], None
     for f in futures:
@@ -139,6 +146,23 @@ def materialize_many(thunks):
     if first_err is not None:
         raise first_err
     return results
+
+
+def _with_job_tags(sc, tags: set[str], thunk):
+    """``thunk`` run with ``tags`` added to its thread's Spark job tags (tags
+    are per thread); only the tags the thread lacked are removed after."""
+
+    def run():
+        fresh = tags - set(sc.getJobTags())
+        for t in fresh:
+            sc.addJobTag(t)
+        try:
+            return thunk()
+        finally:
+            for t in fresh:
+                sc.removeJobTag(t)
+
+    return run
 
 
 def materialize_keyed(

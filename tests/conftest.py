@@ -23,3 +23,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """A probe of Spark's status store: ``{job id: job tags}`` for every
+    job, read after the listener bus has delivered every event so far."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def jobs() -> dict[int, set[str]]:
+        jsc.listenerBus().waitUntilEmpty()
+        listed = jsc.statusStore().jobsList(None)
+        out = {}
+        for i in range(listed.size()):
+            j = listed.apply(i)
+            tags = j.jobTags()
+            out[j.jobId()] = {tags.apply(k) for k in range(tags.size())}
+        return out
+
+    return jobs

@@ -419,3 +419,29 @@ def test_durable_mode_crawl_matches_default_and_resumes(spark):
     st, s3, _ = crawl_round(spark, st, pk, dur_cfg)
     st, s4, _ = crawl_round(spark, st, pk, dur_cfg)
     assert orderings([s3, s4]) == golden[2:4]
+
+
+def test_materialize_many_carries_caller_job_tags(spark, spark_jobs):
+    """Jobs started on materialize_many's pool threads carry the caller's
+    Spark job tags (phase labels), and the pool threads drop them after."""
+    from spiderspark.state import materialize_many
+
+    def new_job_tags(run):
+        before = spark_jobs()
+        run()
+        return [t for j, t in spark_jobs().items() if j not in before]
+
+    sc = spark.sparkContext
+    sc.addJobTag("mm-caller-phase")
+    try:
+        tagged = new_job_tags(
+            lambda: materialize_many([lambda: spark.range(5).count()] * 2)
+        )
+    finally:
+        sc.removeJobTag("mm-caller-phase")
+    assert tagged and all("mm-caller-phase" in t for t in tagged)
+
+    untagged = new_job_tags(
+        lambda: materialize_many([lambda: spark.range(7).count()] * 2)
+    )
+    assert untagged and not any("mm-caller-phase" in t for t in untagged)
