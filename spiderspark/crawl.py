@@ -27,13 +27,15 @@ Scale shape (the repeat-round exchange budget — see docs/PLANS.md
 - Two seen tiers (``CrawlConfig.seen_tier``): "exact" keeps only the
   url_hash seen table; "sketch" also keeps a distributed URL-seen sketch
   (frontier.SketchRef) that the two probes read first, so only its
-  maybe-seen sliver reaches the exact anti-join. Membership is a
-  partition-local side-read of only the task's bucket slice (bucket
-  routing == the frontier partitioning, so salting also evens slice sizes
-  under Zipf skew); updates are bucket-partitioned delta directories;
-  compaction is a distributed groupBy(bucket) merge. Bloom (default) or
-  cuckoo (deletion support) filters behind the same rows. Nothing
-  sketch-shaped ever lives on the driver or in a broadcast.
+  maybe-seen sliver reaches the exact anti-join. A key's bucket is
+  pmod(hash(url_hash), state_buckets), the partition id of the url_hash
+  layout both probes run in, so membership is a partition-local side-read
+  of one bucket slice per task with no exchange, and buckets fill evenly
+  under Zipf host skew; updates are bucket-partitioned delta directories
+  written straight from url_hash-layout keys; compaction is a distributed
+  groupBy(bucket) merge. Bloom (default) or cuckoo (deletion support)
+  filters behind the same rows. Nothing sketch-shaped ever lives on the
+  driver or in a broadcast.
 - Iterative-loop hygiene: each round's state is re-materialized through
   ``materialize_keyed`` (plans stay shallow; the checkpoint write is
   partition-local — no network) or, with ``durable_state=True``, through
@@ -53,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types a
 
 from .canon import extract_outlinks_series, extract_text_series
 from .frontier import (
+    SKETCH_ROUTING,
     SketchRef,
     compact_sketch,
     dedup_within_batch,
@@ -160,9 +163,9 @@ class CrawlState:
     k_cap: int
     # per-crawl STATIC (host, n_salts) table: salt must be a stable function
     # of the url for the crawl's lifetime so (host_bucket, salt) can be the
-    # frontier's physical partitioning AND the sketch routing. The schedule
-    # is invariant to the salting scheme, so a stale size estimate costs
-    # balance, never correctness. Re-salting requires a sketch rebuild.
+    # frontier's physical partitioning. The schedule is invariant to the
+    # salting scheme, so a stale size estimate costs balance, never
+    # correctness.
     salts: DataFrame | None = None
     snapshot_id: int | None = None
 
@@ -258,7 +261,7 @@ def init_state(
     sketch = (
         SketchRef.create(
             n, config.bloom_capacity_per_bucket, config.bloom_fpp,
-            routing=FRONTIER_KEY, kind=config.sketch_kind,
+            kind=config.sketch_kind,
         )
         if config.seen_tier == "sketch"
         else None
@@ -353,20 +356,18 @@ def _drop_seen(
     Exact tier (``sketch`` None): the co-partitioned anti-probe of every
     seen segment.
 
-    Sketch tier: ``rows`` (carrying the sketch's routing columns) route to
-    their bucket slice for membership and back. A row the sketch calls
-    definitely unseen can only be removed by ``fresh`` — keys in ``seen``
-    the sketch does not hold yet (this round's newly-seen segment, whose
-    sketch delta is written concurrently); a maybe-seen row is checked
-    against all of ``seen``. The maybe condition rides the anti-joins
-    instead of splitting the rows, so membership runs once and the layout
-    survives."""
+    Sketch tier: each task flags its own rows against its bucket slice (the
+    sketch bucket is the url_hash partition id), then one exchange restores
+    the url_hash layout, which Spark drops after ``mapInPandas``. A row the
+    sketch calls definitely unseen can only be removed by ``fresh`` — keys
+    in ``seen`` the sketch does not hold yet (this round's newly-seen
+    segment, whose sketch delta is written concurrently); a maybe-seen row
+    is checked against all of ``seen``. The maybe condition rides the
+    anti-joins instead of splitting the rows, so membership runs once."""
     if sketch is None:
         return seen.anti_probe(rows)
     n = seen.n_parts
-    flagged = sketch_flag_maybe_seen(
-        rows.repartition(n, *sketch.routing), sketch
-    ).repartition(n, "url_hash")
+    flagged = sketch_flag_maybe_seen(rows, sketch).repartition(n, "url_hash")
     for seg in seen.segments:
         keys = seg.select("url_hash")
         flagged = flagged.join(
@@ -521,10 +522,10 @@ def crawl_round(
     )
     delta_plan = insertion_gate(delta, state.host_state)  # never insert dead rows
 
-    # 9. sketch' input (sketch tier only): this round's newly-seen keys
-    #    routed by their TRUE (host_bucket, salt) — the same routing a future
-    #    delta row for the url carries into its membership task. The sketch
-    #    delta write is independent of the frontier delta, so it runs
+    # 9. sketch' input (sketch tier only): this round's newly-seen keys,
+    #    written straight from newly_seen_seg — already pinned in the
+    #    url_hash layout, where each partition IS one sketch bucket. The
+    #    sketch delta write is independent of the frontier delta, so it runs
     #    CONCURRENTLY with the round's dominant job below; that job's probe
     #    therefore cannot read it, and anti-probes newly_seen_seg instead.
     sketch = state.sketch
@@ -544,17 +545,10 @@ def crawl_round(
     # side-read. newly_seen_seg is checkpointed, so the emptiness probe is a
     # cheap partition-local scan.
     if sketch is not None and not newly_seen_seg.isEmpty():
-        newly_routed = assign_salts_static(
-            fetched.filter(done_cond).select(
-                "url_hash", "url_norm", "host",
-                host_bucket_col(F.col("host")).alias("host_bucket"),
-            ),
-            state.salts,
-        ).repartition(n, *sketch.routing)
         sketch_path = os.path.join(state.workdir, f"sketch_delta_{batch_id:06d}")
         thunks.append(
             lambda: write_sketch_delta(
-                newly_routed, sketch_path, sketch, assume_keyed_layout=True
+                newly_seen_seg, sketch_path, sketch, assume_keyed_layout=True
             )
         )
     results = materialize_many(thunks)
@@ -667,15 +661,15 @@ def mark_seen(
     n = state.seen.n_parts
     batch_id = state.batch_id
 
-    # routed before the seen check: the sketch's membership routes by
-    # (host_bucket, salt), and the frontier prune joins on them
-    routed = assign_salts_static(
+    # salted before the seen check: the frontier prune joins on
+    # (host_bucket, salt)
+    salted = assign_salts_static(
         keys_df.select("url_hash", "url_norm", "host")
         .dropDuplicates(["url_hash"])
         .withColumn("host_bucket", host_bucket_col(F.col("host"))),
         state.salts,
     )
-    keyed = materialize_keyed(routed, n_parts=n, key=state.seen.key)
+    keyed = materialize_keyed(salted, n_parts=n, key=state.seen.key)
     # genuinely-new keys only, pinned in the url_hash layout; with nothing
     # seen yet, every key is new
     new_keys = (
@@ -709,8 +703,7 @@ def mark_seen(
             state.workdir, f"sketch_seed_{uuid.uuid4().hex[:8]}"
         )
         sketch = write_sketch_delta(
-            new_keys.repartition(n, *sketch.routing), sketch_path, sketch,
-            assume_keyed_layout=True,
+            new_keys, sketch_path, sketch, assume_keyed_layout=True
         )
 
     # prune now-unschedulable frontier rows (same co-partitioned anti-join
@@ -750,8 +743,8 @@ def forget_urls(
     be found unseen (its maybe-seen flag is re-checked against the exact
     table), but as a false positive forever; hence one call for both.
 
-    ``keys_df``: url_hash, url_norm, host (the shape a schedule row
-    carries). Only urls KNOWN to have entered the seen set may be passed
+    ``keys_df``: any frame with url_hash (a schedule row carries it). Only
+    urls KNOWN to have entered the seen set may be passed
     (the cuckoo deletion precondition — sketch.CuckooFilter.delete). A
     bloom sketch cannot unset bits, so a sketch-tier state carrying one
     refuses loudly: TTL deployments on that tier configure
@@ -791,14 +784,8 @@ def forget_urls(
 
     sketch = state.sketch
     if sketch is not None:
-        routed = assign_salts_static(
-            keys_df.select("url_hash", "url_norm", "host").withColumn(
-                "host_bucket", host_bucket_col(F.col("host"))
-            ),
-            state.salts,
-        )
         out = os.path.join(state.workdir, f"sketch_ttl_{uuid.uuid4().hex[:8]}")
-        sketch = sketch_delete(spark, sketch, routed, out)
+        sketch = sketch_delete(spark, sketch, keys_hash, out)
 
     return replace(state, seen=seen, sketch=sketch)
 
@@ -834,6 +821,10 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
     """§3.3 exact resume: validate lineage, read the exact seen table and,
     on the sketch tier, point the sketch at its stored bucket-partitioned
     rows (NO rescan of seen, NO driver rebuild) — and continue at batch N+1.
+    A sketch stored before url_hash routing (its rows say
+    ``routing="host_bucket,salt"``) is rebuilt instead: one partition-local
+    sketch write over the resumed seen segment, exact for bloom and cuckoo
+    alike because the seen table is complete.
 
     Every snapshot carries the complete exact table, so a sketch-tier
     snapshot also resumes under ``seen_tier="exact"`` (its sketch is simply
@@ -850,7 +841,7 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
             f"snapshot {snapshot_id} has no 'seen_sketch' table, which "
             "seen_tier='sketch' reads; resume it with seen_tier='exact'"
         )
-    sketch = None
+    sketch, old_routed = None, False
     if config.seen_tier == "sketch":
         path = store.table_path(snapshot_id, "seen_sketch")
         sk_df = spark.read.parquet(path)
@@ -866,28 +857,32 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
         first = sk_df.select(*sel).head(1)
         if first:
             stored_nb = int(first[0]["n_buckets"])
-            # bucket routing is pmod(hash(routing cols), n_buckets): resuming
-            # under a different bucket count would read the WRONG bits —
-            # silent false negatives. Fail loudly instead. The routing column
-            # list rides the rows for the same reason.
+            # the bucket is pmod(hash(url_hash), n_buckets): resuming under a
+            # different bucket count would read the WRONG bits — silent
+            # false negatives. Fail loudly instead.
             assert stored_nb == n, (
                 f"snapshot sketch has n_buckets={stored_nb} but "
                 f"config.state_buckets={n}; resume with the original value"
             )
-            sketch = SketchRef(
-                (path,),
-                stored_nb,
-                int(first[0]["n_bits"]),
-                int(first[0]["n_hashes"]),
-                tuple(first[0]["routing"].split(","))
-                if "routing" in have
-                else ("url_hash",),
-                str(first[0]["kind"]) if "kind" in have else "bloom",
+            kind = str(first[0]["kind"]) if "kind" in have else "bloom"
+            old_routed = (
+                "routing" in have and first[0]["routing"] != SKETCH_ROUTING
+            )
+            sketch = (
+                SketchRef.create(
+                    n, config.bloom_capacity_per_bucket, config.bloom_fpp,
+                    kind=kind,
+                )
+                if old_routed
+                else SketchRef(
+                    (path,), stored_nb, int(first[0]["n_bits"]),
+                    int(first[0]["n_hashes"]), kind,
+                )
             )
         else:
             sketch = SketchRef.create(
                 n, config.bloom_capacity_per_bucket, config.bloom_fpp,
-                routing=FRONTIER_KEY, kind=config.sketch_kind,
+                kind=config.sketch_kind,
             )
     # the four pins are independent: overlap their jobs
     host_state, salts, frontier, seen = materialize_many([
@@ -906,13 +901,21 @@ def resume(spark: SparkSession, store: SnapshotStore, config: CrawlConfig) -> Cr
             store.read(spark, snapshot_id, "seen"), n_parts=n
         ),
     ])
+    workdir = tempfile.mkdtemp(prefix="spiderspark-state-")
+    if old_routed:
+        # the seen segment is pinned in the url_hash layout: one bucket per
+        # partition, so the rebuild moves no rows
+        sketch = write_sketch_delta(
+            seen.segments[0], os.path.join(workdir, "sketch_rebuild"), sketch,
+            assume_keyed_layout=True,
+        )
     return CrawlState(
         frontier=frontier,
         seen=seen,
         host_state=host_state,
         sketch=sketch,
         batch_id=int(m["batch_id"]),
-        workdir=tempfile.mkdtemp(prefix="spiderspark-state-"),
+        workdir=workdir,
         k_cap=_k_cap(config.policy, host_state),
         salts=salts,
         snapshot_id=snapshot_id,

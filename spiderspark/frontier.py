@@ -282,21 +282,14 @@ class SketchRef:
     """Handle to the distributed sketch: a list of bucket-partitioned
     parquet directories (base + LSM-style deltas, OR-equivalent) plus the
     shared Bloom parameters. Readers OR all rows they find for a bucket, so
-    deltas need no eager merge; ``compact_sketch`` bounds the list.
-
-    ``routing`` is the column tuple the bucket is derived from. The CONTENT
-    of every bucket filter is always url_hash bits; routing only decides
-    WHICH bucket a key's bits live in, and must equal the partitioning of
-    the table the membership pass runs over (bucket expr == Spark's
-    HashPartitioning expr ⇒ one slice per task). ``("url_hash",)`` matches
-    the url_hash-keyed state layout; ``("host_bucket", "salt")`` matches the
-    scheduler-layout frontier (the crawl's sketch routing)."""
+    deltas need no eager merge; ``compact_sketch`` bounds the list. A key's
+    bucket is ``sketch_bucket_col``: the partition id of the url_hash-keyed
+    state layout, so a membership task over that layout reads one slice."""
 
     paths: tuple[str, ...]
     n_buckets: int
     n_bits: int
     n_hashes: int
-    routing: tuple[str, ...] = ("url_hash",)
     # "bloom" (default: unconditional zero false negatives, bit-OR
     # compaction) or "cuckoo" (per-delta partial-key filters: supports
     # deletion for re-crawl-after-TTL deployments; deltas can't bit-merge,
@@ -309,37 +302,35 @@ class SketchRef:
         n_buckets: int,
         capacity_per_bucket: int,
         fpp: float,
-        routing: tuple[str, ...] = ("url_hash",),
         kind: str = "bloom",
     ) -> "SketchRef":
         n_bits, n_hashes = optimal_params(max(1, capacity_per_bucket), fpp)
-        return cls((), n_buckets, n_bits, n_hashes, tuple(routing), kind)
+        return cls((), n_buckets, n_bits, n_hashes, kind)
 
 
-def sketch_bucket_col(n_buckets: int, *cols: str) -> Column:
-    """Bucket routing = pmod(murmur3(cols), n_buckets) — the SAME function
-    Spark's ``repartition(n, *cols)`` uses, so a table stored in the keyed
-    layout on the same columns with n_parts == n_buckets has exactly one
-    bucket per partition: a membership task reads exactly one sketch slice."""
-    cols = cols or ("url_hash",)
-    return F.pmod(F.hash(*cols), F.lit(n_buckets)).cast("int")
+# stored in every sketch row's ``routing`` column. Snapshots written before
+# url_hash routing hold "host_bucket,salt" there; resume rebuilds those.
+SKETCH_ROUTING = "url_hash"
+
+
+def sketch_bucket_col(n_buckets: int) -> Column:
+    """Bucket = pmod(murmur3(url_hash), n_buckets) — the SAME function
+    Spark's ``repartition(n, "url_hash")`` uses, so a table stored in the
+    url_hash layout with n_parts == n_buckets has exactly one bucket per
+    partition: a membership task reads exactly one sketch slice. murmur3 of
+    the (already uniform) xxhash64 key fills buckets evenly under any host
+    skew, which keeps per-bucket filter sizing honest."""
+    return F.pmod(F.hash("url_hash"), F.lit(n_buckets)).cast("int")
 
 
 _PARTIAL_SCHEMA = (
     "bucket int, kind string, bits binary, n_bits long, n_hashes int, "
     "n_buckets int, routing string"
-)  # n_buckets AND the routing column list ride every row: bucket =
-# pmod(hash(routing cols), n_buckets), so a resume under a DIFFERENT bucket
-# count or routing must fail loudly, not read wrong bits
+)  # n_buckets and the routing ride every row: a resume under a DIFFERENT
+# bucket count must fail loudly, not read wrong bits
 
 
-def _partials_fn(
-    n_bits: int,
-    n_hashes: int,
-    n_buckets: int,
-    routing: str = "url_hash",
-    kind: str = "bloom",
-):
+def _partials_fn(n_bits: int, n_hashes: int, n_buckets: int, kind: str = "bloom"):
     def partials(batches):
         # one partial filter per bucket present in THIS partition — with
         # bucket-aligned input each partition holds exactly one bucket, so
@@ -375,7 +366,7 @@ def _partials_fn(
                         "n_bits": np.int64([r[2] for r in rows]),
                         "n_hashes": np.int32([r[3] for r in rows]),
                         "n_buckets": np.int32(n_buckets),
-                        "routing": routing,
+                        "routing": SKETCH_ROUTING,
                     }
                 )
             return
@@ -400,7 +391,7 @@ def _partials_fn(
                     "n_bits": np.int64(n_bits),
                     "n_hashes": np.int32(n_hashes),
                     "n_buckets": np.int32(n_buckets),
-                    "routing": routing,
+                    "routing": SKETCH_ROUTING,
                 }
             )
 
@@ -411,21 +402,17 @@ def sketch_partial_rows(
     keys_df: DataFrame, ref: SketchRef, assume_keyed_layout: bool = False
 ) -> DataFrame:
     """Per-partition partial filters as (bucket, bits) rows — stage 1 of the
-    distributed build. ``keys_df`` must carry url_hash plus ref.routing's
-    columns. ``assume_keyed_layout=True`` skips the bucket exchange when the
-    input is already in the keyed layout on the routing columns with
-    n_parts == n_buckets (each partition IS one bucket)."""
-    cols = list(dict.fromkeys(("url_hash",) + ref.routing))
-    keyed = keys_df.select(*cols).withColumn(
-        "_bucket", sketch_bucket_col(ref.n_buckets, *ref.routing)
+    distributed build. ``keys_df`` must carry url_hash.
+    ``assume_keyed_layout=True`` skips the bucket exchange when the input is
+    already in the url_hash layout with n_parts == n_buckets (each partition
+    IS one bucket)."""
+    keyed = keys_df.select("url_hash").withColumn(
+        "_bucket", sketch_bucket_col(ref.n_buckets)
     )
     if not assume_keyed_layout:
         keyed = keyed.repartition(ref.n_buckets, "_bucket")
     return keyed.mapInPandas(
-        _partials_fn(
-            ref.n_bits, ref.n_hashes, ref.n_buckets,
-            ",".join(ref.routing), ref.kind,
-        ),
+        _partials_fn(ref.n_bits, ref.n_hashes, ref.n_buckets, ref.kind),
         schema=_PARTIAL_SCHEMA,
     )
 
@@ -442,8 +429,7 @@ def write_sketch_delta(
     rows = sketch_partial_rows(keys_df, ref, assume_keyed_layout)
     rows.write.mode("overwrite").partitionBy("bucket").parquet(path)
     return SketchRef(
-        ref.paths + (path,), ref.n_buckets, ref.n_bits, ref.n_hashes,
-        ref.routing, ref.kind,
+        ref.paths + (path,), ref.n_buckets, ref.n_bits, ref.n_hashes, ref.kind
     )
 
 
@@ -501,7 +487,7 @@ def compact_sketch(spark, ref: SketchRef, out_path: str) -> SketchRef:
                     "n_bits": np.int64(ref.n_bits),
                     "n_hashes": np.int32(ref.n_hashes),
                     "n_buckets": np.int32(ref.n_buckets),
-                    "routing": ",".join(ref.routing),
+                    "routing": SKETCH_ROUTING,
                 }
             )
             out = pd.concat([merged_row, out], ignore_index=True)
@@ -514,8 +500,7 @@ def compact_sketch(spark, ref: SketchRef, out_path: str) -> SketchRef:
     )
     merged.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
     return SketchRef(
-        (out_path,), ref.n_buckets, ref.n_bits, ref.n_hashes,
-        ref.routing, ref.kind,
+        (out_path,), ref.n_buckets, ref.n_bits, ref.n_hashes, ref.kind
     )
 
 
@@ -527,16 +512,16 @@ def sketch_delete(
     sketch so the scheduler will consider them again; a Bloom filter cannot
     unset bits, so the bloom tier raises).
 
-    ``keys_df`` must carry url_hash plus ref.routing's columns (the same
-    shape ``write_sketch_delta`` takes). Execution is a cogrouped pass per
-    bucket: the keys route by the sketch bucket function, meet ALL of that
-    bucket's filter rows (base + deltas), and each pending key is deleted
-    from the FIRST filter that contains its fingerprint — at most one
-    removal per key, so a URL inserted once cannot be over-deleted across
-    delta generations. Every bucket's rows are rewritten to ``out_path``
-    (hive-partitioned like any delta), and the returned ref's path list
-    collapses to it — deletion doubles as a compaction. Nothing is ever
-    driver-sized; the pass moves O(keys) plus each bucket's own slice.
+    ``keys_df`` must carry url_hash (the same shape ``write_sketch_delta``
+    takes). Execution is a cogrouped pass per bucket: the keys route by the
+    sketch bucket function, meet ALL of that bucket's filter rows (base +
+    deltas), and each pending key is deleted from the FIRST filter that
+    contains its fingerprint — at most one removal per key, so a URL
+    inserted once cannot be over-deleted across delta generations. Every
+    bucket's rows are rewritten to ``out_path`` (hive-partitioned like any
+    delta), and the returned ref's path list collapses to it — deletion
+    doubles as a compaction. Nothing is ever driver-sized; the pass moves
+    O(keys) plus each bucket's own slice.
 
     Cuckoo caveat (inherent to the construction, documented at
     sketch.CuckooFilter.delete): deleting a key that was NEVER inserted can
@@ -550,9 +535,8 @@ def sketch_delete(
         )
     from .sketch import CuckooFilter
 
-    cols = list(dict.fromkeys(("url_hash",) + ref.routing))
-    keys = keys_df.select(*cols).withColumn(
-        "_bucket", sketch_bucket_col(ref.n_buckets, *ref.routing)
+    keys = keys_df.select("url_hash").withColumn(
+        "_bucket", sketch_bucket_col(ref.n_buckets)
     )
     rows = sketch_df(spark, ref)
 
@@ -583,8 +567,7 @@ def sketch_delete(
     )
     merged.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
     return SketchRef(
-        (out_path,), ref.n_buckets, ref.n_bits, ref.n_hashes,
-        ref.routing, ref.kind,
+        (out_path,), ref.n_buckets, ref.n_bits, ref.n_hashes, ref.kind
     )
 
 
@@ -685,7 +668,7 @@ def sketch_flag_maybe_seen(df: DataFrame, ref: SketchRef) -> DataFrame:
             yield pdf[in_cols].assign(_maybe=out)
 
     return (
-        df.withColumn("_bucket", sketch_bucket_col(ref.n_buckets, *ref.routing))
+        df.withColumn("_bucket", sketch_bucket_col(ref.n_buckets))
         .mapInPandas(membership, schema=out_schema)
     )
 

@@ -59,10 +59,11 @@ SEEN_SKETCH = T.StructType(
         T.StructField("bits", T.BinaryType(), False),
         T.StructField("n_bits", T.LongType(), False),
         T.StructField("n_hashes", T.IntegerType(), False),
-        # routing modulus AND routing columns ride every row so resume can
-        # refuse a mismatched config (bucket = pmod(hash(routing cols),
-        # n_buckets) must match what was built — wrong routing would read
-        # the wrong bits: silent false negatives)
+        # the bucket modulus rides every row so resume can refuse a
+        # mismatched config (bucket = pmod(hash(url_hash), n_buckets) must
+        # match what was built — a wrong modulus would read the wrong bits:
+        # silent false negatives). routing is "url_hash"; resume rebuilds a
+        # sketch stored under the older "host_bucket,salt" routing.
         T.StructField("n_buckets", T.IntegerType(), False),
         T.StructField("routing", T.StringType(), False),
     ]

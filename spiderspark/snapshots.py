@@ -23,9 +23,11 @@ tables) and ``row_count`` is the sum of ``rows``.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
+import shutil
 import time
 import uuid
 from abc import ABC, abstractmethod
@@ -88,50 +90,60 @@ class ParquetManifestStore(SnapshotStore):
     ) -> int:
         snapshot_id = max(self._next_id(), (parent_id or 0) + 1)
         partition_by = partition_by or {}
+        rels = {
+            name: f"data/{name}/snap{snapshot_id:012d}-{uuid.uuid4().hex[:8]}"
+            for name in tables
+        }
 
-        def write(name: str, df: DataFrame) -> str:
-            rel = f"data/{name}/snap{snapshot_id:012d}-{uuid.uuid4().hex[:8]}"
+        def write(name: str, df: DataFrame) -> None:
             writer = df.write.mode("errorifexists")
             if name in partition_by:
                 writer = writer.partitionBy(*partition_by[name])
-            writer.parquet(os.path.join(self.root, rel))
-            return rel
+            writer.parquet(os.path.join(self.root, rels[name]))
 
-        # the tables are independent: overlap their write jobs
-        rels = materialize_many(
-            [functools.partial(write, name, df) for name, df in tables.items()]
-        )
-        entry: dict = {
-            "snapshot_id": snapshot_id,
-            "parent_id": parent_id,
-            "batch_id": batch_id,
-            "committed_unix": time.time(),
-            "tables": {},
-            "lineage": {},
-        }
-        for (name, df), rel in zip(tables.items(), rels):
-            # what was committed, read from the written files' footers
-            # (BASELINE.json:14); an EMPTY table may have no data file at all
-            files = _data_files(os.path.join(self.root, rel))
-            entry["tables"][name] = {
-                "path": rel,
-                "row_count": sum(f["rows"] for f in files),
-                # schema rides the manifest so time travel to an empty
-                # table (zero data files) stays readable without inference
-                "schema": df.schema.jsonValue(),
-            }
-            entry["lineage"][name] = files
-
-        # atomic commit: write tmp manifest then hardlink into place — the
-        # link fails (EEXIST) instead of clobbering if the id was raced
         mpath = self._manifest_path(snapshot_id)
         tmp = mpath + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
         try:
+            # the tables are independent: overlap their write jobs
+            materialize_many(
+                [functools.partial(write, name, df) for name, df in tables.items()]
+            )
+            entry: dict = {
+                "snapshot_id": snapshot_id,
+                "parent_id": parent_id,
+                "batch_id": batch_id,
+                "committed_unix": time.time(),
+                "tables": {},
+                "lineage": {},
+            }
+            for name, df in tables.items():
+                # what was committed, read from the written files' footers
+                # (BASELINE.json:14); an EMPTY table may have no data file
+                files = _data_files(os.path.join(self.root, rels[name]))
+                entry["tables"][name] = {
+                    "path": rels[name],
+                    "row_count": sum(f["rows"] for f in files),
+                    # schema rides the manifest so time travel to an empty
+                    # table (zero data files) stays readable without inference
+                    "schema": df.schema.jsonValue(),
+                }
+                entry["lineage"][name] = files
+
+            # atomic commit: write tmp manifest then hardlink into place —
+            # the link fails (EEXIST) instead of clobbering if the id was raced
+            with open(tmp, "w") as f:
+                json.dump(entry, f)
             os.link(tmp, mpath)
+        except BaseException:
+            # no manifest names this commit's files, so nothing ever would
+            # read or remove them; every other commit writes under its own
+            # uuid suffix, so only this commit's directories go
+            for rel in rels.values():
+                shutil.rmtree(os.path.join(self.root, rel), ignore_errors=True)
+            raise
         finally:
-            os.unlink(tmp)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         head_tmp = os.path.join(self.root, f"HEAD.tmp-{uuid.uuid4().hex[:8]}")
         with open(head_tmp, "w") as f:
             f.write(str(snapshot_id))

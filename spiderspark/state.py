@@ -314,16 +314,15 @@ class SegmentedTable:
     """An immutable list of key-disjoint DataFrame segments, all in the
     ``materialize_keyed`` layout with the same ``n_parts``.
 
-    ``key`` is the PARTITIONING column(s); ``id_col`` is the row-identity
-    column probes and resolves match on (url_hash). For the url_hash layout
-    they coincide; the scheduler layout partitions on (host_bucket, salt) —
-    both pure functions of the url — and joins on (key..., id_col), which
-    Catalyst proves exchange-free against the stored layout."""
+    ``key`` is the PARTITIONING column(s); probes and resolves match rows
+    on url_hash. For the url_hash layout they coincide; the scheduler
+    layout partitions on (host_bucket, salt) — both pure functions of the
+    url — and joins on (key..., url_hash), which Catalyst proves
+    exchange-free against the stored layout."""
 
     segments: tuple[DataFrame, ...]
     n_parts: int
     key: str | tuple[str, ...] = "url_hash"
-    id_col: str = "url_hash"
 
     @property
     def keys(self) -> tuple[str, ...]:
@@ -332,7 +331,7 @@ class SegmentedTable:
     @property
     def join_cols(self) -> list[str]:
         ks = list(self.keys)
-        return ks if self.id_col in ks else ks + [self.id_col]
+        return ks if "url_hash" in ks else ks + ["url_hash"]
 
     @property
     def sort_cols(self) -> tuple[str, ...]:
@@ -340,24 +339,17 @@ class SegmentedTable:
 
     @classmethod
     def empty(
-        cls,
-        n_parts: int,
-        key: str | tuple[str, ...] = "url_hash",
-        id_col: str = "url_hash",
+        cls, n_parts: int, key: str | tuple[str, ...] = "url_hash"
     ) -> "SegmentedTable":
-        return cls(segments=(), n_parts=n_parts, key=key, id_col=id_col)
+        return cls(segments=(), n_parts=n_parts, key=key)
 
     @classmethod
     def from_df(
-        cls,
-        df: DataFrame,
-        n_parts: int,
-        key: str | tuple[str, ...] = "url_hash",
-        id_col: str = "url_hash",
+        cls, df: DataFrame, n_parts: int, key: str | tuple[str, ...] = "url_hash"
     ) -> "SegmentedTable":
-        out = cls((), n_parts, key, id_col)
+        out = cls((), n_parts, key)
         seg = materialize_keyed(df, n_parts, key, sort=out.sort_cols)
-        return cls((seg,), n_parts, key, id_col)
+        return cls((seg,), n_parts, key)
 
     def df(self, spark: SparkSession, schema) -> DataFrame:
         """The whole table as one DataFrame (commit/read paths; loses the
@@ -393,9 +385,7 @@ class SegmentedTable:
 
     def append(self, seg: DataFrame) -> "SegmentedTable":
         """Add an already-materialized, key-disjoint segment."""
-        return SegmentedTable(
-            self.segments + (seg,), self.n_parts, self.key, self.id_col
-        )
+        return SegmentedTable(self.segments + (seg,), self.n_parts, self.key)
 
     def maybe_compact(
         self, max_segments: int, materializer=None
@@ -415,7 +405,7 @@ class SegmentedTable:
             seg = materialize_keyed(
                 merged, self.n_parts, self.key, sort=self.sort_cols
             )
-        return SegmentedTable((seg,), self.n_parts, self.key, self.id_col)
+        return SegmentedTable((seg,), self.n_parts, self.key)
 
 
 def ord_struct(prefix: str = "") -> F.Column:

@@ -22,7 +22,6 @@ from spiderspark.crawl import (
 )
 from spiderspark.frontier import (
     SketchRef,
-    host_bucket_col,
     seeds_to_frontier,
     sketch_delete,
     sketch_flag_maybe_seen,
@@ -59,14 +58,8 @@ def test_cuckoo_delete_then_recrawl(spark):
     assert target is not None
     assert len(state.sketch.paths) > 0  # the sketch is probed from round 2 on
 
-    # the routed key frame for the target (url_hash + the sketch routing)
-    key_df = assign_salts_static(
-        spark.createDataFrame(
-            [(target["url_hash"], target["url_norm"], target["host"])],
-            "url_hash long, url_norm string, host string",
-        ).withColumn("host_bucket", host_bucket_col(F.col("host"))),
-        state.salts,
-    )
+    # the key frame for the target: the sketch buckets by url_hash alone
+    key_df = spark.createDataFrame([(target["url_hash"],)], "url_hash long")
 
     # suppressed while seen: round 2 must not re-schedule it, and the
     # sketch must flag it maybe-seen

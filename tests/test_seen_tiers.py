@@ -16,6 +16,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from spiderspark import crawl
 from spiderspark.canon import extract_outlinks_series
 from spiderspark.crawl import (
     FRONTIER_KEY,
@@ -28,13 +29,21 @@ from spiderspark.crawl import (
     mark_seen,
     resume,
 )
-from spiderspark.frontier import dedup_within_batch, seeds_to_frontier, with_canonical
+from spiderspark.frontier import (
+    _PARTIAL_SCHEMA,
+    _partials_fn,
+    dedup_within_batch,
+    host_bucket_col,
+    seeds_to_frontier,
+    sketch_flag_maybe_seen,
+    with_canonical,
+)
 from spiderspark.pages import gen_pages_pdf, robots_pdf, seeds_pdf, url_for_ids
 from spiderspark.politeness import HostPolicy
 from spiderspark.schedule import assign_salts_static
 from spiderspark.schemas import FRONTIER, PAGES, ROBOTS_TXT, SEEDS, SEEN
 from spiderspark.snapshots import ParquetManifestStore
-from spiderspark.state import materialize_keyed
+from spiderspark.state import _aqe_disabled, materialize_keyed
 
 N = 4
 CORPUS = 200
@@ -184,3 +193,129 @@ def test_sketch_tier_same_round_links_stay_out(spark):
 def test_seen_tier_is_validated():
     with pytest.raises(ValueError, match="seen_tier"):
         CrawlConfig(seen_tier="mirror")
+
+
+def _plan_nodes(node, ancestors=()):
+    """(node, its ancestors from the root down) for every physical-plan node."""
+    yield node, ancestors
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i), ancestors + (node,))
+
+
+def _is_hash_exchange(node) -> bool:
+    return node.simpleString(100).startswith("Exchange hashpartitioning(")
+
+
+def test_sketch_probes_run_in_the_url_hash_layout(spark, monkeypatch):
+    """Both sketch-tier seen checks — mark_seen's new-key filter and the
+    round's delta probe — flag their url_hash-layout rows where they are:
+    the sketch bucket is the url_hash partition id, so no exchange routes
+    the rows to (host_bucket, salt), and exactly one hash exchange (back to
+    the url_hash layout, which Spark drops after MapInPandas) sits between
+    the membership pass and the anti-joins."""
+    config = _config("sketch")
+    pages = spark.createDataFrame(gen_pages_pdf(np.arange(CORPUS), CORPUS), schema=PAGES)
+    seeds = spark.createDataFrame(seeds_pdf(16, CORPUS), schema=SEEDS)
+    probes = []
+    drop_seen = crawl._drop_seen
+
+    def recording(rows, seen, sketch, fresh=None):
+        out = drop_seen(rows, seen, sketch, fresh)
+        probes.append(("crawl_round" if fresh is not None else "mark_seen", out))
+        return out
+
+    monkeypatch.setattr(crawl, "_drop_seen", recording)
+    state = init_state(spark, seeds, None, config)
+    for ids in (np.arange(0, CORPUS, 10), np.arange(5, CORPUS, 10)):
+        urls = spark.createDataFrame([(u,) for u in url_for_ids(ids)], ["url"])
+        keys = with_canonical(urls).select("url_hash", "url_norm", "host")
+        state = mark_seen(spark, state, keys, config)  # the first seen nothing
+    crawl_round(spark, state, keyed_pages(pages, n_parts=N), config)
+
+    assert [name for name, _ in probes] == ["mark_seen", "crawl_round"]
+    for name, df in probes:
+        with _aqe_disabled(spark):
+            plan = df._jdf.queryExecution().executedPlan()
+        nodes = list(_plan_nodes(plan))
+        routed = [
+            s for s in (n.simpleString(100) for n, _ in nodes)
+            if s.startswith("Exchange hashpartitioning(host_bucket")
+        ]
+        assert not routed, (name, routed)
+        maps = [anc for n, anc in nodes if n.nodeName() == "MapInPandas"]
+        assert len(maps) == 1, name
+        assert sum(_is_hash_exchange(a) for a in maps[0]) == 1, (name, plan.toString())
+
+
+def _ordering(schedule) -> list:
+    return [(r["rank"], r["url_hash"]) for r in schedule.orderBy("rank").collect()]
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_resume_rebuilds_a_host_salt_routed_sketch(spark, kind):
+    """A sketch-tier snapshot written before url_hash routing holds filters
+    bucketed by pmod(hash(host_bucket, salt), n) and says so in its
+    ``routing`` column. Resume rebuilds the sketch from the snapshot's exact
+    seen table: every seen key flags maybe-seen, and the next round's
+    schedule equals the uninterrupted run's."""
+    config = dataclasses.replace(_config("sketch"), sketch_kind=kind)
+    pages = spark.createDataFrame(gen_pages_pdf(np.arange(CORPUS), CORPUS), schema=PAGES)
+    seeds = spark.createDataFrame(seeds_pdf(16, CORPUS), schema=SEEDS)
+    robots = spark.createDataFrame(robots_pdf(), schema=ROBOTS_TXT)
+    pk = keyed_pages(pages, n_parts=N)
+
+    state = init_state(spark, seeds, robots, config)
+    state, s1, log1 = crawl_round(spark, state, pk, config)
+    seen_keys = state.seen.df(spark, SEEN).select("url_hash")
+    n_seen = seen_keys.count()
+    assert n_seen > 0
+
+    # the old sketch: the round's seen keys (all scheduled in round 1)
+    # bucketed by their (host_bucket, salt), built by the same partials
+    ref = state.sketch
+    old_rows = (
+        assign_salts_static(
+            s1.join(seen_keys, "url_hash").select(
+                "url_hash", "url_norm", "host",
+                host_bucket_col(F.col("host")).alias("host_bucket"),
+            ),
+            state.salts,
+        )
+        .withColumn("_bucket", F.pmod(F.hash("host_bucket", "salt"), F.lit(N)).cast("int"))
+        .repartition(N, "_bucket")
+        .mapInPandas(
+            _partials_fn(ref.n_bits, ref.n_hashes, N, kind), schema=_PARTIAL_SCHEMA
+        )
+        .withColumn("routing", F.lit("host_bucket,salt"))
+    )
+    store = ParquetManifestStore(tempfile.mkdtemp(prefix="oldsketch-"))
+    tables = {
+        "frontier": state.frontier.df(spark, FRONTIER),
+        "seen": state.seen.df(spark, SEEN),
+        "host_state": state.host_state,
+        "schedule": s1,
+        "fetch_log": log1,
+        "salt_table": state.salts,
+        "seen_sketch": old_rows,
+    }
+    head = store.commit(
+        tables, state.batch_id, None, partition_by={"seen_sketch": ["bucket"]}
+    )
+    # the fixture must matter: read as url_hash-bucketed, the old rows
+    # miss seen keys
+    stored = dataclasses.replace(
+        ref, paths=(store.table_path(head, "seen_sketch"),)
+    )
+    assert not all(
+        r["_maybe"] for r in sketch_flag_maybe_seen(seen_keys, stored).collect()
+    )
+
+    resumed = resume(spark, store, config)
+    assert resumed.sketch.kind == kind
+    flags = sketch_flag_maybe_seen(seen_keys, resumed.sketch).collect()
+    assert len(flags) == n_seen and all(r["_maybe"] for r in flags)
+
+    _, golden, _ = crawl_round(spark, state, pk, config)
+    _, after, _ = crawl_round(spark, resumed, pk, config)
+    assert _ordering(after) == _ordering(golden)

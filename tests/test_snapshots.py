@@ -165,8 +165,9 @@ def test_commit_files_are_immutable(spark, store):
 
 def test_crash_before_manifest_link_resumes_previous_snapshot(spark, monkeypatch):
     """A commit that dies after its table writes but before the manifest
-    link leaves HEAD and the manifests untouched; resume lands on the
-    previous snapshot and the next round reproduces the uninterrupted run."""
+    link leaves HEAD and the manifests untouched and removes the data it
+    wrote; resume lands on the previous snapshot and the next round
+    reproduces the uninterrupted run."""
     import numpy as np
 
     from spiderspark import snapshots
@@ -204,6 +205,18 @@ def test_crash_before_manifest_link_resumes_previous_snapshot(spark, monkeypatch
 
     assert store.head() == head
     assert sorted(os.listdir(mdir)) == manifests
+    # the failed commit removed its own data directories: every snap…
+    # directory left is one a manifest lists
+    listed = {
+        meta["path"]
+        for f in manifests
+        for meta in store.manifest(int(f[:-5]))["tables"].values()
+    }
+    on_disk = {
+        os.path.relpath(d, store.root)
+        for d in glob.glob(os.path.join(store.root, "data", "*", "snap*"))
+    }
+    assert on_disk == listed
     st = resume(spark, store, cfg)
     assert st.snapshot_id == head
     assert st.batch_id == store.manifest(head)["batch_id"]
